@@ -2,9 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions._
+import graft.functions.ArrayMath
 
 /** SparkSessionExtensions entry point: installs graft's native functions
   * into any session at build time —
@@ -16,222 +15,14 @@ import graft.functions._
   * }}}
   *
   * making them usable from plain SQL (`SELECT graft_dot_product(a, b)`) in
-  * e.g. a Thrift server, not just through the Scala API. The runtime
-  * registration in [[graft.functions.ArrayMath.register]] remains for
-  * sessions graft does not construct.
+  * e.g. a Thrift server, not just through the Scala API. The extension and
+  * the runtime registration [[graft.functions.ArrayMath.register]] (for
+  * sessions built without it) both come from the one table
+  * [[graft.functions.ArrayMath.nativeFns]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[ArrayMath.type].getName, null, name, usage, "")
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier(ArrayMath.fnName),
-      info(ArrayMath.fnName, "_FUNC_(a, b) - codegen'd dot product of two array<double>"),
-      exprs => DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.eqCountName),
-      info(ArrayMath.eqCountName, "_FUNC_(a, b) - position-wise equality count of two array<bigint>"),
-      exprs => ArrayEqualCount(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.shingleName),
-      info(ArrayMath.shingleName, "_FUNC_(tokens, n) - 64-bit hashes of token n-grams"),
-      exprs => ShingleHashes(exprs(0), litInt(exprs(1)))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.minhashName),
-      info(ArrayMath.minhashName, "_FUNC_(hashes, k) - k-minima MinHash signature"),
-      exprs => MinHashSignature(exprs(0), litInt(exprs(1)))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.simhashName),
-      info(ArrayMath.simhashName, "_FUNC_(hashes) - 64-bit SimHash"),
-      exprs => SimHash64(exprs(0))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.nearestCentroidName),
-      info(ArrayMath.nearestCentroidName,
-        "_FUNC_(vec, matrix) - argmax centroid row id by dot product"),
-      exprs => NearestCentroidId(exprs(0), litMatrix(exprs(1)))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.topCentroidsName),
-      info(ArrayMath.topCentroidsName,
-        "_FUNC_(vec, matrix, nProbe) - nProbe best centroid row ids, best first"),
-      exprs => TopCentroidIds(exprs(0), litMatrix(exprs(1)), litInt(exprs(2)))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.sortedIntersectName),
-      info(ArrayMath.sortedIntersectName,
-        "_FUNC_(a, b) - |A ∩ B| of two sorted duplicate-free array<bigint>"),
-      exprs => SortedIntersectCount(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.textStatsName),
-      info(ArrayMath.textStatsName,
-        "_FUNC_(text) - one-pass text statistics struct"),
-      exprs => TextStats(exprs(0))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.nfcName),
-      info(ArrayMath.nfcName,
-        "_FUNC_(text) - Unicode NFC canonical normalization"),
-      exprs => NfcNormalize(exprs(0))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.imageMetaName),
-      info(ArrayMath.imageMetaName,
-        "_FUNC_(bytes) - PNG/JPEG header metadata struct, NULL if unparseable"),
-      exprs => ImageMeta(exprs(0))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.pngPixelStatsName),
-      info(ArrayMath.pngPixelStatsName,
-        "_FUNC_(bytes) - decoded-PNG pixel statistics struct, NULL outside scope"),
-      exprs => PngPixelStats(exprs(0))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.pngGradientName),
-      info(ArrayMath.pngGradientName,
-        "_FUNC_(w, h, r0, g0, b0) - fixture-side real PNG encoder"),
-      exprs => PngGradientBytes(exprs)))
-    e.injectFunction((FunctionIdentifier(ArrayMath.pngResizeName),
-      info(ArrayMath.pngResizeName,
-        "_FUNC_(bytes, out_w, out_h) - decoded-PNG nearest-neighbor resize struct"),
-      exprs => PngResizePixels(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.rgbStatsName),
-      info(ArrayMath.rgbStatsName,
-        "_FUNC_(pixels, channels) - per-channel integer sums over a packed buffer"),
-      exprs => RgbChannelStats(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.jpegPixelStatsName),
-      info(ArrayMath.jpegPixelStatsName,
-        "_FUNC_(bytes) - decoded-JPEG pixel statistics struct, NULL outside scope"),
-      exprs => JpegPixelStats(exprs(0))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.jpegGradientName),
-      info(ArrayMath.jpegGradientName,
-        "_FUNC_(w, h, r0, g0, b0) - fixture-side real JPEG encoder"),
-      exprs => JpegGradientBytes(exprs)))
-    e.injectFunction((FunctionIdentifier(ArrayMath.audioPcmName),
-      info(ArrayMath.audioPcmName,
-        "_FUNC_(bytes) - decoded-PCM amplitude statistics struct, NULL outside scope"),
-      exprs => AudioPcmStats(exprs(0))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.wavToneName),
-      info(ArrayMath.wavToneName,
-        "_FUNC_(channels, rate, bits, frames) - fixture-side tone-filled WAV encoder"),
-      exprs => WavToneBytes(exprs)))
-    e.injectFunction((FunctionIdentifier(ArrayMath.audioMetaName),
-      info(ArrayMath.audioMetaName,
-        "_FUNC_(bytes) - WAV header metadata struct, NULL if unparseable"),
-      exprs => AudioMeta(exprs(0))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.gifMetaName),
-      info(ArrayMath.gifMetaName,
-        "_FUNC_(bytes) - GIF frame-walk struct(width,height,n_frames,frames), NULL if malformed"),
-      exprs => GifMeta(exprs(0))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.gifAnimName),
-      info(ArrayMath.gifAnimName,
-        "_FUNC_(w, h, nFrames, seed) - fixture-side multi-frame GIF89a encoder"),
-      exprs => GifAnimBytes(exprs)))
-    e.injectFunction((FunctionIdentifier(ArrayMath.apngMetaName),
-      info(ArrayMath.apngMetaName,
-        "_FUNC_(bytes) - APNG frame-control struct(width,height,n_frames,n_plays,frames), NULL if malformed"),
-      exprs => ApngMeta(exprs(0))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.apngAnimName),
-      info(ArrayMath.apngAnimName,
-        "_FUNC_(w, h, nFrames, seed) - fixture-side APNG encoder"),
-      exprs => ApngAnimBytes(exprs)))
-    e.injectFunction((FunctionIdentifier(ArrayMath.int8DotName),
-      info(ArrayMath.int8DotName,
-        "_FUNC_(codes, vec) - dot(array<tinyint>, array<double>)"),
-      exprs => Int8DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.int8StatsName),
-      info(ArrayMath.int8StatsName,
-        "_FUNC_(vec) - one-pass int8 quantization struct(scale, code_sum, max_abs_err, codes)"),
-      exprs => Int8Stats(exprs(0))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.pqEncodeName),
-      info(ArrayMath.pqEncodeName,
-        "_FUNC_(vec, codebooks) - m-byte product-quantization code"),
-      exprs => PqEncode(exprs(0), litCube(exprs(1)))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.pqLutName),
-      info(ArrayMath.pqLutName,
-        "_FUNC_(query, codebooks) - flattened ADC lookup table"),
-      exprs => PqLut(exprs(0), litCube(exprs(1)))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.pqAdcName),
-      info(ArrayMath.pqAdcName,
-        "_FUNC_(code, lut, kPerSub) - ADC score sum over subspaces"),
-      exprs => PqAdcScore(exprs(0), exprs(1), litInt(exprs(2)))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.bloomName),
-      info(ArrayMath.bloomName,
-        "_FUNC_(hash, bits) - Bloom-filter membership probe of a bigint hash"),
-      exprs => BloomMightContain(exprs(0), litBinary(exprs(1)))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.matVecName),
-      info(ArrayMath.matVecName,
-        "_FUNC_(vec, matrix, offset) - affine map matrix*vec - offset"),
-      exprs => MatVecAffine(exprs(0), litMatrix(exprs(1)), litVector(exprs(2)))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.bpeMergeName),
-      info(ArrayMath.bpeMergeName,
-        "_FUNC_(syms, l, r) - fuse adjacent (l, r) symbol pairs left to right"),
-      exprs => BpeMergePair(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.bpeEncodeName),
-      info(ArrayMath.bpeEncodeName,
-        "_FUNC_(words, merges) - greedy BPE encode against 'l r' merge list"),
-      exprs => BpeEncode(exprs(0), litStringArray(exprs(1)))))
-    e.injectFunction((FunctionIdentifier(ArrayMath.boundedKeyName),
-      info(ArrayMath.boundedKeyName,
-        "_FUNC_() - non-foldable constant partition key for bounded window frames"),
-      _ => BoundedKey()))
-    e.injectFunction((FunctionIdentifier(ArrayMath.jaroWinklerName),
-      info(ArrayMath.jaroWinklerName,
-        "_FUNC_(a, b) - Jaro-Winkler similarity in [0,1], 0.7 boost threshold"),
-      exprs => JaroWinklerSim(exprs(0), exprs(1))))
-  }
-
-  private def litVector(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Array[Double] = {
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    e.dataType match {
-      case ArrayType(DoubleType, _) if e.foldable =>
-        e.eval(org.apache.spark.sql.catalyst.InternalRow.empty)
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toDoubleArray()
-      case _ => throw new IllegalArgumentException(
-        "offset must be a foldable array<double> literal")
-    }
-  }
-
-  private def litStringArray(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Array[String] = {
-    import org.apache.spark.sql.types.{ArrayType, StringType}
-    e.dataType match {
-      case ArrayType(StringType, _) if e.foldable =>
-        e.eval(org.apache.spark.sql.catalyst.InternalRow.empty)
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toObjectArray(StringType)
-          .map(s => if (s == null) null else s.toString)
-      case _ => throw new IllegalArgumentException(
-        "merge list must be a foldable array<string> literal")
-    }
-  }
-
-  private def litBinary(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Array[Byte] = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Array[Byte], _) => v
-    case other => throw new IllegalArgumentException(
-      s"bloom bits must be a binary literal, got $other")
-  }
-
-  private def litMatrix(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Array[Array[Double]] = {
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    e.dataType match {
-      case ArrayType(ArrayType(DoubleType, _), _) if e.foldable =>
-        e.eval(org.apache.spark.sql.catalyst.InternalRow.empty)
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toObjectArray(ArrayType(DoubleType))
-          .map(_.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray())
-      case _ => throw new IllegalArgumentException(
-        "centroid matrix must be a foldable array<array<double>> literal")
-    }
-  }
-
-  private def litCube(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Array[Array[Array[Double]]] = {
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    e.dataType match {
-      case ArrayType(ArrayType(ArrayType(DoubleType, _), _), _) if e.foldable =>
-        e.eval(org.apache.spark.sql.catalyst.InternalRow.empty)
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toObjectArray(ArrayType(ArrayType(DoubleType)))
-          .map(_.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-            .toObjectArray(ArrayType(DoubleType))
-            .map(_.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-              .toDoubleArray()))
-      case _ => throw new IllegalArgumentException(
-        "PQ codebooks must be a foldable array<array<array<double>>> literal")
-    }
-  }
-
-  private def litInt(e: org.apache.spark.sql.catalyst.expressions.Expression): Int =
-    e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"argument must be an integer literal, got $other")
+  override def apply(e: SparkSessionExtensions): Unit =
+    ArrayMath.nativeFns.foreach { f =>
+      e.injectFunction((FunctionIdentifier(f.name), f.info, f.builder))
     }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** CLI job runner — the Spark-native restatement of the reference's
@@ -14,6 +16,10 @@ import org.apache.spark.sql.SparkSession
   */
 object JobRunner {
 
+  /** The program's one SparkSession builder: every main starts here, with
+    * the native functions registered. A main that needs another log level
+    * or SQL conf sets it on the returned session.
+    */
   def session(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val s = SparkSession.builder()
@@ -43,14 +49,17 @@ object JobRunner {
   }
 
   /** Retry wrapper (reference: 2 retries / 5 min; delay configurable so
-    * tests and local runs don't sleep).
+    * tests and local runs don't sleep). Only transient failures are
+    * retried: a [[etl.Jobs.GateFailure]], an interrupt or a fatal error
+    * propagates from the attempt that raised it.
     */
   def withRetries[T](retries: Int = 2, delayMs: Long = 0L)(body: => T): T = {
     var attempt = 0
     while (true) {
       try return body
       catch {
-        case e: Throwable if attempt < retries =>
+        case e: etl.Jobs.GateFailure => throw e
+        case NonFatal(e) if attempt < retries =>
           attempt += 1
           System.err.println(s"[graft] attempt $attempt failed: ${e.getMessage}; retrying")
           if (delayMs > 0) Thread.sleep(delayMs)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-hash stability audit: writes every lane's NORMALIZED analyzed-plan
   * string — the exact input of [[Bench.normalizedPlanHash]] — to
   * `outDir/<name>.txt`. Run it twice (two JVMs) and diff the directories:
@@ -20,16 +18,7 @@ object PlanAudit {
     val sfDir = args(0)
     val outDir = java.nio.file.Paths.get(args(1))
     java.nio.file.Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plan-audit")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = JobRunner.session("graft-plan-audit")
     // TWICE mode: build every lane a first time (advancing all global
     // counters — lambda variable names, cte/subquery ids, view tags),
     // then dump the SECOND build. Diffing a TWICE run against a plain

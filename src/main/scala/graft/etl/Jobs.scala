@@ -19,6 +19,12 @@ object Jobs {
       recordCount: Long,
       status: String)
 
+  /** A gate turned the run down: file checks, validation or the post-load
+    * check. The same input fails the same way again, so
+    * [[graft.JobRunner.withRetries]] does not retry it.
+    */
+  final class GateFailure(msg: String) extends IllegalStateException(msg)
+
   /** Path A — the validated Beam-path pipeline
     * (`/root/reference/dataflow.py:486` chain + `dataflow_transform.py`):
     * validate → clean/type → write main table (truncate) → append audit row,
@@ -30,7 +36,7 @@ object Jobs {
     // metadata-only, replaces the reference's whole-file download checks
     val fileGate = FileChecks.check(spark, inputCsv)
     if (fileGate.failed)
-      throw new IllegalStateException(
+      throw new GateFailure(
         s"file checks failed for $inputCsv: " +
           fileGate.files.filter(f => !f.exists || f.empty || !f.utf8Ok)
             .map(_.path).mkString(","))
@@ -39,7 +45,7 @@ object Jobs {
     val raw = Sources.csv(spark, inputCsv, Schemas.covidRaw)
     val report = Validation.run(raw, Validation.covidCsvRules)
     if (report.failed)
-      throw new IllegalStateException(
+      throw new GateFailure(
         s"validation failed for $inputCsv: total=${report.totalRecords} " +
           report.results.filter(_.violations > 0).map(r => s"${r.name}=${r.violations}").mkString(","))
 
@@ -82,8 +88,8 @@ object Jobs {
 
     // post-load assertion — the imported-but-unused BigQueryCheckOperator
     // intent (airflow.py:7; SURVEY.md §2.8)
-    require(Sinks.check(spark, s"SELECT COUNT(*) > 0 FROM $db.final_covid_data"),
-      "post-load check failed: final table is empty")
+    if (!Sinks.check(spark, s"SELECT COUNT(*) > 0 FROM $db.final_covid_data"))
+      throw new GateFailure("post-load check failed: final table is empty")
     spark.table(s"$db.final_covid_data").count()
   }
 }

@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
@@ -365,133 +366,174 @@ object ArrayMath {
         s"$what must be a foldable array<array<double>> literal, got $e")
     }
 
-  /** Idempotent per-session registration (Spark 4's Column API has no
-    * public Expression wrapper, so the expressions are exposed through the
-    * function registry + `call_function`).
+  /** One native function: its SQL name, the `DESCRIBE FUNCTION` usage line
+    * and the builder from call arguments to the expression.
+    */
+  final case class NativeFn(name: String, usage: String,
+                            builder: Seq[Expression] => Expression) {
+    def info: ExpressionInfo =
+      new ExpressionInfo(classOf[ArrayMath.type].getName, null, name, usage,
+        "", "", "", "", "", "", "scala_udf")
+  }
+
+  /** The one table of graft's native functions. [[register]] binds it into
+    * a running session and [[graft.GraftExtensions]] injects it into a
+    * session under construction, so the Scala API and plain SQL see the
+    * same functions.
+    */
+  val nativeFns: Seq[NativeFn] = Seq(
+    NativeFn(fnName, "_FUNC_(a, b) - codegen'd dot product of two array<double>",
+      e => DotProduct(e(0), e(1))),
+    NativeFn(eqCountName,
+      "_FUNC_(a, b) - position-wise equality count of two array<bigint>",
+      e => ArrayEqualCount(e(0), e(1))),
+    NativeFn(sortedIntersectName,
+      "_FUNC_(a, b) - |A ∩ B| of two sorted duplicate-free array<bigint>",
+      e => SortedIntersectCount(e(0), e(1))),
+    NativeFn(shingleName, "_FUNC_(tokens, n) - 64-bit hashes of token n-grams",
+      e => ShingleHashes(e(0), intLit(e(1), "shingle size"))),
+    NativeFn(minhashName, "_FUNC_(hashes, k) - k-minima MinHash signature",
+      e => MinHashSignature(e(0), intLit(e(1), "numHashes"))),
+    NativeFn(simhashName, "_FUNC_(hashes) - 64-bit SimHash",
+      e => SimHash64(e(0))),
+    NativeFn(textStatsName, "_FUNC_(text) - one-pass text statistics struct",
+      e => TextStats(e(0))),
+    NativeFn(nearestCentroidName,
+      "_FUNC_(vec, matrix) - argmax centroid row id by dot product",
+      e => NearestCentroidId(e(0), matrixLit(e(1), "centroid matrix"))),
+    NativeFn(topCentroidsName,
+      "_FUNC_(vec, matrix, nProbe) - nProbe best centroid row ids, best first",
+      e => TopCentroidIds(e(0), matrixLit(e(1), "centroid matrix"),
+        intLit(e(2), "nProbe"))),
+    NativeFn(imageMetaName,
+      "_FUNC_(bytes) - PNG/JPEG header metadata struct, NULL if unparseable",
+      e => ImageMeta(e(0))),
+    NativeFn(pngPixelStatsName,
+      "_FUNC_(bytes) - decoded-PNG pixel statistics struct, NULL outside scope",
+      e => PngPixelStats(e(0))),
+    NativeFn(pngGradientName,
+      "_FUNC_(w, h, r0, g0, b0) - fixture-side real PNG encoder",
+      e => PngGradientBytes(e)),
+    NativeFn(pngResizeName,
+      "_FUNC_(bytes, out_w, out_h) - decoded-PNG nearest-neighbor resize struct",
+      e => PngResizePixels(e(0), e(1), e(2))),
+    NativeFn(rgbStatsName,
+      "_FUNC_(pixels, channels) - per-channel integer sums over a packed buffer",
+      e => RgbChannelStats(e(0), e(1))),
+    NativeFn(jpegPixelStatsName,
+      "_FUNC_(bytes) - decoded-JPEG pixel statistics struct, NULL outside scope",
+      e => JpegPixelStats(e(0))),
+    NativeFn(jpegGradientName,
+      "_FUNC_(w, h, r0, g0, b0) - fixture-side real JPEG encoder",
+      e => JpegGradientBytes(e)),
+    NativeFn(audioPcmName,
+      "_FUNC_(bytes) - decoded-PCM amplitude statistics struct, NULL outside scope",
+      e => AudioPcmStats(e(0))),
+    NativeFn(wavToneName,
+      "_FUNC_(channels, rate, bits, frames) - fixture-side tone-filled WAV encoder",
+      e => WavToneBytes(e)),
+    NativeFn(audioMetaName,
+      "_FUNC_(bytes) - WAV header metadata struct, NULL if unparseable",
+      e => AudioMeta(e(0))),
+    NativeFn(gifMetaName,
+      "_FUNC_(bytes) - GIF frame-walk struct(width,height,n_frames,frames), NULL if malformed",
+      e => GifMeta(e(0))),
+    NativeFn(gifAnimName,
+      "_FUNC_(w, h, nFrames, seed) - fixture-side multi-frame GIF89a encoder",
+      e => GifAnimBytes(e)),
+    NativeFn(apngMetaName,
+      "_FUNC_(bytes) - APNG frame-control struct(width,height,n_frames,n_plays,frames), NULL if malformed",
+      e => ApngMeta(e(0))),
+    NativeFn(apngAnimName,
+      "_FUNC_(w, h, nFrames, seed) - fixture-side APNG encoder",
+      e => ApngAnimBytes(e)),
+    NativeFn(mp4MetaName,
+      "_FUNC_(bytes) - ISO-BMFF box-walk struct(major_brand,timescale,duration,n_tracks,tracks), NULL if malformed",
+      e => Mp4Meta(e(0))),
+    NativeFn(mp4BytesName,
+      "_FUNC_(w, h, nSamples, seed) - fixture-side single-track MP4 encoder",
+      e => Mp4Bytes(e)),
+    NativeFn(dhashName,
+      "_FUNC_(bytes) - 64-bit difference hash of decoded pixels, NULL outside scope",
+      e => DHash64(e(0))),
+    NativeFn(ahashName,
+      "_FUNC_(bytes) - 64-bit average hash of decoded pixels, NULL outside scope",
+      e => AHash64(e(0))),
+    NativeFn(lcsLenName,
+      "_FUNC_(a, b) - longest-common-subsequence length of two array<string>",
+      e => LcsLen(e(0), e(1))),
+    NativeFn(warcParseName,
+      "_FUNC_(bytes) - WARC 1.x record walk to array<struct>, NULL if malformed",
+      e => WarcParse(e(0))),
+    NativeFn(warcRecordName,
+      "_FUNC_(uri, date, payload) - one byte-exact WET conversion record",
+      e => WarcRecordBytes(e(0), e(1), e(2))),
+    NativeFn(audioFpName,
+      "_FUNC_(bytes) - 64-bit energy-difference fingerprint of decoded PCM, NULL outside scope",
+      e => AudioFingerprint64(e(0))),
+    NativeFn(int8DotName,
+      "_FUNC_(codes, vec) - dot(array<tinyint>, array<double>)",
+      e => Int8DotProduct(e(0), e(1))),
+    NativeFn(int8StatsName,
+      "_FUNC_(vec) - one-pass int8 quantization struct(scale, code_sum, max_abs_err, codes)",
+      e => Int8Stats(e(0))),
+    NativeFn(nfcName, "_FUNC_(text) - Unicode NFC canonical normalization",
+      e => NfcNormalize(e(0))),
+    NativeFn(pqEncodeName,
+      "_FUNC_(vec, codebooks) - m-byte product-quantization code",
+      e => PqEncode(e(0), cubeLit(e(1), "PQ codebooks"))),
+    NativeFn(pqLutName, "_FUNC_(query, codebooks) - flattened ADC lookup table",
+      e => PqLut(e(0), cubeLit(e(1), "PQ codebooks"))),
+    NativeFn(pqAdcName,
+      "_FUNC_(code, lut, kPerSub) - ADC score sum over subspaces",
+      e => PqAdcScore(e(0), e(1), intLit(e(2), "kPerSub"))),
+    NativeFn(bloomName,
+      "_FUNC_(hash, bits) - Bloom-filter membership probe of a bigint hash",
+      e => BloomMightContain(e(0), binaryLit(e(1), "bloom bits"))),
+    NativeFn(matVecName,
+      "_FUNC_(vec, matrix, offset) - affine map matrix*vec - offset",
+      e => MatVecAffine(e(0), matrixLit(e(1), "projection matrix"),
+        vectorLit(e(2), "projection offset"))),
+    NativeFn(bpeMergeName,
+      "_FUNC_(syms, l, r) - fuse adjacent (l, r) symbol pairs left to right",
+      e => BpeMergePair(e(0), e(1), e(2))),
+    NativeFn(bpeEncodeName,
+      "_FUNC_(words, merges) - greedy BPE encode against 'l r' merge list",
+      e => BpeEncode(e(0), stringArrayLit(e(1), "merge list"))),
+    NativeFn(unigramEncodeName,
+      "_FUNC_(words, vocab) - Viterbi unigram-LM encode against 'piece score' vocabulary",
+      e => UnigramEncode(e(0), stringArrayLit(e(1), "unigram vocabulary"))),
+    NativeFn(jaroWinklerName,
+      "_FUNC_(a, b) - Jaro-Winkler similarity in [0,1], 0.7 boost threshold",
+      e => JaroWinklerSim(e(0), e(1))),
+    NativeFn(boundedKeyName,
+      "_FUNC_() - non-foldable constant partition key for bounded window frames",
+      _ => BoundedKey()),
+    NativeFn(chrfStatsName,
+      "_FUNC_(cand, ref, maxN) - per-order chrF gram counts array<struct(m, tc, tr)>",
+      e => ChrfGramStats(e(0), e(1), intLit(e(2), "maxN"))),
+    NativeFn(bleuStatsName,
+      "_FUNC_(cand, ref) - per-order BLEU-4 clipped-match counts array<struct(m, t)>",
+      e => BleuGramStats(e(0), e(1))),
+    NativeFn(winnowName,
+      "_FUNC_(text, k, w) - winnowing fingerprints of a document",
+      e => WinnowFingerprints(e(0), intLit(e(1), "k"), intLit(e(2), "w"))))
+
+  /** Idempotent per-session registration of [[nativeFns]] (Spark 4's
+    * Column API has no public Expression wrapper, so the expressions are
+    * exposed through the function registry + `call_function`). Every entry
+    * point (Tables, Sql, JobRunner) calls it defensively. The skip is PER
+    * NAME, not all-or-nothing, so a long-lived session built before a
+    * function was added still picks up the new binding (and no
+    * SimpleFunctionRegistry "replaced" WARN fires for the ones already
+    * bound).
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    // Idempotent per session: every entry point (Tables, Sql, JobRunner)
-    // calls register defensively. The skip is PER NAME, not all-or-nothing,
-    // so a long-lived session built before a function was added still picks
-    // up the new binding (and no SimpleFunctionRegistry "replaced" WARN
-    // fires for the ones already bound).
-    def bind(name: String, builder: Seq[Expression] => Expression): Unit =
-      if (!reg.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
-    bind(
-      fnName, exprs => DotProduct(exprs(0), exprs(1)))
-    bind(
-      eqCountName, exprs => ArrayEqualCount(exprs(0), exprs(1)))
-    bind(
-      sortedIntersectName, exprs => SortedIntersectCount(exprs(0), exprs(1)))
-    bind(
-      shingleName, exprs => ShingleHashes(exprs(0), intLit(exprs(1), "shingle size")))
-    bind(
-      minhashName, exprs => MinHashSignature(exprs(0), intLit(exprs(1), "numHashes")))
-    bind(
-      simhashName, exprs => SimHash64(exprs(0)))
-    bind(
-      textStatsName, exprs => TextStats(exprs(0)))
-    bind(
-      nearestCentroidName,
-      exprs => NearestCentroidId(exprs(0), matrixLit(exprs(1), "centroid matrix")))
-    bind(
-      topCentroidsName,
-      exprs => TopCentroidIds(exprs(0), matrixLit(exprs(1), "centroid matrix"),
-        intLit(exprs(2), "nProbe")))
-    bind(
-      imageMetaName, exprs => ImageMeta(exprs(0)))
-    bind(
-      pngPixelStatsName, exprs => PngPixelStats(exprs(0)))
-    bind(
-      pngGradientName, exprs => PngGradientBytes(exprs))
-    bind(
-      pngResizeName,
-      exprs => PngResizePixels(exprs(0), exprs(1), exprs(2)))
-    bind(
-      rgbStatsName, exprs => RgbChannelStats(exprs(0), exprs(1)))
-    bind(
-      jpegPixelStatsName, exprs => JpegPixelStats(exprs(0)))
-    bind(
-      jpegGradientName, exprs => JpegGradientBytes(exprs))
-    bind(
-      audioPcmName, exprs => AudioPcmStats(exprs(0)))
-    bind(
-      wavToneName, exprs => WavToneBytes(exprs))
-    bind(
-      audioMetaName, exprs => AudioMeta(exprs(0)))
-    bind(
-      gifMetaName, exprs => GifMeta(exprs(0)))
-    bind(
-      gifAnimName, exprs => GifAnimBytes(exprs))
-    bind(
-      apngMetaName, exprs => ApngMeta(exprs(0)))
-    bind(
-      apngAnimName, exprs => ApngAnimBytes(exprs))
-    bind(
-      mp4MetaName, exprs => Mp4Meta(exprs(0)))
-    bind(
-      mp4BytesName, exprs => Mp4Bytes(exprs))
-    bind(
-      dhashName, exprs => DHash64(exprs(0)))
-    bind(
-      ahashName, exprs => AHash64(exprs(0)))
-    bind(
-      lcsLenName, exprs => LcsLen(exprs(0), exprs(1)))
-    bind(
-      warcParseName, exprs => WarcParse(exprs(0)))
-    bind(
-      warcRecordName,
-      exprs => WarcRecordBytes(exprs(0), exprs(1), exprs(2)))
-    bind(
-      audioFpName, exprs => AudioFingerprint64(exprs(0)))
-    bind(
-      int8DotName, exprs => Int8DotProduct(exprs(0), exprs(1)))
-    bind(
-      int8StatsName, exprs => Int8Stats(exprs(0)))
-    bind(
-      nfcName, exprs => NfcNormalize(exprs(0)))
-    bind(
-      pqEncodeName,
-      exprs => PqEncode(exprs(0), cubeLit(exprs(1), "PQ codebooks")))
-    bind(
-      pqLutName,
-      exprs => PqLut(exprs(0), cubeLit(exprs(1), "PQ codebooks")))
-    bind(
-      pqAdcName,
-      exprs => PqAdcScore(exprs(0), exprs(1), intLit(exprs(2), "kPerSub")))
-    bind(
-      bloomName,
-      exprs => BloomMightContain(exprs(0), binaryLit(exprs(1), "bloom bits")))
-    bind(
-      matVecName,
-      exprs => MatVecAffine(exprs(0), matrixLit(exprs(1), "projection matrix"),
-        vectorLit(exprs(2), "projection offset")))
-    bind(
-      bpeMergeName,
-      exprs => BpeMergePair(exprs(0), exprs(1), exprs(2)))
-    bind(
-      bpeEncodeName,
-      exprs => BpeEncode(exprs(0), stringArrayLit(exprs(1), "merge list")))
-    bind(
-      unigramEncodeName,
-      exprs => UnigramEncode(exprs(0),
-        stringArrayLit(exprs(1), "unigram vocabulary")))
-    bind(
-      jaroWinklerName, exprs => JaroWinklerSim(exprs(0), exprs(1)))
-    bind(
-      boundedKeyName, _ => BoundedKey())
-    bind(
-      chrfStatsName,
-      exprs => ChrfGramStats(exprs(0), exprs(1), intLit(exprs(2), "maxN")))
-    bind(
-      bleuStatsName, exprs => BleuGramStats(exprs(0), exprs(1)))
-    bind(
-      winnowName,
-      exprs => WinnowFingerprints(exprs(0), intLit(exprs(1), "k"),
-        intLit(exprs(2), "w")))
+    nativeFns.foreach { f =>
+      val id = FunctionIdentifier(f.name)
+      if (!reg.functionExists(id)) reg.registerFunction(id, f.info, f.builder)
+    }
   }
 
   /** Non-foldable constant partition key for DOCUMENTED-BOUNDED window

@@ -73,25 +73,21 @@ object ChrfKernel {
     new GenericArrayData(out)
   }
 
-  /** Byte offset of every code point boundary, plus the end sentinel —
-    * the same character positions SQL `substring` addresses. Shared
-    * with the other per-row text kernels ([[WinnowKernel]]).
+  /** Byte offset of every character boundary, plus the end sentinel —
+    * the same character positions SQL `substring` and `length` address.
+    * Characters are stepped the way `UTF8String` steps them: by the
+    * length its first byte announces, clamped at the end of the array,
+    * so malformed UTF-8 counts the same here as in Spark. Shared with
+    * the other per-row text kernels ([[WinnowKernel]]).
     */
   private[functions] def codePointOffsets(b: Array[Byte]): Array[Int] = {
-    // count first (UTF-8 continuation bytes are 10xxxxxx)
     var chars = 0
     var i = 0
-    while (i < b.length) {
-      if ((b(i) & 0xC0) != 0x80) chars += 1
-      i += 1
-    }
+    while (i < b.length) { chars += 1; i += UTF8String.numBytesForFirstByte(b(i)) }
     val off = new Array[Int](chars + 1)
     var k = 0
     i = 0
-    while (i < b.length) {
-      if ((b(i) & 0xC0) != 0x80) { off(k) = i; k += 1 }
-      i += 1
-    }
+    while (k < chars) { off(k) = i; k += 1; i += UTF8String.numBytesForFirstByte(b(i)) }
     off(chars) = b.length
     off
   }

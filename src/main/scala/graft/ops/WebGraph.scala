@@ -2475,7 +2475,7 @@ object WebGraph {
     * lane (guide §1.2: fix the distributed algorithm first).
     */
   private def shortcutEdges(e: DataFrame, k: Int): DataFrame = {
-    val h = md5(concat(col("esrc"), lit(" "), col("edst")))
+    val h = md5(concat(col("esrc"), lit("\u0000"), col("edst")))
     val wIn = org.apache.spark.sql.expressions.Window
       .partitionBy("edst").orderBy(h, col("esrc"))
     val wOut = org.apache.spark.sql.expressions.Window

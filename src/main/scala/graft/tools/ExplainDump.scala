@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Judge-artifact dumper: writes `.explain("formatted")` output for the
   * named lanes (or all) to `outDir/<name>.txt` — the plan evidence the
   * optimization rounds commit under `plans/r<N>/`. Measurement tooling
@@ -17,16 +15,7 @@ object ExplainDump {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet)
       else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-explain-dump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.JobRunner.session("graft-explain-dump")
     var nFail = 0
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))

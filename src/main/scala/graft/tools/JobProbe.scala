@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement main: run named lanes with a listener that counts jobs,
   * stages and tasks and sums their wall/CPU components — the
@@ -20,18 +19,10 @@ object JobProbe {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-jobprobe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("PROBE_CACHED_AQE", "false"))
-      .getOrCreate()
+    val spark = graft.JobRunner.session("graft-jobprobe")
     spark.sparkContext.setLogLevel("ERROR")
+    spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+      sys.env.getOrElse("PROBE_CACHED_AQE", "false"))
 
     object L extends SparkListener {
       val jobs = new java.util.concurrent.atomic.AtomicInteger

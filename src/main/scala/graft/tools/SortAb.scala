@@ -22,15 +22,7 @@ object SortAb {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 2) args(2).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-sortab")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.JobRunner.session("graft-sortab")
     spark.sparkContext.setLogLevel("ERROR")
     val cs = spark.asInstanceOf[CSparkSession]
 

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -163,5 +165,77 @@ class ArrayMathSpec extends AnyFunSuite {
     ArrayMath.register(spark)
     assert(reg.functionExists(fid),
       "register must bind missing names even when others already exist")
+  }
+
+  /** A NEW session built with [[GraftExtensions]] over the shared
+    * SparkContext. getOrCreate returns the active session (ignoring
+    * withExtensions), so active/default are cleared first to force a new
+    * session whose state is built from the extensions, then restored.
+    */
+  private lazy val extSpark: SparkSession = {
+    val base = spark // ensure the context exists
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try SparkSession.builder().master(base.sparkContext.master)
+      .appName("graft-ext-test")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    finally {
+      SparkSession.setActiveSession(base)
+      SparkSession.setDefaultSession(base)
+    }
+  }
+
+  private def graftFunctionNames(s: SparkSession): Set[String] =
+    s.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_")).toSet
+
+  test("GraftExtensions and register install the same native-function table") {
+    val table = ArrayMath.nativeFns.map(_.name)
+    assert(table.distinct.size == table.size, "a name appears twice in the table")
+    val runtime = spark.newSession()
+    ArrayMath.register(runtime)
+    assert(graftFunctionNames(runtime) == table.toSet)
+    assert(extSpark ne spark)
+    assert(graftFunctionNames(extSpark) == table.toSet)
+    val reg = extSpark.sessionState.functionRegistry
+    for (f <- ArrayMath.nativeFns) {
+      assert(reg.functionExists(FunctionIdentifier(f.name)), f.name)
+      val usage = extSpark.sql(s"DESCRIBE FUNCTION ${f.name}").collect()
+        .map(_.getString(0)).find(_.startsWith("Usage:"))
+      assert(usage.exists(_.contains(f.usage.replace("_FUNC_", f.name))), f.name)
+    }
+    val r = extSpark.sql(
+      "SELECT graft_dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d, " +
+        "graft_simhash64(graft_shingle_hashes(array('a','b','c'), 1)) AS sh, " +
+        "graft_lcs_len(array('a','b','c'), array('a','c')) AS lcs, " +
+        "graft_bleu_gram_stats(array('a','b'), array('a','b'))[1].m AS m2")
+      .head()
+    assert(r.getDouble(0) == 11.0)
+    assert(r.getLong(1) != 0L)
+    assert(r.getInt(2) == 2)
+    assert(r.getLong(3) == 1L)
+    // affine mat-vec and BPE from plain SQL
+    val r2 = extSpark.sql(
+      "SELECT graft_mat_vec_affine(array(1.0d, 2.0d), " +
+        "array(array(1.0d, 1.0d), array(0.0d, 3.0d)), array(0.0d, 1.0d)) AS mv, " +
+        "graft_bpe_encode(array('hug'), array('u g', 'h ug')) AS toks, " +
+        "graft_bpe_merge_pair(array('h','u','g'), 'u', 'g') AS merged")
+      .head()
+    assert(r2.getSeq[Double](0).toList == List(3.0, 5.0))
+    assert(r2.getSeq[String](1).toList == List("hug"))
+    assert(r2.getSeq[String](2).toList == List("h", "ug"))
+  }
+
+  test("chrF counts characters like Spark's length on malformed UTF-8") {
+    // a stray continuation byte, a lead byte whose continuation bytes are
+    // missing, and a truncated sequence at the end of the string
+    for (hex <- Seq("806162", "61E26263", "78C3")) {
+      val r = extSpark.sql(
+        "SELECT graft_chrf_gram_stats(s, s, 1)[0].tc, length(s) " +
+          s"FROM (SELECT cast(X'$hex' AS STRING) AS s)").head()
+      assert(r.getLong(0) == r.getInt(1).toLong, s"X'$hex'")
+    }
   }
 }

@@ -179,6 +179,37 @@ class EtlSpec extends AnyFunSuite {
     assert(math.abs(row.getDouble(0) - row.getDouble(1)) < 1e-6)
   }
 
+  test("withRetries: a gate failure runs once") {
+    val csv = Files.createTempDirectory("graft-retry").resolve("header_only.csv")
+    Files.writeString(csv, "entity,Day,total_confirmed_deaths\n")
+    var calls = 0
+    intercept[Jobs.GateFailure] {
+      JobRunner.withRetries() {
+        calls += 1
+        Jobs.covidPipeline(spark, csv.toString, "retry_table", "retry_audit")
+      }
+    }
+    assert(calls == 1)
+  }
+
+  test("withRetries: an interrupt runs once") {
+    var calls = 0
+    intercept[InterruptedException] {
+      JobRunner.withRetries() { calls += 1; throw new InterruptedException("stop") }
+    }
+    assert(calls == 1)
+  }
+
+  test("withRetries: a transient IOException is retried, then succeeds") {
+    var calls = 0
+    val r = JobRunner.withRetries() {
+      calls += 1
+      if (calls == 1) throw new java.io.IOException("transient")
+      42
+    }
+    assert(r == 42 && calls == 2)
+  }
+
   test("post-load check operator semantics") {
     assert(Sinks.check(spark, "SELECT 1"))
     assert(!Sinks.check(spark, "SELECT COUNT(*) FROM range(10) WHERE id > 100"))

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.FileChecks
@@ -86,41 +85,5 @@ class FileChecksSpec extends AnyFunSuite {
     }
     // poke at t=0..240s all miss; at t=300s the timeout gate fires: 6 pokes
     assert(e.getMessage.contains("6 pokes"))
-  }
-
-  test("GraftExtensions makes native functions available in plain SQL") {
-    val base = SparkTestSession.spark // ensure context exists
-    // getOrCreate returns the active session (ignoring withExtensions), so
-    // clear active/default first to force a NEW session whose state is
-    // built from the extensions, then restore the shared one.
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder().master(base.sparkContext.master)
-        .appName("graft-ext-test")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      assert(s2 ne base)
-      val r = s2.sql(
-        "SELECT graft_dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d, " +
-          "graft_simhash64(graft_shingle_hashes(array('a','b','c'), 1)) AS sh")
-        .head()
-      assert(r.getDouble(0) == 11.0)
-      assert(r.getLong(1) != 0L)
-      // round-6 injections: affine mat-vec and BPE from plain SQL
-      val r2 = s2.sql(
-        "SELECT graft_mat_vec_affine(array(1.0d, 2.0d), " +
-          "array(array(1.0d, 1.0d), array(0.0d, 3.0d)), array(0.0d, 1.0d)) AS mv, " +
-          "graft_bpe_encode(array('hug'), array('u g', 'h ug')) AS toks, " +
-          "graft_bpe_merge_pair(array('h','u','g'), 'u', 'g') AS merged")
-        .head()
-      assert(r2.getSeq[Double](0).toList == List(3.0, 5.0))
-      assert(r2.getSeq[String](1).toList == List("hug"))
-      assert(r2.getSeq[String](2).toList == List("h", "ug"))
-    } finally {
-      SparkSession.setActiveSession(base)
-      SparkSession.setDefaultSession(base)
-    }
   }
 }
