@@ -166,6 +166,20 @@ object Bench {
   private[graft] def confirms(cur: Double, prev: Double): Boolean =
     prev > 0 && cur >= 0 && cur <= prev * ConfirmRatio + ConfirmAbsSec
 
+  /** A lane's next low-water pin from this run's min-of-reps `cur` (< 0
+    * when no rep succeeded) and the previous pin. While the lane's plan
+    * is unchanged the pin only ratchets down, and a failed/timed-out run
+    * carries it forward; a changed plan drops it, since a rewritten lane
+    * may be legitimately slower and a stale pin would fail every
+    * fast-tier confirm after it.
+    */
+  private[graft] def nextPin(cur: Double, prevPin: Option[Double],
+                             samePlan: Boolean): Double = {
+    val carried = prevPin.filter(_ => samePlan)
+    if (cur >= 0) math.min(cur, carried.getOrElse(cur))
+    else carried.getOrElse(cur)
+  }
+
   /** Plan-identity hash for the touched-query detector: expression ids
     * (#123), object addresses and the SF dir are run-varying noise and
     * normalized away; everything else (operators, columns, literals,
@@ -434,13 +448,9 @@ object Bench {
       while (extra < repinReps && !timedOut && looksRegressed) {
         runs += { val r = runNoop(n); (r._1, r._2) }; extra += 1
       }
-      // REPORTED VALUE = THIS RUN'S MIN-OF-REPS, unconditionally (r20
-      // verdict #1). The accumulated low-water mark goes to the separate
-      // `pins` diagnostic: for an unchanged lane it can only ratchet
-      // down; a failed/timed-out rep carries the previous pin forward.
-      val pin =
-        if (curMin >= 0) math.min(curMin, prevPin.getOrElse(curMin))
-        else prevPin.getOrElse(curMin)
+      // REPORTED VALUE = THIS RUN'S MIN-OF-REPS, unconditionally. The
+      // accumulated low-water mark goes to the separate `pins` diagnostic
+      val pin = nextPin(curMin, prevPin, prevHashes.get(n) == hash)
       (n, curMin, pin, runs.toSeq, extra, confirmed, hash)
     }
     val qs = results.map { case (k, v, _, _, _, _, _) => "\"" + k + "\":" + fmt(v) }

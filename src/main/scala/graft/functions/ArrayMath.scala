@@ -775,16 +775,16 @@ object ArrayMath {
   def bpeMergePair(syms: Column, l: Column, r: Column): Column =
     call_function(bpeMergeName, syms, l, r)
 
-  /** Greedy BPE encode of a word array against a learned merge list
-    * (each entry "left right"); ranks ride as one reference object (see
-    * [[BpeEncode]]).
-    */
   /** Jaro-Winkler similarity in [0,1] (codegen kernel, 0.7 boost
     * threshold — the DuckDB-compatible flavor; q188 cross-validates).
     */
   def jaroWinkler(a: Column, b: Column): Column =
     call_function(jaroWinklerName, a, b)
 
+  /** Greedy BPE encode of a word array against a learned merge list
+    * (each entry "left right"); ranks ride as one reference object (see
+    * [[BpeEncode]]).
+    */
   def bpeEncode(words: Column, merges: Array[String]): Column =
     call_function(bpeEncodeName, words,
       org.apache.spark.sql.functions.typedLit(merges.toSeq))

@@ -233,14 +233,10 @@ object Dedup {
     var done = false
     while (!done && iter < maxIter) {
       // the convergence signature (row count, bit_xor of edge hashes)
-      // rides the round's checkpoint job as OBSERVED metrics (the
-      // WebGraph hb_probe discipline) — the former separate probe job
-      // cost one driver round-trip per round
-      val pre = smallStar(largeStar(edges))
-        .observe("cc_probe", count(lit(1)).as("__n"),
-          expr("bit_xor(xxhash64(u, v))").as("__x"))
-      edges = pre.localCheckpoint(true)
-      val m = pre.queryExecution.observedMetrics("cc_probe")
+      // rides the round's checkpoint job
+      val (next, m) = Rounds.checkpoint(smallStar(largeStar(edges)),
+        count(lit(1)).as("__n"), expr("bit_xor(xxhash64(u, v))").as("__x"))
+      edges = next
       val sig = (m.getLong(0), m.getLong(1))
       done = sig == prev
       prev = sig

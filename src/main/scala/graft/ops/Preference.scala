@@ -179,16 +179,12 @@ object Preference {
         .withColumn("__pn", expr(
           s"(CAST(__wins AS DECIMAL(38,0)) * $scale * $aux) div " +
             s"greatest(__t, CAST(1 AS DECIMAL(38,0)))"))
-      // the 1-row normalization max rides the checkpoint job as an
-      // OBSERVED metric (the WebGraph.hits discipline) and divides as a
-      // literal — the broadcast-max spelling executed `upd`'s two joins
-      // + aggregation TWICE per round; greatest(mx, 1) folds on the
-      // driver (and covers the empty-frame null max the same way the
-      // in-plan greatest did). Same div, bit-identical values.
-      val pre = upd.select(col("__a"), col("__pn"))
-        .observe("bt_mx", max(col("__pn")).as("__mx"))
-      val chk = pre.localCheckpoint() // O(1)-deep plan across rounds
-      val mxRow = pre.queryExecution.observedMetrics("bt_mx")
+      // the 1-row normalization max rides the checkpoint job and
+      // divides as a literal, so `upd`'s joins and aggregation run once
+      // per round; greatest(mx, 1) folds on the driver (and covers the
+      // empty-frame null max)
+      val (chk, mxRow) = Rounds.checkpoint(
+        upd.select(col("__a"), col("__pn")), max(col("__pn")).as("__mx"))
       val mx = if (mxRow.isNullAt(0)) 1L else math.max(mxRow.getLong(0), 1L)
       p = chk.select(col("__a"), expr(
         s"(CAST(__pn AS DECIMAL(38,0)) * $scale) div ${mx}L").as("__p"))

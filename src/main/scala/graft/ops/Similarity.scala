@@ -613,7 +613,7 @@ object Similarity {
     while (i <= k && !exhausted) {
       val nxt = cur.filter(!col("__sel"))
         .orderBy(col("cmax").asc, col(idCol).asc).limit(1).collect()
-      prev.foreach(_.unpersist()) // successor materialized by the action above
+      prev.foreach(Rounds.release) // successor materialized by the action above
       prev = Some(cur)
       if (nxt.isEmpty) exhausted = true
       else {
@@ -630,7 +630,7 @@ object Similarity {
             // the analyzed plan grows O(k) and planning time O(k²)
             sinceCp = 0
             val cp = stepped.localCheckpoint(true)
-            prev.foreach(_.unpersist())
+            prev.foreach(Rounds.release)
             prev = None
             cp
           } else stepped.persist()
@@ -639,8 +639,8 @@ object Similarity {
       }
     }
     val out = result(picked.toSeq)
-    prev.foreach(_.unpersist())
-    if (!prev.contains(cur)) cur.unpersist()
+    prev.foreach(Rounds.release)
+    if (!prev.contains(cur)) Rounds.release(cur)
     out
   }
 

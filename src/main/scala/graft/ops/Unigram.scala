@@ -104,16 +104,11 @@ object Unigram {
       .select(col("w"), col("cnt"), col("st"),
         (col("st") + col("ln") - 1).as("en"),
         expr("substring(w, st, ln)").as("piece"))
-    // charset size rides the seed checkpoint job as an OBSERVED metric
-    // (the WebGraph hb_probe discipline) — no separate count job
-    val seedPre = substrs.groupBy("piece")
-      .agg(sum(col("cnt")).cast("bigint").as("pcnt"))
-      .observe("unigram_seed",
-        count(when(length(col("piece")) === 1, 1)).cast("bigint")
-          .as("__n1"))
-    val seedCounts = seedPre.localCheckpoint()
-    val nSingles =
-      seedPre.queryExecution.observedMetrics("unigram_seed").getLong(0)
+    // charset size rides the seed checkpoint job — no separate count job
+    val (seedCounts, seedProbe) = Rounds.checkpoint(
+      substrs.groupBy("piece").agg(sum(col("cnt")).cast("bigint").as("pcnt")),
+      count(when(length(col("piece")) === 1, 1)).cast("bigint").as("__n1"))
+    val nSingles = seedProbe.getLong(0)
     require(vocabSize > nSingles,
       s"vocabSize=$vocabSize must exceed the $nSingles-char charset " +
         "(single-char pieces are never dropped)")

@@ -248,17 +248,12 @@ object WebGraph {
 
     // normalize a raw (node, v) frame: (v * SCALE) div max(v), decimal
     // product so the multiply cannot overflow. The max rides the
-    // checkpoint job as an OBSERVED metric (the HyperBall hb_probe
-    // discipline) and divides as a literal — the former broadcast-max
-    // spelling executed `raw`'s whole plan TWICE per half-step (once
-    // under the broadcast's aggregation, once under the crossJoin), so
-    // this halves the per-iteration work; same DECIMAL(38,0) product,
-    // same div, bit-identical values.
+    // checkpoint job and divides as a literal, so `raw`'s plan runs
+    // once per half-step.
     def normalized(raw: DataFrame, vCol: String, outCol: String): DataFrame = {
-      val pre = raw.observe("hits_mx",
+      val (chk, mxRow) = Rounds.checkpoint(raw,
         max(col(vCol)).cast("bigint").as("__mx"))
-      val chk = pre.localCheckpoint() // O(1)-deep plan across iterations
-      val mx = pre.queryExecution.observedMetrics("hits_mx").getLong(0)
+      val mx = mxRow.getLong(0)
       chk.select(col("node"),
         expr(s"CAST(CAST($vCol AS DECIMAL(38,0)) * ${scale}L " +
           s"AS DECIMAL(38,0)) div ${mx}L").as(outCol))
@@ -952,14 +947,12 @@ object WebGraph {
                          weightCol: Option[String] = None): DataFrame = {
     require(rounds >= 1 && rounds <= 20,
       s"rounds must be in [1,20], got $rounds")
-    // weighted flavor (r16 verdict gap #4): k_v, k_{v,c}, tot and 2m
-    // become weighted sums — the coarse phase (louvainCoarsen) always
-    // was weighted, this closes phase 1. Weights must be POSITIVE
-    // INTEGERS (the hdrSketchWeighted contract — exact DECIMAL gain
-    // arithmetic survives, fractional weights raise in-plan, never
-    // truncate); parallel (src,dst) rows ADD their weights. The default
-    // path keeps the historic simple-graph semantics (distinct pairs,
-    // weight 1) value-for-value — q234's oracle hash is unchanged.
+    // weighted flavor: k_v, k_{v,c}, tot and 2m become weighted sums.
+    // Weights must be POSITIVE INTEGERS (the hdrSketchWeighted contract
+    // — exact DECIMAL gain arithmetic survives, fractional weights raise
+    // in-plan, never truncate); parallel (src,dst) rows ADD their
+    // weights. The default path is the simple graph (distinct pairs,
+    // weight 1).
     val nbr = (weightCol match {
       case None => undirectedNbr(edges, srcCol, dstCol)
         .withColumn("w", lit(1L))
@@ -986,6 +979,23 @@ object WebGraph {
     val deg = nbr.groupBy("node")
       .agg(coalesce(sum(col("w")).cast("bigint"), lit(0L)).as("deg"))
       .persist()
+    val labels = localMoving(nbr, deg, rounds)
+    nbr.unpersist()
+    deg.unpersist()
+    labels.select(col("node"), col("comm").as("community"))
+  }
+
+  /** Synchronized local moving, the round shared by [[louvainCommunities]]
+    * and [[louvainCoarsen]]: `rounds` rounds over a weighted symmetric
+    * adjacency `nbr` (node, nb, w — w a non-null positive long) with
+    * node degrees `deg` (node, deg), every node starting in its own
+    * community. Both inputs are loop-invariant; the caller persists and
+    * releases them.
+    *
+    * → (node, comm, deg), eagerly checkpointed
+    */
+  private def localMoving(nbr: DataFrame, deg: DataFrame,
+                          rounds: Int): DataFrame = {
     val m2Frame = deg.agg(sum(col("deg")).cast("decimal(38,0)").as("__m2"))
     val dec = "decimal(19,0)"
     // the node degree rides INSIDE the labels frame: it is loop-invariant
@@ -994,16 +1004,14 @@ object WebGraph {
     // of one long column in the skinny checkpointed frame
     var labels = deg.select(col("node"), col("node").as("comm"), col("deg"))
       .localCheckpoint(true)
-    var round = 0
-    while (round < rounds) {
-      val ld = labels // (node, comm, deg) — shared by tot and self
-      val tot = ld.groupBy(col("comm")).agg(sum(col("deg")).as("tot"))
+    for (_ <- 1 to rounds) {
+      val tot = labels.groupBy(col("comm")).agg(sum(col("deg")).as("tot"))
       val kv = nbr
         .join(labels.select(col("node").as("nb"), col("comm").as("cand")),
           "nb")
         .groupBy(col("node"), col("cand"))
-        .agg(coalesce(sum(col("w")).cast("bigint"), lit(0L)).as("k"))
-      val self = ld
+        .agg(sum(col("w")).as("k"))
+      val self = labels
         .join(tot.withColumnRenamed("comm", "__c"),
           col("__c") === col("comm"))
         .select(col("node"), col("comm"), col("deg"),
@@ -1019,14 +1027,11 @@ object WebGraph {
           col("__m2") * col("k").cast(dec) -
             col("deg").cast(dec) * col("__totx").cast(dec))
       // ONE aggregation yields both the winner (struct-min over
-      // (−score, cand) = max score with the min-cand tiebreak —
-      // identical selection to the max+filter+re-agg spelling the
-      // oracle replays) AND the stay score: the cand==comm row of
-      // `scored` IS the stay value when the node has a same-community
-      // neighbor (there __totx = tot − deg = __totx_cur), and the
-      // k_c=0 fallback −deg·__totx_cur needs only per-node constants
-      // already on the plane — so the former second kv⋈self "stay"
-      // join is gone (r15 verdict perf item #1)
+      // (−score, cand) = max score with the min-cand tiebreak) AND the
+      // stay score: the cand==comm row of `scored` IS the stay value
+      // when the node has a same-community neighbor (there __totx =
+      // tot − deg = __totx_cur), and the k_c=0 fallback −deg·__totx_cur
+      // needs only per-node constants already on the plane
       val want = scored
         .groupBy(col("node"))
         .agg(min(struct((col("__score") * -1).as("__ns"), col("cand")))
@@ -1055,16 +1060,15 @@ object WebGraph {
         .select(col("node")).distinct()
       val moves = want.join(blocked, Seq("node"), "left_anti")
         .select(col("node"), col("__to"))
-      labels = labels.join(moves, Seq("node"), "left")
+      val next = labels.join(moves, Seq("node"), "left")
         .select(col("node"), coalesce(col("__to"), col("comm")).as("comm"),
           col("deg"))
         .localCheckpoint(true) // plan depth stays O(1) across rounds
       want.unpersist() // the eager checkpoint above consumed it
-      round += 1
+      Rounds.release(labels)
+      labels = next
     }
-    nbr.unpersist()
-    deg.unpersist()
-    labels.select(col("node"), col("comm").as("community"))
+    labels
   }
 
   /** Louvain PHASE 2 (Blondel et al. 2008 §2): collapse each community
@@ -1082,9 +1086,10 @@ object WebGraph {
     * OPT-IN and deliberately NOT the oracle lane: coarsening depth is
     * data-dependent, so a fixed-depth SQL oracle cannot replay it —
     * [[louvainCommunities]] (q234) stays the replayable flavor, this
-    * is the "real 100 TB host graph" flavor layered on top (r15
-    * verdict gap #4). Determinism still holds: exact DECIMAL(38,0)
-    * gains, md5-priority independent-set scheduling, fixed rounds.
+    * is the "real 100 TB host graph" flavor layered on top.
+    * Determinism still holds: exact DECIMAL(38,0) gains, md5-priority
+    * independent-set scheduling, fixed rounds; the rounds are
+    * [[localMoving]]'s, run on the coarse graph.
     *
     * Scale shape: the coarse plane is |communities| nodes — orders of
     * magnitude below the corpus; every join is keyed, the loop
@@ -1119,68 +1124,7 @@ object WebGraph {
       .groupBy(col("comm0").as("node"))
       .agg(sum(col("__d")).as("deg"))
       .persist()
-    val m2Frame = deg.agg(sum(col("deg")).cast("decimal(38,0)").as("__m2"))
-    val dec = "decimal(19,0)"
-    // coarse-node degree rides inside the labels frame (loop-invariant) —
-    // see louvainCommunities
-    var cl = deg.select(col("node"), col("node").as("comm"), col("deg"))
-      .localCheckpoint(true)
-    var round = 0
-    while (round < rounds) {
-      val ld = cl // (node, comm, deg)
-      val tot = ld.groupBy(col("comm")).agg(sum(col("deg")).as("tot"))
-      val kv = cNbr
-        .join(cl.select(col("node").as("nb"), col("comm").as("cand")),
-          "nb")
-        .groupBy(col("node"), col("cand"))
-        .agg(sum(col("w")).as("k"))
-      val self = ld
-        .join(tot.withColumnRenamed("comm", "__c"),
-          col("__c") === col("comm"))
-        .select(col("node"), col("comm"), col("deg"),
-          (col("tot") - col("deg")).as("__totx_cur"))
-      val scored = kv
-        .join(self, "node")
-        .crossJoin(broadcast(m2Frame))
-        .join(tot.withColumnRenamed("comm", "cand"), "cand")
-        .withColumn("__totx",
-          col("tot") - when(col("cand") === col("comm"), col("deg"))
-            .otherwise(lit(0L)))
-        .withColumn("__score",
-          col("__m2") * col("k").cast(dec) -
-            col("deg").cast(dec) * col("__totx").cast(dec))
-      val want = scored
-        .groupBy(col("node"))
-        .agg(min(struct((col("__score") * -1).as("__ns"), col("cand")))
-          .as("__w"),
-          max(when(col("cand") === col("comm"), col("__score")))
-            .as("__s0"),
-          max(col("deg")).as("__deg"),
-          max(col("__totx_cur")).as("__tcur"))
-        .withColumn("__stay", coalesce(col("__s0"),
-          lit(0).cast("decimal(38,0)") -
-            col("__deg").cast(dec) * col("__tcur").cast(dec)))
-        .filter((col("__w.__ns") * -1) > col("__stay"))
-        .select(col("node"), col("__w.cand").as("__to"),
-          conv(substring(md5(col("node")), 1, 12), 16, 10).cast("long")
-            .as("__h"))
-        .persist()
-      val blocked = cNbr
-        .join(want.select(col("node"), col("__h")), "node")
-        .join(want.select(col("node").as("nb"), col("__h").as("__hn")),
-          "nb")
-        .filter(col("__hn") < col("__h") ||
-          (col("__hn") === col("__h") && col("nb") < col("node")))
-        .select(col("node")).distinct()
-      val moves = want.join(blocked, Seq("node"), "left_anti")
-        .select(col("node"), col("__to"))
-      cl = cl.join(moves, Seq("node"), "left")
-        .select(col("node"), coalesce(col("__to"), col("comm")).as("comm"),
-          col("deg"))
-        .localCheckpoint(true)
-      want.unpersist()
-      round += 1
-    }
+    val cl = localMoving(cNbr, deg, rounds)
     cNbr.unpersist()
     deg.unpersist()
     lab.join(cl.select(col("node").as("comm0"), col("comm")), "comm0")
@@ -1650,90 +1594,26 @@ object WebGraph {
   def neighborhoodFunction(edges: DataFrame, srcCol: String,
                            dstCol: String, maxT: Int = 64,
                            p: Int = 9): DataFrame = {
-    require(maxT >= 1 && maxT <= 256, s"maxT must be in [1,256], got $maxT")
-    val e = edges
-      .select(col(srcCol).cast("string").as("esrc"),
-        col(dstCol).cast("string").as("edst"))
-      .filter(col("esrc").isNotNull && col("edst").isNotNull &&
-        col("esrc") =!= col("edst")) // v ∈ B_t(v) already
-      .distinct()
-      .persist()
-    val nodes = e.select(col("esrc").as("node"))
-      .unionByName(e.select(col("edst").as("node"))).distinct()
-    // the exact change detector (Σ rho_max, register rows) rides each
-    // round's checkpoint job as OBSERVED metrics — rows are only added
-    // and rho_max only grows, so the pair moves iff any register moved,
-    // and reading it costs no extra job; the N(t) read then runs only
-    // for CHANGED rounds (level-synchronous graph rounds are driver-
-    // latency bound, so job count is the wall time)
-    def detect(cc: DataFrame): DataFrame = cc.observe("hb_probe",
-      sum(col("rho_max")).cast("bigint").as("__rho"),
-      count(lit(1)).cast("bigint").as("__rows"))
-    def detected(cc: DataFrame): (Long, Long) = {
-      val m = cc.queryExecution.observedMetrics("hb_probe")
-      (m.getLong(0), m.getLong(1))
-    }
-    val c0 = detect(graft.ops.Sketches.hllSketch(nodes, Seq("node"),
-      "node", p))
-    var c = c0.localCheckpoint()
     // per-node register aggregation, then a global fold of the
     // q239-certified estimate (DECIMAL(27,12), order-independent)
-    def roundRead(cc: DataFrame): java.math.BigDecimal = cc
-      .withColumn("__t", graft.ops.Sketches.hllShiftT(p))
-      .groupBy("node")
-      .agg(count(lit(1)).as("__hit"), sum(col("__t")).as("__s"))
-      .groupBy()
-      .agg(sum(graft.ops.Sketches
-          .hllEstimateExpr(col("__hit"), col("__s"), p)
-          .cast("decimal(27,12)")).as("__nf"))
-      .head().getDecimal(0)
+    val nf = registerRounds(edges, srcCol, dstCol, maxT, p, reverse = false,
+        "neighborhoodFunction") { (_, c) =>
+      c.withColumn("__t", graft.ops.Sketches.hllShiftT(p))
+        .groupBy("node")
+        .agg(count(lit(1)).as("__hit"), sum(col("__t")).as("__s"))
+        .groupBy()
+        .agg(sum(graft.ops.Sketches
+            .hllEstimateExpr(col("__hit"), col("__s"), p)
+            .cast("decimal(27,12)")).as("__nf"))
+        .head().getDecimal(0)
+    }
     // decimal-to-double via the string route, on the driver — the same
     // bridge the in-plan cast performs (plain-notation toString at
     // scale 12, then the IEEE parse)
-    import scala.concurrent.Await
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-    var prev = detected(c0)
-    // the N(t) read of the last CHANGED round rides CONCURRENTLY with
-    // the next round's grow/checkpoint job (Par.grouped — the SCC
-    // fwd/bwd overlap discipline): level-synchronous rounds are
-    // driver-latency bound, so hiding the per-round read job under the
-    // grow job removes one of the two job round-trips per round. Both
-    // jobs only READ the checkpointed register plane; the harvested
-    // value is identical to the sequential read's.
-    val cInit = c // snapshot: Par.grouped bodies are BY-NAME, `c` is a var
-    var readFut = Par.grouped(roundRead(cInit))
-    var readT = 0
-    var t = 0
-    var done = false
-    while (!done) {
-      t += 1
-      val grownPre = detect(e.join(c.withColumnRenamed("node", "__dn"),
-          col("edst") === col("__dn"))
-        .select(col("esrc").as("node"), col("bucket"), col("rho_max"))
-        .unionByName(c)
-        .groupBy("node", "bucket").agg(max(col("rho_max")).as("rho_max")))
-      val grown = grownPre.localCheckpoint()
-      val cur = detected(grownPre)
-      rows += ((readT,
-        Await.result(readFut, Duration.Inf).toString.toDouble))
-      if (cur == prev) done = true // true fixpoint — monotone dynamics
-      else {
-        require(t <= maxT,
-          s"neighborhoodFunction: registers still changing at maxT=" +
-            s"$maxT — raise maxT (truncating understates the diameter)")
-        readFut = Par.grouped(roundRead(grown))
-        readT = t
-        c.unpersist() // its read was harvested above
-        c = grown
-        prev = cur
-      }
-    }
-    e.unpersist()
     val spark = edges.sparkSession
     import spark.implicits._
-    rows.toSeq.toDF("t", "nf_est")
+    nf.zipWithIndex.map { case (v, t) => (t, v.toString.toDouble) }
+      .toDF("t", "nf_est")
   }
 
   /** Per-node HyperBall ball-size table — the register plane behind
@@ -1749,87 +1629,97 @@ object WebGraph {
     */
   def hyperballSizes(edges: DataFrame, srcCol: String, dstCol: String,
                      maxT: Int = 64, p: Int = 9,
-                     reverse: Boolean = false): DataFrame = {
-    require(maxT >= 1 && maxT <= 256, s"maxT must be in [1,256], got $maxT")
-    val e0 = edges
-      .select(col(srcCol).cast("string").as("esrc"),
-        col(dstCol).cast("string").as("edst"))
-      .filter(col("esrc").isNotNull && col("edst").isNotNull &&
-        col("esrc") =!= col("edst"))
-      .distinct()
-    val e = (if (reverse) e0.select(col("edst").as("esrc"),
-        col("esrc").as("edst"))
-      else e0).persist()
-    val nodes = e.select(col("esrc").as("node"))
-      .unionByName(e.select(col("edst").as("node"))).distinct()
-    // the exact change detector (Σ rho_max, register rows) rides the
-    // checkpoint job as OBSERVED metrics — rows are only added and
-    // rho_max only grows, so the pair moves iff any register moved, and
-    // reading it costs no extra job (level-synchronous rounds are
-    // driver-latency bound: job COUNT is the wall time; the r18 shape
-    // paid a separate probe aggregation per round AND built the serving
-    // rows for the fixpoint round it then discarded)
-    def detect(cc: DataFrame): DataFrame = cc.observe("hb_probe",
-      sum(col("rho_max")).cast("bigint").as("__rho"),
-      count(lit(1)).cast("bigint").as("__rows"))
-    def detected(cc: DataFrame): (Long, Long) = {
-      val m = cc.queryExecution.observedMetrics("hb_probe")
-      (m.getLong(0), m.getLong(1))
-    }
-    val c0 = detect(graft.ops.Sketches.hllSketch(nodes, Seq("node"),
-      "node", p))
-    var c = c0.localCheckpoint()
-    def estRows(t: Int, cc: DataFrame): DataFrame =
-      cc.withColumn("__t", graft.ops.Sketches.hllShiftT(p))
+                     reverse: Boolean = false): DataFrame =
+    registerRounds(edges, srcCol, dstCol, maxT, p, reverse,
+        "hyperballSizes") { (t, c) =>
+      c.withColumn("__t", graft.ops.Sketches.hllShiftT(p))
         .groupBy("node")
         .agg(count(lit(1)).as("__hit"), sum(col("__t")).as("__s"))
         .select(col("node"), lit(t).as("t"),
           graft.ops.Sketches.hllEstimateExpr(col("__hit"), col("__s"), p)
             .as("ball_est"))
         .localCheckpoint()
-    // the serving-row materialization of the last CHANGED round rides
-    // CONCURRENTLY with the next round's grow/checkpoint job
-    // (Par.grouped — the SCC fwd/bwd overlap discipline): rounds are
-    // driver-latency bound, so hiding the per-round estRows job under
-    // the grow job removes one of the two job round-trips per round.
-    // Both jobs only READ the checkpointed register plane.
+    }.reduce(_ unionByName _)
+      .select(col("node"), col("t"), col("ball_est"))
+
+  /** The HyperBall register iteration behind [[neighborhoodFunction]]
+    * and [[hyperballSizes]]: seed each node's HLL plane
+    * (node, bucket, rho_max) with its own id, then fold in the
+    * out-neighbors' planes (in-neighbors' with `reverse`) by
+    * register-wise MAX until no register changes. `read(t, plane)`
+    * serves round t; it runs for every round before the fixpoint round
+    * (whose plane equals its predecessor's). Raises, naming `what`, if
+    * registers still change after `maxT` rounds.
+    *
+    * → the reads of rounds 0..T−1 in round order, T the fixpoint round
+    */
+  private def registerRounds[T](edges: DataFrame, srcCol: String,
+                                dstCol: String, maxT: Int, p: Int,
+                                reverse: Boolean, what: String)
+                               (read: (Int, DataFrame) => T): Seq[T] = {
+    require(maxT >= 1 && maxT <= 256, s"maxT must be in [1,256], got $maxT")
+    val e0 = edges
+      .select(col(srcCol).cast("string").as("esrc"),
+        col(dstCol).cast("string").as("edst"))
+      .filter(col("esrc").isNotNull && col("edst").isNotNull &&
+        col("esrc") =!= col("edst")) // v ∈ B_t(v) already
+      .distinct()
+    val e = (if (reverse) e0.select(col("edst").as("esrc"),
+        col("esrc").as("edst"))
+      else e0).persist()
+    val nodes = e.select(col("esrc").as("node"))
+      .unionByName(e.select(col("edst").as("node"))).distinct()
+    // the exact change detector (Σ rho_max, register rows) rides each
+    // round's checkpoint job — rows are only added and rho_max only
+    // grows, so the pair moves iff any register moved, and reading it
+    // costs no job (level-synchronous rounds are driver-latency bound:
+    // job COUNT is the wall time)
+    def checkpointed(plane: DataFrame): (DataFrame, (Long, Long)) = {
+      val (chk, m) = Rounds.checkpoint(plane,
+        sum(col("rho_max")).cast("bigint").as("__rho"),
+        count(lit(1)).cast("bigint").as("__rows"))
+      (chk, (m.getLong(0), m.getLong(1)))
+    }
+    var (c, prev) = checkpointed(
+      graft.ops.Sketches.hllSketch(nodes, Seq("node"), "node", p))
+    // round t's read rides CONCURRENTLY with round t+1's grow job
+    // (Par.grouped — the SCC fwd/bwd overlap discipline), hiding one of
+    // the two job round-trips per round. Both jobs only READ the
+    // checkpointed plane, so the read is the sequential read's value.
     import scala.concurrent.Await
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val rows = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val reads = scala.collection.mutable.ArrayBuffer.empty[T]
     val cInit = c // snapshot: Par.grouped bodies are BY-NAME, `c` is a var
-    var estFut = Par.grouped(estRows(0, cInit))
-    var prev = detected(c0)
+    var readFut = Par.grouped(read(0, cInit))
     var t = 0
     var done = false
     while (!done) {
       t += 1
-      val grownPre = detect(e.join(c.withColumnRenamed("node", "__dn"),
+      val (grown, cur) = checkpointed(
+        e.join(c.withColumnRenamed("node", "__dn"),
           col("edst") === col("__dn"))
         .select(col("esrc").as("node"), col("bucket"), col("rho_max"))
         .unionByName(c)
         .groupBy("node", "bucket").agg(max(col("rho_max")).as("rho_max")))
-      val grown = grownPre.localCheckpoint()
-      val cur = detected(grownPre)
-      rows += Await.result(estFut, Duration.Inf)
+      reads += Await.result(readFut, Duration.Inf)
+      Rounds.release(c) // its read was harvested above
+      c = grown
       if (cur == prev) done = true // true fixpoint — monotone dynamics
       else {
         require(t <= maxT,
-          s"hyperballSizes: registers still changing at maxT=$maxT — " +
+          s"$what: registers still changing at maxT=$maxT — " +
             "raise maxT (truncating understates distances)")
-        // snapshot the loop counter: Par.grouped takes its body BY-NAME,
-        // so a direct `estRows(t, …)` would read `t` on the pooled
-        // thread and race the main loop's increment (mislabeled rounds)
+        // snapshot the loop counter: a direct `read(t, …)` would read
+        // `t` on the pooled thread and race the increment above
         val tRead = t
-        estFut = Par.grouped(estRows(tRead, grown)) // CHANGED rounds only
-        c.unpersist() // its serving rows were harvested above
-        c = grown
+        readFut = Par.grouped(read(tRead, grown))
         prev = cur
       }
     }
+    Rounds.release(c)
     e.unpersist()
-    rows.reduce(_ unionByName _)
-      .select(col("node"), col("t"), col("ball_est"))
+    reads.toSeq
   }
 
   /** HyperBall HARMONIC centrality (Boldi & Vigna ICDMW'13 — the
@@ -1980,17 +1870,13 @@ object WebGraph {
         col("esrc") =!= col("edst")) // self-loops never change SCCs
       .distinct()
       .persist()
-    val allNodesPre = e0.select(col("esrc").as("node"))
-      .unionByName(e0.select(col("edst").as("node"))).distinct()
-      .observe("scc_res_probe", count(lit(1)).cast("bigint").as("__n"))
-    val allNodes = allNodesPre.localCheckpoint()
-    var residual = allNodes
     // the residual emptiness signal rides every residual checkpoint job
-    // as an observed row count (the hb_probe discipline): the former
-    // `residual.isEmpty` probes were one extra driver round-trip per
-    // trim wave and per pivot round
-    var residualCount =
-      allNodesPre.queryExecution.observedMetrics("scc_res_probe").getLong(0)
+    // as its row count — no probe job per trim wave or pivot round
+    def rows = count(lit(1)).cast("bigint").as("__n")
+    val (allNodes, n0) = Rounds.checkpoint(e0.select(col("esrc").as("node"))
+      .unionByName(e0.select(col("edst").as("node"))).distinct(), rows)
+    var residual = allNodes
+    var residualCount = n0.getLong(0)
     var eR = e0
     var comps: Option[DataFrame] = None
     var round = 0
@@ -2006,11 +1892,10 @@ object WebGraph {
       while (trimming) {
         // the zero-degree wave stays LAZY: it materializes inside the
         // residual update's checkpoint job (its first consumer), and
-        // wave-emptiness is read off that same job's observed residual
-        // count — the wave is empty iff the residual row count did not
-        // move (zeroDeg ⊆ residual, residual' = residual ∖ zeroDeg).
-        // One driver round-trip per wave where the r19 spelling paid
-        // three (wave probe, wave checkpoint, residual checkpoint).
+        // wave-emptiness is read off that same job's residual count —
+        // the wave is empty iff the residual row count did not move
+        // (zeroDeg ⊆ residual, residual' = residual ∖ zeroDeg). One
+        // driver round-trip per wave.
         val zeroDeg = residual
           .join(eR.select(col("esrc").as("node")), Seq("node"), "left_anti")
           .unionByName(residual
@@ -2018,12 +1903,9 @@ object WebGraph {
               "left_anti"))
           .distinct()
           .localCheckpoint(false)
-        val resPre = residual.join(zeroDeg, Seq("node"), "left_anti")
-          .observe("scc_res_probe",
-            count(lit(1)).cast("bigint").as("__n"))
-        val resNext = resPre.localCheckpoint()
-        val after = resPre.queryExecution
-          .observedMetrics("scc_res_probe").getLong(0)
+        val (resNext, n) = Rounds.checkpoint(
+          residual.join(zeroDeg, Seq("node"), "left_anti"), rows)
+        val after = n.getLong(0)
         if (after == residualCount) trimming = false
         else {
           waves += zeroDeg
@@ -2036,7 +1918,7 @@ object WebGraph {
               "left_anti")
             .select(col("esrc"), col("edst"))
             .localCheckpoint()
-          if (eR ne e0) eR.unpersist()
+          if (eR ne e0) Rounds.release(eR)
           eR = eNext
         }
       }
@@ -2070,10 +1952,11 @@ object WebGraph {
       import scala.concurrent.Await
       import scala.concurrent.ExecutionContext.Implicits.global
       val eAcc = accelerated(eR)
-      val fF = Par.grouped(reachFrom(eAcc, pivots, maxDepth))
-      val fB = Par.grouped(reachFrom(
+      val seeds = pivots.select(col("node").as("s"), col("node"))
+      val fF = Par.grouped(reach(eAcc, seeds, maxDepth, "components"))
+      val fB = Par.grouped(reach(
         eAcc.select(col("edst").as("esrc"), col("esrc").as("edst")),
-        pivots, maxDepth))
+        seeds, maxDepth, "components"))
       val fwd = Await.result(fF, scala.concurrent.duration.Duration.Inf)
       val bwd = Await.result(fB, scala.concurrent.duration.Duration.Inf)
       // F(p) ∩ B(p) = SCC(p); label = min member (pivot-independent)
@@ -2092,13 +1975,15 @@ object WebGraph {
         .localCheckpoint(false)
       comps = Some(comps.fold(settled)(_ unionByName settled)
         .localCheckpoint(false))
-      val resPre = residual.join(settled.select(col("node")), Seq("node"),
-        "left_anti").observe("scc_res_probe",
-          count(lit(1)).cast("bigint").as("__n"))
-      residual = resPre.localCheckpoint()
-      residualCount = resPre.queryExecution
-        .observedMetrics("scc_res_probe").getLong(0)
+      val (resNext, n) = Rounds.checkpoint(residual.join(
+        settled.select(col("node")), Seq("node"), "left_anti"), rows)
+      residual = resNext
+      residualCount = n.getLong(0)
       done = residualCount == 0L
+      // settled has materialized inside the residual job, so nothing
+      // lazy reads this round's accelerated plane or pivots any more
+      Rounds.release(eAcc)
+      Rounds.release(pivots)
       // when the pivots finished the graph, the restricted edge frame
       // and the trim probe are both dead work — skip them
       if (!done) {
@@ -2109,13 +1994,13 @@ object WebGraph {
             "left_semi")
           .select(col("esrc"), col("edst"))
           .localCheckpoint()
-        if (eR ne e0) eR.unpersist()
+        if (eR ne e0) Rounds.release(eR)
         eR = eNext
         // the settled SCCs' removal exposes a fresh acyclic fringe
         trim(); done = residualCount == 0L
       }
     }
-    if (eR ne e0) eR.unpersist()
+    if (eR ne e0) Rounds.release(eR)
     e0.unpersist()
     comps.getOrElse(allNodes.select(col("node"),
       col("node").as("component")))
@@ -2139,7 +2024,7 @@ object WebGraph {
     * concurrent job DAGs), then forward-from-IN / backward-from-OUT
     * over the CORE-EXCLUDED subgraph (the "without passage through the
     * SCC" clause of the paper's tendril definition). Every pass is the
-    * [[reachFrom]] level-synchronous BFS shape with per-hop
+    * [[reach]] level-synchronous BFS shape with per-hop
     * localCheckpoint and the loud maxDepth guard; everything else is
     * skinny set algebra (semi/anti joins on the node plane).
     *
@@ -2175,10 +2060,12 @@ object WebGraph {
     // shortcut-accelerated planes for the four reach passes (identical
     // reach sets, about half the hops — see [[accelerated]]); the
     // region set algebra keeps using the true edges
+    def setReach(e: DataFrame, sources: DataFrame): DataFrame =
+      reach(e, sources.select(col("node")).distinct(), maxDepth, "regions")
     val eAcc0 = accelerated(e0)
     val rev = eAcc0.select(col("edst").as("esrc"), col("esrc").as("edst"))
-    val fF = Par.grouped(setReach(eAcc0, core, maxDepth))
-    val fB = Par.grouped(setReach(rev, core, maxDepth))
+    val fF = Par.grouped(setReach(eAcc0, core))
+    val fB = Par.grouped(setReach(rev, core))
     val fwd = Await.result(fF, Duration.Inf)
     val bwd = Await.result(fB, Duration.Inf)
     val outR = fwd.join(core, Seq("node"), "left_anti").localCheckpoint(true)
@@ -2193,8 +2080,8 @@ object WebGraph {
       .select(col("esrc"), col("edst")).localCheckpoint(true)
     val eAccNC = accelerated(eNC)
     val revNC = eAccNC.select(col("edst").as("esrc"), col("esrc").as("edst"))
-    val fFrom = Par.grouped(setReach(eAccNC, inR, maxDepth))
-    val fTo = Par.grouped(setReach(revNC, outR, maxDepth))
+    val fFrom = Par.grouped(setReach(eAccNC, inR))
+    val fTo = Par.grouped(setReach(revNC, outR))
     val fromIn = Await.result(fFrom, Duration.Inf)
       .join(rem, Seq("node"), "left_semi").localCheckpoint(true)
     val toOut = Await.result(fTo, Duration.Inf)
@@ -2499,80 +2386,39 @@ object WebGraph {
   private def accelerated(e: DataFrame, k: Int = 4): DataFrame =
     e.unionByName(shortcutEdges(e, k)).localCheckpoint()
 
-  /** Single-SET reachability over a normalized (esrc, edst) edge frame:
-    * every node reachable from ANY source node, sources included. The
-    * [[reachFrom]] discipline without the per-source column — per-hop
-    * localCheckpoint, loud maxDepth guard, empty source set returns
-    * empty.
+  /** Level-synchronous reachability over a normalized (esrc, edst) edge
+    * frame. `seeds` holds a "node" column and, for a multi-source reach,
+    * a leading source column "s": the result is then (s, node) for
+    * every node reachable from s, (s, s) included; without "s" it is
+    * every node reachable from any seed, seeds included. Each hop is
+    * one eager checkpoint whose row count is the emptiness probe; the
+    * visited union stays lazy and materializes inside the next hop's
+    * anti-join. Empty seeds give an empty result; a frontier still
+    * expanding past `maxDepth` raises (silent truncation would
+    * mislabel `what`).
     */
-  private def setReach(e: DataFrame, sources: DataFrame,
-                       maxDepth: Int): DataFrame = {
-    val srcPre = sources.select(col("node")).distinct()
-      .observe("reach_probe", count(lit(1)).cast("bigint").as("__n"))
-    var visited = srcPre.localCheckpoint()
-    var frontier = visited
+  private def reach(e: DataFrame, seeds: DataFrame, maxDepth: Int,
+                    what: String): DataFrame = {
+    val keys = seeds.columns.toSeq
+    def rows = count(lit(1)).cast("bigint").as("__n")
+    val (seeded, n) = Rounds.checkpoint(seeds, rows)
+    var visited = seeded
+    var frontier = seeded
     var d = 0
-    var done =
-      srcPre.queryExecution.observedMetrics("reach_probe").getLong(0) == 0L
+    var done = n.getLong(0) == 0L
     while (!done) {
       d += 1
-      // the emptiness probe rides the hop's OWN checkpoint job as an
-      // observed row count (the hb_probe discipline): the former
-      // checkpoint-then-isEmpty spelling paid TWO driver round-trips
-      // per hop — level-synchronous BFS wall time is round-trips ×
-      // depth, so this halves the reach passes' driver traffic
-      val nextPre = frontier.join(e, col("node") === col("esrc"))
-        .select(col("edst").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .observe("reach_probe", count(lit(1)).cast("bigint").as("__n"))
-      val next = nextPre.localCheckpoint()
-      if (nextPre.queryExecution.observedMetrics("reach_probe")
-          .getLong(0) == 0L) done = true
+      val (next, m) = Rounds.checkpoint(
+        frontier.join(e, col("node") === col("esrc"))
+          .select(keys.map(k =>
+            if (k == "node") col("edst").as("node") else col(k)): _*)
+          .distinct()
+          .join(visited, keys, "left_anti"), rows)
+      if (m.getLong(0) == 0L) done = true
       else {
         require(d <= maxDepth,
-          s"setReach: frontier still expanding at depth $maxDepth — " +
-            "raise maxDepth (silent truncation would mislabel regions)")
-        // lazy: the union materializes inside the next hop's anti-join
-        // (the sampledBfs discipline) — one round-trip per hop removed;
-        // the loop always exits with `visited` materialized
-        visited = visited.unionByName(next).localCheckpoint(false)
-        frontier = next
-      }
-    }
-    visited
-  }
-
-  /** Multi-source reachability BFS over a normalized (esrc, edst) edge
-    * frame: (s, node) for every node reachable from source s, INCLUDING
-    * (s, s). Per-hop localCheckpoint keeps the plan O(1) deep; raises
-    * if a frontier is still expanding past `maxDepth` (silent
-    * truncation would mislabel components).
-    */
-  private def reachFrom(e: DataFrame, sources: DataFrame,
-                        maxDepth: Int): DataFrame = {
-    var visited = sources.select(col("node").as("s"), col("node"))
-      .localCheckpoint()
-    var frontier = visited
-    var d = 0
-    var done = false
-    while (!done) {
-      d += 1
-      // emptiness probe fused onto the hop's checkpoint job (observed
-      // row count — the hb_probe discipline): one driver round-trip per
-      // hop instead of the former checkpoint-then-isEmpty two
-      val nextPre = frontier.join(e, col("node") === col("esrc"))
-        .select(col("s"), col("edst").as("node")).distinct()
-        .join(visited, Seq("s", "node"), "left_anti")
-        .observe("reach_probe", count(lit(1)).cast("bigint").as("__n"))
-      val next = nextPre.localCheckpoint()
-      if (nextPre.queryExecution.observedMetrics("reach_probe")
-          .getLong(0) == 0L) done = true
-      else {
-        require(d <= maxDepth,
-          s"reachFrom: frontier still expanding at depth $maxDepth — " +
-            "raise maxDepth (silent truncation would mislabel components)")
-        // lazy: materializes inside the next hop's anti-join (the
-        // sampledBfs discipline) — one round-trip per hop removed
+          s"reach: frontier still expanding at depth $maxDepth — " +
+            s"raise maxDepth (silent truncation would mislabel $what)")
         visited = visited.unionByName(next).localCheckpoint(false)
         frontier = next
       }

@@ -24,6 +24,16 @@ class BenchVsPrevSpec extends AnyFunSuite {
     assert(Bench.parsePrevQueries(f).isEmpty)
   }
 
+  test("nextPin carries the previous pin only while the plan hash matches") {
+    assert(Bench.nextPin(2.0, Some(1.5), samePlan = true) == 1.5)
+    assert(Bench.nextPin(1.0, Some(1.5), samePlan = true) == 1.0)
+    assert(Bench.nextPin(2.0, Some(1.5), samePlan = false) == 2.0)
+    assert(Bench.nextPin(2.0, None, samePlan = true) == 2.0)
+    // a run with no successful rep carries a matching pin, never a stale one
+    assert(Bench.nextPin(-1.0, Some(1.5), samePlan = true) == 1.5)
+    assert(Bench.nextPin(-1.0, Some(1.5), samePlan = false) == -1.0)
+  }
+
   test("pin file is keyed by (cpus, sf) so configurations never cross") {
     assert(Bench.pinFileName("32", "/root/testdata/sf0.1") ==
       "last_run_c32_sf0.1.json")

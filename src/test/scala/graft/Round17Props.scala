@@ -49,21 +49,41 @@ object Round17Props extends Properties("Round17Ops") {
     }.toMap
   }
 
+  private def sccMatchesReference(edges: Seq[(String, String)],
+                                  pivots: Int): Prop = {
+    import spark.implicits._
+    val simple = edges.filter { case (a, b) => a != b }.distinct
+    val got = graft.ops.WebGraph.stronglyConnectedComponents(
+        edges.toDF("src", "dst"), "src", "dst",
+        pivotsPerRound = pivots, maxDepth = 32, maxRounds = 64)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val want = refScc(simple)
+    (got == want) :| s"pivots=$pivots got=$got want=$want edges=$simple"
+  }
+
+  /** Star-with-cycle hub graph: hub h has in- and out-degree 7, above
+    * the reach passes' shortcut budget (k = 4 in × 4 out per middle
+    * node). A cycle h → c0 → c1 → c2 → h is the giant SCC; six spokes
+    * m_i → h and six h → l_i; a core-free second hub t (m_i → t → l_i,
+    * a tube); a tendril m0 → d; a disconnected edge x → y.
+    */
+  private val hubEdges: Seq[(String, String)] =
+    Seq(("h", "c0"), ("c0", "c1"), ("c1", "c2"), ("c2", "h")) ++
+      (0 until 6).flatMap(i => Seq((s"m$i", "h"), ("h", s"l$i"),
+        (s"m$i", "t"), ("t", s"l$i"))) ++
+      Seq(("m0", "d"), ("x", "y"))
+
+  // deterministic: run once per property check, not once per sample
+  private lazy val hubSccMatches: Prop =
+    Prop.all(Seq(1, 64).map(sccMatchesReference(hubEdges, _)): _*)
+
   property("stronglyConnectedComponents == Floyd-Warshall reference " +
     "across pivot batch sizes") = Prop.forAll(graphGen,
       Gen.oneOf(1, 2, 64)) { case ((n, es), pivots) =>
     val edges = es.map { case (a, b) => (s"n$a", s"n$b") }
-    val simple = edges.filter { case (a, b) => a != b }.distinct
-    (simple.nonEmpty) ==> {
-      import spark.implicits._
-      val got = graft.ops.WebGraph.stronglyConnectedComponents(
-          edges.toDF("src", "dst"), "src", "dst",
-          pivotsPerRound = pivots, maxDepth = 32, maxRounds = 64)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      val want = refScc(simple)
-      (got == want) :| s"pivots=$pivots got=$got want=$want edges=$simple"
-    }
-  }
+    edges.exists { case (a, b) => a != b } ==>
+      sccMatchesReference(edges, pivots)
+  } && Prop.secure(hubSccMatches)
 
   property("SCC hand-computed bowtie: triangle -> 2-cycle -> singleton " +
     "tail; deep-graph maxDepth guard raises") = Prop.secure {
@@ -116,8 +136,22 @@ object Round17Props extends Properties("Round17Ops") {
     // disconnected 2-cycle by its own min member, singletons by self
     val compOk = got("c1")._1 == "c0" && got("x2")._1 == "x1" &&
       got("t1")._1 == "t1"
+    // the hub graph: both reach phases run through hubs above the
+    // shortcut budget (h for the core passes, t for the core-free ones)
+    val hub = graft.ops.WebGraph.bowtieDecomposition(
+        hubEdges.toDF("src", "dst"), "src", "dst",
+        pivotsPerRound = 1, maxDepth = 16, maxRounds = 16)
+      .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2)))
+      .toMap
+    val core = Seq("h", "c0", "c1", "c2")
+    val hubWant = (core.map(_ -> ("c0", "core")) ++
+      (0 until 6).flatMap(i => Seq(s"m$i" -> (s"m$i", "in"),
+        s"l$i" -> (s"l$i", "out"))) ++
+      Seq("t" -> ("t", "tubes"), "d" -> ("d", "tendrils"),
+        "x" -> ("x", "disconnected"), "y" -> ("y", "disconnected"))).toMap
     (regionsOk :| s"regions: ${got.view.mapValues(_._2).toMap}") &&
-      (compOk :| s"components: ${got.view.mapValues(_._1).toMap}")
+      (compOk :| s"components: ${got.view.mapValues(_._1).toMap}") &&
+      ((hub == hubWant) :| s"hub graph: $hub")
   }
 
   property("sccCondense: quotient DAG of the hand bowtie; powerLawAlpha " +
