@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -17,31 +18,25 @@ object Sinks {
 
   /** The session catalog is in-memory: a table written by a PREVIOUS JVM
     * leaves its warehouse location on disk but no catalog entry, and a
-    * naive saveAsTable then fails with LOCATION_ALREADY_EXISTS. Resolve
-    * per the intended save mode: re-register the orphan as a table (append
-    * keeps history) or remove it (truncate).
+    * naive saveAsTable or CREATE TABLE then fails with
+    * LOCATION_ALREADY_EXISTS. Returns that orphan location, if any; the
+    * callers resolve it per their save mode: re-register it as a table
+    * (append and create keep history) or remove it (truncate).
     */
-  private def defaultPath(spark: SparkSession, table: String) = {
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    new org.apache.hadoop.fs.Path(spark.sessionState.catalog.defaultTablePath(ident))
-  }
-
-  private def adoptOrphanLocation(spark: SparkSession, table: String, keep: Boolean): Unit = {
-    if (!spark.catalog.tableExists(table)) {
-      val path = defaultPath(spark, table)
+  private def orphanLocation(spark: SparkSession, table: String): Option[(Path, FileSystem)] =
+    if (spark.catalog.tableExists(table)) None
+    else {
+      val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
+      val path = new Path(spark.sessionState.catalog.defaultTablePath(ident))
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(path)) {
-        if (keep) spark.sql(s"CREATE TABLE $table USING parquet LOCATION '$path'")
-        else fs.delete(path, true)
-      }
+      if (fs.exists(path)) Some((path, fs)) else None
     }
-  }
 
   /** K1 — truncate-and-load with create-if-needed (`WRITE_TRUNCATE`:
     * a stale location from an earlier run is removed, as truncate implies).
     */
   def overwriteTable(df: DataFrame, table: String, partitionBy: Seq[String] = Nil): Unit = {
-    adoptOrphanLocation(df.sparkSession, table, keep = false)
+    orphanLocation(df.sparkSession, table).foreach { case (p, fs) => fs.delete(p, true) }
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).saveAsTable(table)
   }
@@ -50,15 +45,10 @@ object Sinks {
     * earlier run is re-registered first so history accumulates across runs.
     */
   def appendTable(df: DataFrame, table: String): Unit = {
-    adoptOrphanLocation(df.sparkSession, table, keep = true)
+    orphanLocation(df.sparkSession, table).foreach { case (path, _) =>
+      df.sparkSession.sql(s"CREATE TABLE $table USING parquet LOCATION '$path'")
+    }
     df.write.mode(SaveMode.Append).saveAsTable(table)
-  }
-
-  /** Path-based parquet sink for warehouse-less runs. */
-  def writeParquet(df: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite,
-                   partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(mode)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
   }
 
   /** K5 — `CREATE DATABASE IF NOT EXISTS` (`dataflow.py:452-460`). */
@@ -66,10 +56,13 @@ object Sinks {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
 
   /** K4 — idempotent typed empty-table creation (`airflow.py:57-84`,
-    * `exists_ok=True`).
+    * `exists_ok=True`). An orphan location from an earlier run becomes the
+    * declared table's LOCATION, keeping its rows as [[appendTable]] does.
     */
-  def ensureTable(spark: SparkSession, table: String, schema: StructType): Unit =
-    spark.sql(s"CREATE TABLE IF NOT EXISTS $table (${schema.toDDL}) USING parquet")
+  def ensureTable(spark: SparkSession, table: String, schema: StructType): Unit = {
+    val location = orphanLocation(spark, table).fold("") { case (p, _) => s"LOCATION '$p'" }
+    spark.sql(s"CREATE TABLE IF NOT EXISTS $table (${schema.toDDL}) USING parquet $location")
+  }
 
   /** The declared-but-uninstantiated `BigQueryCheckOperator`
     * (`airflow.py:7`; SURVEY.md §2.8): a post-load SQL assertion — the first

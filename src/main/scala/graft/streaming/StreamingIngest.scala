@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
@@ -8,7 +9,7 @@ import graft.etl.{CovidTransform, Schemas}
 /** File-arrival micro-batching (SURVEY.md §2.9): the reference's
   * sensor-poll + per-file reprocess + append loop
   * (`/root/reference/airflow.py:47-54`, `README.md:157-166`) as a Structured
-  * Streaming file source with `Trigger.AvailableNow` + `foreachBatch`.
+  * Streaming file source drained by one commit fence, [[fenced]].
   *
   * File-source checkpointing gives exactly-once per-file processing — the
   * property the reference approximates with sensor + move-to-processed.
@@ -18,49 +19,116 @@ import graft.etl.{CovidTransform, Schemas}
 object StreamingIngest {
 
   /** Watch `inputDir` for covid CSVs; clean each micro-batch and append to
-    * `outputPath` parquet. Blocks until all currently-available files are
-    * processed. Returns rows written across this invocation.
+    * `outputPath` parquet under the commit fence ([[fenced]]). Blocks until
+    * all currently-available files are processed. Returns rows written
+    * across this invocation.
+    *
+    * A batch is written to an `_`-prefixed staging directory, then its
+    * part files are renamed into the output as `b<batchId>-<part>`. A
+    * replay that crashed before the marker first deletes the files its
+    * batch id published, so each batch is in the output once.
     */
   def runAvailableNow(spark: SparkSession, inputDir: String, outputPath: String,
                       checkpointDir: String): Long = {
-    val written = new java.util.concurrent.atomic.AtomicLong(0L)
     val raw = spark.readStream
       .option("header", "true")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .schema(Schemas.covidRaw)
       .csv(inputDir)
-    val q = raw.writeStream
+    val (out, fs) = hadoopFs(spark, outputPath)
+    fenced(raw, outputPath, checkpointDir) { (batch, batchId) =>
+      fs.globStatus(new Path(out, s"b$batchId-*"))
+        .foreach(st => fs.delete(st.getPath, false))
+      val stage = new Path(out, s"_graft_stage_b$batchId")
+      val counted = graft.etl.Audit.observed(CovidTransform.clean(batch))
+      counted.df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+      fs.listStatus(stage).map(_.getPath).filter(p => isDataFile(p.getName)).foreach { p =>
+        val dest = new Path(out, s"b$batchId-${p.getName}")
+        require(fs.rename(p, dest), s"runAvailableNow: rename failed: $p -> $dest")
+      }
+      fs.delete(stage, true)
+      (counted.recordCount, nothingAfter)
+    }
+  }
+
+  /** The micro-batch commit fence every sink here runs under. `stream`
+    * drains under an AvailableNow trigger against `checkpointDir`, and
+    * batch `b` runs `body` only while the marker
+    * `<targetDir>/_graft_commits/<b>` is absent:
+    *   - `body` writes the batch and returns what it applied plus a
+    *     post-commit step (version retention, or [[nothingAfter]]);
+    *   - the marker is created after those writes, then the step runs.
+    *
+    * A batch the checkpoint replays after its marker was written applies
+    * nothing. A crash between a body's writes and its marker replays the
+    * body, which each sink makes idempotent in its own layout: id
+    * anti-joins, uncommitted version directories a reader ignores, or
+    * batch-named files.
+    *
+    * The markers use the CHECKPOINT's batch numbering. Restarting against
+    * an existing target with a fresh checkpoint restarts ids at 0, and the
+    * old markers would skip those batches: a new checkpoint needs a new
+    * target, or cleared markers when the input is re-delivered from
+    * scratch.
+    *
+    * Blocks until available input drains. Returns the sum of what the
+    * bodies applied (replays add nothing).
+    */
+  private def fenced(stream: DataFrame, targetDir: String, checkpointDir: String)(
+      body: (DataFrame, Long) => (Long, () => Unit)): Long = {
+    val (targetPath, fs) = hadoopFs(stream.sparkSession, targetDir)
+    val applied = new java.util.concurrent.atomic.AtomicLong(0L)
+    stream.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val clean = CovidTransform.clean(batch)
-        val counted = graft.etl.Audit.observed(clean)
-        graft.etl.Sinks.writeParquet(counted.df, outputPath, SaveMode.Append)
-        written.addAndGet(counted.recordCount)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val marker = new Path(commitsDir(targetPath), batchId.toString)
+        if (!fs.exists(marker)) {
+          val (n, afterCommit) = body(batch, batchId)
+          fs.mkdirs(marker.getParent)
+          fs.createNewFile(marker)
+          applied.addAndGet(n)
+          afterCommit()
+        }
         ()
       }
       .start()
-    q.awaitTermination()
-    written.get()
+      .awaitTermination()
+    applied.get()
   }
+
+  /** The post-commit step of a sink that keeps no versions. */
+  private val nothingAfter: () => Unit = () => ()
+
+  private def commitsDir(targetPath: Path) = new Path(targetPath, "_graft_commits")
+
+  /** Batch ids whose [[fenced]] marker exists under `targetPath`. */
+  private def committedVersions(fs: FileSystem, targetPath: Path): Seq[Long] = {
+    val dir = commitsDir(targetPath)
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.flatMap(_.getPath.getName.toLongOption)
+  }
+
+  private def latestCommittedVersion(fs: FileSystem, statePath: Path): Option[Long] =
+    committedVersions(fs, statePath).maxOption
 
   /** Partition-column name of the sink's bucketed layout. */
   val bucketCol = "__kb"
 
   private def hadoopFs(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p, org.apache.hadoop.fs.FileSystem.get(
-      p.toUri, spark.sparkContext.hadoopConfiguration))
+    val p = new Path(dir)
+    (p, FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration))
   }
+
+  private def isDataFile(name: String) = !name.startsWith("_") && !name.startsWith(".")
 
   /** True iff the target holds actual DATA files (not just a pre-created
     * directory or a crashed first batch's `_temporary` leftovers — a bare
     * `exists()` probe made `spark.read.parquet` throw "unable to infer
     * schema" forever in those states).
     */
-  private def targetHasData(fs: org.apache.hadoop.fs.FileSystem,
-                            targetPath: org.apache.hadoop.fs.Path): Boolean =
+  private def targetHasData(fs: FileSystem, targetPath: Path): Boolean =
     planeHasData(fs, targetPath, bucketCol)
 
   /** Incremental dedup-append sink: each micro-batch is deduped within
@@ -83,18 +151,15 @@ object StreamingIngest {
     *     so a micro-batch with b distinct buckets scans b/nBuckets of the
     *     corpus keys instead of all of them. Size `nBuckets` ≈ corpus
     *     keys / 4M so a pruned bucket's key column stays a few tens of MB.
-    *   - A committed-batch marker (`_graft_commits/<batchId>`) makes a
-    *     REPLAYED micro-batch (restart after the append but after the
-    *     marker write) skip entirely; a replay that crashed BETWEEN append
-    *     and marker still re-drops its keys through the anti-join. Together
-    *     with the file-source checkpoint this is exactly-once at key level.
+    *   - Under the commit fence ([[fenced]]) a replay that crashed
+    *     between append and marker re-drops its keys through the
+    *     anti-join: exactly-once at key level.
     *
     * The sink OWNS the target layout from birth (create target and
     * checkpoint together); readers see the extra `__kb` partition column
     * and can ignore it — or reuse it for pruned key joins. Maintenance:
     * [[compactDedupTarget]] folds accumulated small files per bucket.
     *
-    * Blocks until all currently-available input is drained (AvailableNow).
     * Returns rows appended across this invocation.
     */
   def dedupAppendSink(spark: SparkSession, stream: DataFrame, keyCol: String,
@@ -103,61 +168,45 @@ object StreamingIngest {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     require(nBuckets > 0, "nBuckets must be positive")
-    val appended = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Probe via Hadoop FS, not java.io.File: the target can live on any
-        // filesystem Spark can write (hdfs://, s3a://, ...), where a local
-        // File.exists() is always false and would silently skip the
-        // anti-join — breaking the key-level idempotence contract.
-        val (targetPath, fs) = hadoopFs(spark, targetDir)
-        val commitsDir = new org.apache.hadoop.fs.Path(targetPath, "_graft_commits")
-        val marker = new org.apache.hadoop.fs.Path(commitsDir, batchId.toString)
-        if (!fs.exists(marker)) {
-          val w = Window.partitionBy(col(keyCol)).orderBy(col(orderCol))
-          // NULL keys: a plain equi anti-join never matches null = null —
-          // a null-keyed row would re-insert EVERY batch (the upsert
-          // null-key trap, streaming edition). The anti-join therefore
-          // compares null-safely (<=>), so at most one null-keyed row
-          // ever lands in the target, like any other key. (xxhash64(NULL)
-          // evaluates to its seed, not NULL — the coalesce below is a
-          // belt-and-braces guard, not the null mechanism.)
-          val batchDeduped = batch
-            .withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn")
-            .withColumn(bucketCol, coalesce(
-              pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong)), lit(0L)))
-            .persist() // bucket discovery + anti-join read it once each
-          try {
-            val fresh =
-              if (targetHasData(fs, targetPath)) {
-                // ≤ nBuckets small longs — bounded driver traffic by design
-                val bucketsHit = batchDeduped.select(bucketCol).distinct()
-                  .collect().map(_.getLong(0)).toSeq
-                val existingKeys = spark.read.parquet(targetDir)
-                  .where(col(bucketCol).isin(bucketsHit: _*)) // partition-pruned
-                  .select(col(keyCol).as("__existing_key"))
-                batchDeduped.join(existingKeys,
-                  batchDeduped(keyCol) <=> col("__existing_key"), "left_anti")
-              } else batchDeduped
-            fresh.persist() // one computation for the count AND the append
-            try {
-              val n = fresh.count()
-              if (n > 0) fresh.write.mode(SaveMode.Append)
-                .partitionBy(bucketCol).parquet(targetDir)
-              appended.addAndGet(n)
-            } finally fresh.unpersist()
-          } finally batchDeduped.unpersist()
-          fs.mkdirs(commitsDir)
-          fs.createNewFile(marker)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    appended.get()
+    // Hadoop FS, not java.io.File: the target can live on any filesystem
+    // Spark can write (hdfs://, s3a://, ...)
+    val (targetPath, fs) = hadoopFs(spark, targetDir)
+    fenced(stream, targetDir, checkpointDir) { (batch, _) =>
+      val w = Window.partitionBy(col(keyCol)).orderBy(col(orderCol))
+      // NULL keys: a plain equi anti-join never matches null = null —
+      // a null-keyed row would re-insert EVERY batch (the upsert
+      // null-key trap, streaming edition). The anti-join therefore
+      // compares null-safely (<=>), so at most one null-keyed row
+      // ever lands in the target, like any other key. (xxhash64(NULL)
+      // evaluates to its seed, not NULL — the coalesce below is a
+      // belt-and-braces guard, not the null mechanism.)
+      val batchDeduped = batch
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+        .withColumn(bucketCol, coalesce(
+          pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong)), lit(0L)))
+        .persist() // bucket discovery + anti-join read it once each
+      try {
+        val fresh =
+          if (targetHasData(fs, targetPath)) {
+            // ≤ nBuckets small longs — bounded driver traffic by design
+            val bucketsHit = batchDeduped.select(bucketCol).distinct()
+              .collect().map(_.getLong(0)).toSeq
+            val existingKeys = spark.read.parquet(targetDir)
+              .where(col(bucketCol).isin(bucketsHit: _*)) // partition-pruned
+              .select(col(keyCol).as("__existing_key"))
+            batchDeduped.join(existingKeys,
+              batchDeduped(keyCol) <=> col("__existing_key"), "left_anti")
+          } else batchDeduped
+        fresh.persist() // one computation for the count AND the append
+        try {
+          val n = fresh.count()
+          if (n > 0) fresh.write.mode(SaveMode.Append)
+            .partitionBy(bucketCol).parquet(targetDir)
+          (n, nothingAfter)
+        } finally fresh.unpersist()
+      } finally batchDeduped.unpersist()
+    }
   }
 
   /** Offline small-file compaction for a [[dedupAppendSink]] target: every
@@ -199,18 +248,16 @@ object StreamingIngest {
     import org.apache.spark.sql.functions._
     require(newBuckets > 0, "newBuckets must be positive")
     val (targetPath, fs) = hadoopFs(spark, targetDir)
-    val tmp = new org.apache.hadoop.fs.Path(targetPath, "_graft_rebucket_tmp")
-    val old = new org.apache.hadoop.fs.Path(targetPath, "_graft_rebucket_old")
+    val tmp = new Path(targetPath, "_graft_rebucket_tmp")
+    val old = new Path(targetPath, "_graft_rebucket_old")
     // parked = ALL original buckets are under old/ (lift may have started);
     // commit = the lift completed (only cleanup remained)
-    val parked = new org.apache.hadoop.fs.Path(targetPath, "_graft_rebucket_parked")
-    val commit = new org.apache.hadoop.fs.Path(targetPath, "_graft_rebucket_commit")
-    def mustRename(src: org.apache.hadoop.fs.Path,
-                   dst: org.apache.hadoop.fs.Path): Unit =
+    val parked = new Path(targetPath, "_graft_rebucket_parked")
+    val commit = new Path(targetPath, "_graft_rebucket_commit")
+    def mustRename(src: Path, dst: Path): Unit =
       require(fs.rename(src, dst), s"rename failed: $src -> $dst")
-    def bucketDirs(p: org.apache.hadoop.fs.Path) =
-      fs.globStatus(new org.apache.hadoop.fs.Path(p, s"$bucketCol=*"))
-        .filter(_.isDirectory)
+    def bucketDirs(p: Path) =
+      fs.globStatus(new Path(p, s"$bucketCol=*")).filter(_.isDirectory)
 
     // ---- recovery from a crashed earlier attempt (see scaladoc) ----
     if (fs.exists(commit)) {
@@ -227,7 +274,7 @@ object StreamingIngest {
       // phase-1 crash parks a SUBSET: restore exactly the parked dirs
       // (a bucket dir is either parked or still in the target, never both)
       if (fs.exists(old)) bucketDirs(old).foreach(d =>
-        mustRename(d.getPath, new org.apache.hadoop.fs.Path(targetPath, d.getPath.getName)))
+        mustRename(d.getPath, new Path(targetPath, d.getPath.getName)))
       fs.delete(old, true); fs.delete(parked, false)
     }
     fs.delete(tmp, true) // stale partial write, if any
@@ -242,10 +289,10 @@ object StreamingIngest {
     // swap: park every old bucket dir, fence, lift the new ones, fence
     fs.mkdirs(old)
     bucketDirs(targetPath).foreach(d =>
-      mustRename(d.getPath, new org.apache.hadoop.fs.Path(old, d.getPath.getName)))
+      mustRename(d.getPath, new Path(old, d.getPath.getName)))
     fs.createNewFile(parked)
     bucketDirs(tmp).foreach(d =>
-      mustRename(d.getPath, new org.apache.hadoop.fs.Path(targetPath, d.getPath.getName)))
+      mustRename(d.getPath, new Path(targetPath, d.getPath.getName)))
     fs.createNewFile(commit)
     fs.delete(old, true); fs.delete(parked, false)
     fs.delete(commit, false); fs.delete(tmp, true)
@@ -256,8 +303,7 @@ object StreamingIngest {
                          targetFileBytes: Long = 128L * 1024 * 1024): Int = {
     val (targetPath, fs) = hadoopFs(spark, targetDir)
     if (!fs.exists(targetPath)) return 0
-    val bucketDirs = fs.globStatus(
-      new org.apache.hadoop.fs.Path(targetPath, s"$bucketCol=*"))
+    val bucketDirs = fs.globStatus(new Path(targetPath, s"$bucketCol=*"))
       .filter(_.isDirectory)
     var compacted = 0
     bucketDirs.foreach { d =>
@@ -268,15 +314,13 @@ object StreamingIngest {
       val totalBytes = dataFiles.map(_.getLen).sum
       val wantFiles = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
       if (dataFiles.length > wantFiles) {
-        val tmp = new org.apache.hadoop.fs.Path(
-          targetPath, s"_graft_compact_tmp_${d.getPath.getName}")
-        val trash = new org.apache.hadoop.fs.Path(
-          targetPath, s"_graft_compact_old_${d.getPath.getName}")
+        val tmp = new Path(targetPath, s"_graft_compact_tmp_${d.getPath.getName}")
+        val trash = new Path(targetPath, s"_graft_compact_old_${d.getPath.getName}")
         // rewrite this bucket's rows (no partition column inside the files)
         spark.read.parquet(d.getPath.toString)
           .coalesce(wantFiles)
           .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        fs.delete(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"), false)
+        fs.delete(new Path(tmp, "_SUCCESS"), false)
         // swap: old bucket aside, tmp in. Crash between the renames leaves
         // the bucket recoverable under _graft_compact_old_* (underscore-
         // prefixed → invisible to partition discovery).
@@ -289,40 +333,17 @@ object StreamingIngest {
     compacted
   }
 
-  /** Band-geometry marker for a near-dup target: the probes only match
-    * the stored planes if (numHashes, shingleSize, bands, nBuckets) are
-    * IDENTICAL to the ones the planes were built with — a mismatched run
-    * would silently lose recall (probes hash into cells the planes never
-    * populated). First writer records the geometry; every later entry
-    * point requires an exact match.
+  /** A target's layout contract, stored in `<targetPath>/<markerName>`:
+    * the first writer records `geo`, every later entry point requires an
+    * exact match. The sinks' probes and merges find stored state by hash
+    * bucket and band geometry; a run with other parameters would hash
+    * into cells the target never populated, silently losing recall or
+    * serving stale duplicates from buckets its keys moved out of.
     */
-  private def checkOrWriteGeometry(fs: org.apache.hadoop.fs.FileSystem,
-                                   targetPath: org.apache.hadoop.fs.Path,
-                                   numHashes: Int, shingleSize: Int,
-                                   bands: Int, nBuckets: Int,
-                                   containment: Boolean): Unit =
-    checkOrWriteMarker(fs, targetPath, "_graft_geometry", "near-dup",
-      s"numHashes=$numHashes,shingleSize=$shingleSize,bands=$bands," +
-        s"nBuckets=$nBuckets,containment=${if (containment) "on" else "off"}")
-
-  /** [[upsertSink]]'s layout contract: `bucket = pmod(xxhash64(keyCol),
-    * nBuckets)` decides which version directory serves a key — a run
-    * with a different nBuckets (or keyCol) would remap keys to other
-    * buckets, merge only the NEW buckets, and leave stale versions of
-    * moved keys serving duplicates from the old ones. First writer
-    * records the layout; every later run must match exactly.
-    */
-  private def checkOrWriteUpsertGeometry(fs: org.apache.hadoop.fs.FileSystem,
-                                         targetPath: org.apache.hadoop.fs.Path,
-                                         keyCol: String, nBuckets: Int): Unit =
-    checkOrWriteMarker(fs, targetPath, "_graft_upsert_geometry", "upsert",
-      s"keyCol=$keyCol,nBuckets=$nBuckets")
-
-  private def checkOrWriteMarker(fs: org.apache.hadoop.fs.FileSystem,
-                                 targetPath: org.apache.hadoop.fs.Path,
+  private def checkOrWriteMarker(fs: FileSystem, targetPath: Path,
                                  markerName: String, kind: String,
                                  geo: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(targetPath, markerName)
+    val marker = new Path(targetPath, markerName)
     if (fs.exists(marker)) {
       val in = fs.open(marker)
       val stored = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
@@ -362,8 +383,8 @@ object StreamingIngest {
     * frames can be released before the caller consumes the drop set.
     */
   private def containmentDropIds(spark: SparkSession,
-                                 shinglesDir: org.apache.hadoop.fs.Path,
-                                 docshDir: org.apache.hadoop.fs.Path,
+                                 shinglesDir: Path,
+                                 docshDir: Path,
                                  fresh: DataFrame, idCol: String, textCol: String,
                                  shingleSize: Int, minContainment: Double,
                                  nBuckets: Int): DataFrame = {
@@ -455,14 +476,11 @@ object StreamingIngest {
   /** True iff a partitioned plane under `dir` holds actual data files
     * (generalized [[targetHasData]] for an arbitrary partition column).
     */
-  private def planeHasData(fs: org.apache.hadoop.fs.FileSystem,
-                           path: org.apache.hadoop.fs.Path,
+  private def planeHasData(fs: FileSystem,
+                           path: Path,
                            partCol: String): Boolean =
-    fs.exists(path) && fs.globStatus(
-      new org.apache.hadoop.fs.Path(path, s"$partCol=*/*")).exists { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
+    fs.exists(path) && fs.globStatus(new Path(path, s"$partCol=*/*"))
+      .exists(st => st.isFile && isDataFile(st.getPath.getName))
 
   /** Streaming NEAR-duplicate dedup-append sink — [[dedupAppendSink]]'s
     * missing content tier: the exact sink drops only identical KEYS, this
@@ -513,24 +531,14 @@ object StreamingIngest {
     * verify LSH candidates against fetched signatures, anti-join
     * survivors' ids against `docs/` (bucket-pruned, the
     * [[dedupAppendSink]] idempotence contract), then append bands +
-    * signatures + docs and fence with a `_graft_commits/<batchId>`
-    * marker. Replayed committed batches skip; a replay that crashed
-    * mid-append re-drops its documents through the id anti-join and the
-    * band planes tolerate duplicate rows (collision semantics are
+    * signatures + docs under the commit fence ([[fenced]]). A replay that
+    * crashed mid-append re-drops its documents through the id anti-join
+    * and the band planes tolerate duplicate rows (collision semantics are
     * set-like — verified via max-per-id signature fetch). All id
     * comparisons are NULL-SAFE (`<=>`): a null-id document dedups like
     * any other key instead of re-inserting every batch.
     *
-    * Checkpoint-target coupling (shared by every marker-fenced sink
-    * here): the markers encode the CHECKPOINT's batch numbering.
-    * Restarting a stream against an existing target with a FRESH
-    * checkpoint restarts batch ids at 0 and the old markers would
-    * silently skip them — a new checkpoint requires a new target (or
-    * clearing `_graft_commits` when the input is also re-delivered from
-    * scratch, which the dedup planes make safe).
-    *
-    * Blocks until available input drains (AvailableNow). Returns
-    * documents appended across this invocation.
+    * Returns documents appended across this invocation.
     */
   def nearDupAppendSink(spark: SparkSession, stream: DataFrame,
                         idCol: String, textCol: String, targetDir: String,
@@ -547,211 +555,192 @@ object StreamingIngest {
     minContainment.foreach(t => require(t > 0.0 && t <= 1.0,
       "minContainment must be in (0, 1]"))
     val rowsPerBand = numHashes / bands
-    val appended = new java.util.concurrent.atomic.AtomicLong(0L)
-    locally {
-      val (targetPath, fs) = hadoopFs(spark, targetDir)
-      checkOrWriteGeometry(fs, targetPath, numHashes, shingleSize, bands,
-        nBuckets, minContainment.isDefined)
-    }
-
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (targetPath, fs) = hadoopFs(spark, targetDir)
-        val docsDir = new org.apache.hadoop.fs.Path(targetPath, "docs")
-        val bandsDir = new org.apache.hadoop.fs.Path(targetPath, "bands")
-        val sigsDir = new org.apache.hadoop.fs.Path(targetPath, "sigs")
-        val shinglesDir = new org.apache.hadoop.fs.Path(targetPath, "shingles")
-        val docshDir = new org.apache.hadoop.fs.Path(targetPath, "docsh")
-        val commitsDir = new org.apache.hadoop.fs.Path(targetPath, "_graft_commits")
-        val marker = new org.apache.hadoop.fs.Path(commitsDir, batchId.toString)
-        if (!fs.exists(marker)) {
-          // ---- within-batch: exact winner per fingerprint, then greedy
-          // near, then (containment tier only) greedy contained-drop so a
-          // short doc quoted inside a same-batch longer doc resolves here
-          val wExact = Window
-            .partitionBy(TextOps.fingerprintMd5(col(textCol))).orderBy(col(idCol))
-          val batchExact = batch.withColumn("__rn", row_number().over(wExact))
-            .filter(col("__rn") === 1).drop("__rn")
-          val batchNear = Dedup.dropNearDuplicates(batchExact, idCol, textCol,
-            numHashes, shingleSize, bands, minJaccard)
-          val batchUnique = minContainment.fold(batchNear)(t =>
-            Dedup.dropContained(batchNear, idCol, textCol, shingleSize, t))
-            .persist()
-          try {
-            // signatures computed ONCE per batch, reused by the band
-            // plane, the verification join, and the sigs append
-            val batchSigs = Dedup.minhashSignatures(batchUnique,
-              idCol, textCol, numHashes, shingleSize).persist()
-            val batchBands = nearDupBandRows(idCol, textCol, batchSigs,
-                batchUnique, bands, rowsPerBand, nBuckets)
-              .persist()
-            var hitsRef: Option[DataFrame] = None
-            try {
-              // ---- corpus probe: partition-pruned band collision candidates
-              val dropIds =
-                if (planeHasData(fs, bandsDir, "__bb")) {
-                  // ≤ nBuckets small longs — bounded driver traffic by design
-                  val bb = batchBands.select("__bb").distinct()
-                    .collect().map(_.getLong(0)).toSeq
-                  val stored = spark.read.parquet(bandsDir.toString)
-                    .where(col("__bb").isin(bb: _*)) // partition-pruned
-                    .select(col("band"), col("bucket"),
-                      col(idCol).as("__cid"), col("fp").as("__cfp"))
-                  // skinny + persisted: every downstream branch (exact
-                  // drops, sb collect, verification, fresh count) reuses
-                  // this join instead of re-running the probe
-                  val hits = batchBands
-                    .join(stored, Seq("band", "bucket"))
-                    // a torn replay may have appended THIS batch's own
-                    // band rows already (bands plane is written first) —
-                    // a doc must never collide with itself; null-safe so
-                    // a null-id doc doesn't slip past as "not equal"
-                    .filter(!(col(idCol) <=> col("__cid")))
-                    .select(col(idCol), col("__cid"), col("band"),
-                      col("fp"), col("__cfp"))
-                    .persist()
-                  hitsRef = Some(hits)
-                  // fingerprint pseudo-band: exact copy — confirmed on
-                  // the 128-bit md5, not the 64-bit bucket hash;
-                  // null-safe so a null-text doc exact-dedups against a
-                  // stored null-text doc instead of re-appending forever
-                  val exactDrops = hits.filter(col("band") === -1 &&
-                      (col("fp") <=> col("__cfp")))
+    val (targetPath, fs) = hadoopFs(spark, targetDir)
+    checkOrWriteMarker(fs, targetPath, "_graft_geometry", "near-dup",
+      s"numHashes=$numHashes,shingleSize=$shingleSize,bands=$bands," +
+        s"nBuckets=$nBuckets,containment=${if (minContainment.isDefined) "on" else "off"}")
+    val docsDir = new Path(targetPath, "docs")
+    val bandsDir = new Path(targetPath, "bands")
+    val sigsDir = new Path(targetPath, "sigs")
+    val shinglesDir = new Path(targetPath, "shingles")
+    val docshDir = new Path(targetPath, "docsh")
+    fenced(stream, targetDir, checkpointDir) { (batch, _) =>
+      // ---- within-batch: exact winner per fingerprint, then greedy
+      // near, then (containment tier only) greedy contained-drop so a
+      // short doc quoted inside a same-batch longer doc resolves here
+      val wExact = Window
+        .partitionBy(TextOps.fingerprintMd5(col(textCol))).orderBy(col(idCol))
+      val batchExact = batch.withColumn("__rn", row_number().over(wExact))
+        .filter(col("__rn") === 1).drop("__rn")
+      val batchNear = Dedup.dropNearDuplicates(batchExact, idCol, textCol,
+        numHashes, shingleSize, bands, minJaccard)
+      val batchUnique = minContainment.fold(batchNear)(t =>
+        Dedup.dropContained(batchNear, idCol, textCol, shingleSize, t))
+        .persist()
+      try {
+        // signatures computed ONCE per batch, reused by the band
+        // plane, the verification join, and the sigs append
+        val batchSigs = Dedup.minhashSignatures(batchUnique,
+          idCol, textCol, numHashes, shingleSize).persist()
+        val batchBands = nearDupBandRows(idCol, textCol, batchSigs,
+            batchUnique, bands, rowsPerBand, nBuckets)
+          .persist()
+        var hitsRef: Option[DataFrame] = None
+        try {
+          // ---- corpus probe: partition-pruned band collision candidates
+          val dropIds =
+            if (planeHasData(fs, bandsDir, "__bb")) {
+              // ≤ nBuckets small longs — bounded driver traffic by design
+              val bb = batchBands.select("__bb").distinct()
+                .collect().map(_.getLong(0)).toSeq
+              val stored = spark.read.parquet(bandsDir.toString)
+                .where(col("__bb").isin(bb: _*)) // partition-pruned
+                .select(col("band"), col("bucket"),
+                  col(idCol).as("__cid"), col("fp").as("__cfp"))
+              // skinny + persisted: every downstream branch (exact
+              // drops, sb collect, verification, fresh count) reuses
+              // this join instead of re-running the probe
+              val hits = batchBands
+                .join(stored, Seq("band", "bucket"))
+                // a torn replay may have appended THIS batch's own
+                // band rows already (bands plane is written first) —
+                // a doc must never collide with itself; null-safe so
+                // a null-id doc doesn't slip past as "not equal"
+                .filter(!(col(idCol) <=> col("__cid")))
+                .select(col(idCol), col("__cid"), col("band"),
+                  col("fp"), col("__cfp"))
+                .persist()
+              hitsRef = Some(hits)
+              // fingerprint pseudo-band: exact copy — confirmed on
+              // the 128-bit md5, not the 64-bit bucket hash;
+              // null-safe so a null-text doc exact-dedups against a
+              // stored null-text doc instead of re-appending forever
+              val exactDrops = hits.filter(col("band") === -1 &&
+                  (col("fp") <=> col("__cfp")))
+                .select(col(idCol)).distinct()
+              // LSH candidates: verify est_jaccard against the stored
+              // signatures of JUST the colliding corpus ids
+              val cands = hits.filter(col("band") =!= -1)
+                .select(col(idCol), col("__cid")).distinct()
+              val sb = cands
+                .select(hashBucket(nBuckets, col("__cid")).as("__sb"))
+                .distinct().collect().map(_.getLong(0)).toSeq
+              val nearDrops =
+                if (sb.isEmpty) exactDrops.limit(0)
+                else {
+                  // max-per-id collapses duplicate sig rows a torn
+                  // replay may have appended (identical payloads)
+                  val corpusSigs = spark.read.parquet(sigsDir.toString)
+                    .where(col("__sb").isin(sb: _*)) // partition-pruned
+                    .groupBy(col(idCol).as("__cid"))
+                    .agg(max(col("signature")).as("__csig"))
+                  // null-safe: a null-id batch doc's candidates must
+                  // still verify (a USING join would silently skip
+                  // them and append a near copy)
+                  cands.join(batchSigs.withColumnRenamed(idCol, "__sigid"),
+                      col(idCol) <=> col("__sigid"))
+                    .join(corpusSigs, "__cid")
+                    .filter(graft.functions.ArrayMath
+                      .arrayEqCount(col("signature"), col("__csig"))
+                      .cast("double") / numHashes >= minJaccard)
                     .select(col(idCol)).distinct()
-                  // LSH candidates: verify est_jaccard against the stored
-                  // signatures of JUST the colliding corpus ids
-                  val cands = hits.filter(col("band") =!= -1)
-                    .select(col(idCol), col("__cid")).distinct()
-                  val sb = cands
-                    .select(hashBucket(nBuckets, col("__cid")).as("__sb"))
-                    .distinct().collect().map(_.getLong(0)).toSeq
-                  val nearDrops =
-                    if (sb.isEmpty) exactDrops.limit(0)
-                    else {
-                      // max-per-id collapses duplicate sig rows a torn
-                      // replay may have appended (identical payloads)
-                      val corpusSigs = spark.read.parquet(sigsDir.toString)
-                        .where(col("__sb").isin(sb: _*)) // partition-pruned
-                        .groupBy(col(idCol).as("__cid"))
-                        .agg(max(col("signature")).as("__csig"))
-                      // null-safe: a null-id batch doc's candidates must
-                      // still verify (a USING join would silently skip
-                      // them and append a near copy)
-                      cands.join(batchSigs.withColumnRenamed(idCol, "__sigid"),
-                          col(idCol) <=> col("__sigid"))
-                        .join(corpusSigs, "__cid")
-                        .filter(graft.functions.ArrayMath
-                          .arrayEqCount(col("signature"), col("__csig"))
-                          .cast("double") / numHashes >= minJaccard)
-                        .select(col(idCol)).distinct()
-                    }
-                  exactDrops.unionByName(nearDrops).distinct()
-                    .select(col(idCol).as("__did"))
-                } else batchUnique.select(col(idCol).as("__did")).limit(0)
-
-              val fresh0 = batchUnique
-                .join(dropIds, batchUnique(idCol) <=> col("__did"), "left_anti")
-                .withColumn("__kb", hashBucket(nBuckets, col(idCol)))
-              // id-level idempotence (torn-replay re-drop), bucket-pruned.
-              // Buckets collected from batchUnique (a SUPERSET of fresh0's
-              // — still a correct prune) so the collect doesn't force an
-              // extra evaluation of the un-persisted dropIds subtree.
-              val fresh =
-                if (planeHasData(fs, docsDir, "__kb")) {
-                  val kb = batchUnique
-                    .select(hashBucket(nBuckets, col(idCol)).as("__kb"))
-                    .distinct().collect().map(_.getLong(0)).toSeq
-                  if (kb.isEmpty) fresh0
-                  else fresh0.join(
-                    spark.read.parquet(docsDir.toString)
-                      .where(col("__kb").isin(kb: _*))
-                      .select(col(idCol).as("__eid")),
-                    fresh0(idCol) <=> col("__eid"), "left_anti")
-                } else fresh0
-              fresh.persist()
-              // ---- containment tier: drop batch docs whose shingle set
-              // is contained in a STORED doc (the LSH planes can't see
-              // these — Jaccard vs a much longer container is ≈ 0)
-              val survivors = minContainment match {
-                case Some(t) if planeHasData(fs, shinglesDir, "__shb") =>
-                  val cdrops = containmentDropIds(spark, shinglesDir,
-                    docshDir, fresh, idCol, textCol, shingleSize, t, nBuckets)
-                  fresh.join(cdrops, fresh(idCol) <=> cdrops("__cdid"),
-                    "left_anti").persist()
-                case _ => fresh
-              }
-              try {
-                val n = survivors.count()
-                if (n > 0) {
-                  // write order is a crash-safety invariant: bands, sigs
-                  // and the containment planes FIRST (duplicate rows from
-                  // a torn replay are tolerated — set-like collisions,
-                  // max-per-id sig/set fetch), docs LAST (the serving
-                  // plane whose id anti-join provides exactly-once). The
-                  // reverse order would let a crash strand committed docs
-                  // with no band rows — permanently invisible to future
-                  // near-dup probes. Band/sig rows are the PROBED frames
-                  // filtered to survivors — written rows are bit-identical
-                  // to what the probe spelling produces, by construction.
-                  val freshIds = survivors.select(col(idCol))
-                  batchBands
-                    .join(freshIds, batchBands(idCol) <=> freshIds(idCol), "left_semi")
-                    .write.mode(SaveMode.Append)
-                    .partitionBy("__bb").parquet(bandsDir.toString)
-                  batchSigs
-                    .join(freshIds, batchSigs(idCol) <=> freshIds(idCol), "left_semi")
-                    .withColumn("__sb", hashBucket(nBuckets, col(idCol)))
-                    .write.mode(SaveMode.Append)
-                    .partitionBy("__sb").parquet(sigsDir.toString)
-                  if (minContainment.isDefined) {
-                    // same spelling as the probe reads (containmentShingles)
-                    val survSets = Dedup.containmentShingles(survivors,
-                      idCol, textCol, shingleSize)
-                      .select(col("id").as(idCol), col("__shs")).persist()
-                    try {
-                      survSets.select(col(idCol), explode(col("__shs")).as("sh"))
-                        .withColumn("__shb", hashBucket(nBuckets, col("sh")))
-                        .write.mode(SaveMode.Append)
-                        .partitionBy("__shb").parquet(shinglesDir.toString)
-                      survSets
-                        .withColumn("__db", hashBucket(nBuckets, col(idCol)))
-                        .write.mode(SaveMode.Append)
-                        .partitionBy("__db").parquet(docshDir.toString)
-                    } finally survSets.unpersist()
-                  }
-                  survivors.write.mode(SaveMode.Append)
-                    .partitionBy("__kb").parquet(docsDir.toString)
                 }
-                appended.addAndGet(n)
-              } finally {
-                if (!(survivors eq fresh)) survivors.unpersist()
-                fresh.unpersist()
+              exactDrops.unionByName(nearDrops).distinct()
+                .select(col(idCol).as("__did"))
+            } else batchUnique.select(col(idCol).as("__did")).limit(0)
+
+          val fresh0 = batchUnique
+            .join(dropIds, batchUnique(idCol) <=> col("__did"), "left_anti")
+            .withColumn("__kb", hashBucket(nBuckets, col(idCol)))
+          // id-level idempotence (torn-replay re-drop), bucket-pruned.
+          // Buckets collected from batchUnique (a SUPERSET of fresh0's
+          // — still a correct prune) so the collect doesn't force an
+          // extra evaluation of the un-persisted dropIds subtree.
+          val fresh =
+            if (planeHasData(fs, docsDir, "__kb")) {
+              val kb = batchUnique
+                .select(hashBucket(nBuckets, col(idCol)).as("__kb"))
+                .distinct().collect().map(_.getLong(0)).toSeq
+              if (kb.isEmpty) fresh0
+              else fresh0.join(
+                spark.read.parquet(docsDir.toString)
+                  .where(col("__kb").isin(kb: _*))
+                  .select(col(idCol).as("__eid")),
+                fresh0(idCol) <=> col("__eid"), "left_anti")
+            } else fresh0
+          fresh.persist()
+          // ---- containment tier: drop batch docs whose shingle set
+          // is contained in a STORED doc (the LSH planes can't see
+          // these — Jaccard vs a much longer container is ≈ 0)
+          val survivors = minContainment match {
+            case Some(t) if planeHasData(fs, shinglesDir, "__shb") =>
+              val cdrops = containmentDropIds(spark, shinglesDir,
+                docshDir, fresh, idCol, textCol, shingleSize, t, nBuckets)
+              fresh.join(cdrops, fresh(idCol) <=> cdrops("__cdid"),
+                "left_anti").persist()
+            case _ => fresh
+          }
+          try {
+            val n = survivors.count()
+            if (n > 0) {
+              // write order is a crash-safety invariant: bands, sigs
+              // and the containment planes FIRST (duplicate rows from
+              // a torn replay are tolerated — set-like collisions,
+              // max-per-id sig/set fetch), docs LAST (the serving
+              // plane whose id anti-join provides exactly-once). The
+              // reverse order would let a crash strand committed docs
+              // with no band rows — permanently invisible to future
+              // near-dup probes. Band/sig rows are the PROBED frames
+              // filtered to survivors — written rows are bit-identical
+              // to what the probe spelling produces, by construction.
+              val freshIds = survivors.select(col(idCol))
+              batchBands
+                .join(freshIds, batchBands(idCol) <=> freshIds(idCol), "left_semi")
+                .write.mode(SaveMode.Append)
+                .partitionBy("__bb").parquet(bandsDir.toString)
+              batchSigs
+                .join(freshIds, batchSigs(idCol) <=> freshIds(idCol), "left_semi")
+                .withColumn("__sb", hashBucket(nBuckets, col(idCol)))
+                .write.mode(SaveMode.Append)
+                .partitionBy("__sb").parquet(sigsDir.toString)
+              if (minContainment.isDefined) {
+                // same spelling as the probe reads (containmentShingles)
+                val survSets = Dedup.containmentShingles(survivors,
+                  idCol, textCol, shingleSize)
+                  .select(col("id").as(idCol), col("__shs")).persist()
+                try {
+                  survSets.select(col(idCol), explode(col("__shs")).as("sh"))
+                    .withColumn("__shb", hashBucket(nBuckets, col("sh")))
+                    .write.mode(SaveMode.Append)
+                    .partitionBy("__shb").parquet(shinglesDir.toString)
+                  survSets
+                    .withColumn("__db", hashBucket(nBuckets, col(idCol)))
+                    .write.mode(SaveMode.Append)
+                    .partitionBy("__db").parquet(docshDir.toString)
+                } finally survSets.unpersist()
               }
-            } finally {
-              hitsRef.foreach(_.unpersist())
-              batchBands.unpersist()
-              batchSigs.unpersist()
+              survivors.write.mode(SaveMode.Append)
+                .partitionBy("__kb").parquet(docsDir.toString)
             }
-          } finally batchUnique.unpersist()
-          fs.mkdirs(commitsDir)
-          fs.createNewFile(marker)
+            (n, nothingAfter)
+          } finally {
+            if (!(survivors eq fresh)) survivors.unpersist()
+            fresh.unpersist()
+          }
+        } finally {
+          hitsRef.foreach(_.unpersist())
+          batchBands.unpersist()
+          batchSigs.unpersist()
         }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    appended.get()
+      } finally batchUnique.unpersist()
+    }
   }
 
   /** The surviving documents of a [[nearDupAppendSink]] target (the
     * `docs/` plane; `__kb` exposed for pruned keyed reads).
     */
   def readNearDupTarget(spark: SparkSession, targetDir: String): DataFrame =
-    spark.read.parquet(
-      new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(targetDir), "docs").toString)
+    spark.read.parquet(new Path(targetDir, "docs").toString)
 
   /** Bootstrap a [[nearDupAppendSink]] target from an EXISTING
     * (already-deduplicated) corpus — the operational entry point for
@@ -789,11 +778,12 @@ object StreamingIngest {
     for ((plane, pc) <- Seq("docs" -> "__kb", "bands" -> "__bb", "sigs" -> "__sb",
         "shingles" -> "__shb", "docsh" -> "__db"))
       require(!planeHasData(fs,
-        new org.apache.hadoop.fs.Path(targetPath, plane), pc),
+        new Path(targetPath, plane), pc),
         s"bootstrapNearDupTarget requires an empty target, found $plane under " +
           s"$targetDir (after a crashed bootstrap, delete the target and rerun)")
-    checkOrWriteGeometry(fs, targetPath, numHashes, shingleSize, bands,
-      nBuckets, minContainment.isDefined)
+    checkOrWriteMarker(fs, targetPath, "_graft_geometry", "near-dup",
+      s"numHashes=$numHashes,shingleSize=$shingleSize,bands=$bands," +
+        s"nBuckets=$nBuckets,containment=${if (minContainment.isDefined) "on" else "off"}")
     // empty corpus: nothing to write, and the plane count below would
     // fail on a part-less parquet dir — the datasheet answer is just 0
     if (corpus.isEmpty) return 0L
@@ -802,10 +792,10 @@ object StreamingIngest {
     try {
       nearDupBandRows(idCol, textCol, sigs, corpus, bands, rowsPerBand, nBuckets)
         .write.mode(SaveMode.Append).partitionBy("__bb")
-        .parquet(new org.apache.hadoop.fs.Path(targetPath, "bands").toString)
+        .parquet(new Path(targetPath, "bands").toString)
       sigs.withColumn("__sb", hashBucket(nBuckets, col(idCol)))
         .write.mode(SaveMode.Append).partitionBy("__sb")
-        .parquet(new org.apache.hadoop.fs.Path(targetPath, "sigs").toString)
+        .parquet(new Path(targetPath, "sigs").toString)
       if (minContainment.isDefined) {
         // containment planes (one spelling: containmentShingles, the
         // frame the sink's probe reads back)
@@ -815,13 +805,13 @@ object StreamingIngest {
           sets.select(col(idCol), explode(col("__shs")).as("sh"))
             .withColumn("__shb", hashBucket(nBuckets, col("sh")))
             .write.mode(SaveMode.Append).partitionBy("__shb")
-            .parquet(new org.apache.hadoop.fs.Path(targetPath, "shingles").toString)
+            .parquet(new Path(targetPath, "shingles").toString)
           sets.withColumn("__db", hashBucket(nBuckets, col(idCol)))
             .write.mode(SaveMode.Append).partitionBy("__db")
-            .parquet(new org.apache.hadoop.fs.Path(targetPath, "docsh").toString)
+            .parquet(new Path(targetPath, "docsh").toString)
         } finally sets.unpersist()
       }
-      val docsPath = new org.apache.hadoop.fs.Path(targetPath, "docs").toString
+      val docsPath = new Path(targetPath, "docs").toString
       corpus.withColumn("__kb", hashBucket(nBuckets, col(idCol)))
         .write.mode(SaveMode.Append).partitionBy("__kb").parquet(docsPath)
       // count from the WRITTEN plane: parquet answers from footer metadata,
@@ -853,13 +843,6 @@ object StreamingIngest {
         col("chunk") * cellBuckets + pmod(col("bucket"), lit(cellBuckets.toLong)))
   }
 
-  private def checkOrWriteSigGeometry(fs: org.apache.hadoop.fs.FileSystem,
-                                      targetPath: org.apache.hadoop.fs.Path,
-                                      idCol: String, sigCol: String,
-                                      nBuckets: Int, cellBuckets: Int): Unit =
-    checkOrWriteMarker(fs, targetPath, "_graft_sig_geometry", "signature-dedup",
-      s"idCol=$idCol,sigCol=$sigCol,nBuckets=$nBuckets,cellBuckets=$cellBuckets")
-
   /** MEDIA near-dup APPEND-ONLY sink — the 64-bit-signature sibling of
     * [[nearDupAppendSink]] for image/audio corpora (the LAION-style
     * ingest step): the caller projects a perceptual signature onto the
@@ -889,10 +872,10 @@ object StreamingIngest {
     * Write order is the [[nearDupAppendSink]] crash-safety invariant:
     * cells FIRST (duplicate cell rows from a torn replay are tolerated —
     * collision semantics are set-like and self-collisions are id-
-    * excluded), docs LAST (the id anti-join provides exactly-once);
-    * `_graft_commits/<batchId>` markers fence committed replays;
-    * `_graft_sig_geometry` records the layout and fails loudly on
-    * mismatch. Returns documents appended across this invocation.
+    * excluded), docs LAST (the id anti-join provides exactly-once), all
+    * under the commit fence ([[fenced]]); `_graft_sig_geometry` records
+    * the layout and fails loudly on mismatch. Returns documents appended
+    * across this invocation.
     */
   def signatureAppendSink(spark: SparkSession, stream: DataFrame,
                           idCol: String, sigCol: String, targetDir: String,
@@ -904,106 +887,88 @@ object StreamingIngest {
     require(maxDistance >= 0 && maxDistance <= 3,
       s"16-bit chunk banding is complete only for distance <= 3, got $maxDistance")
     require(nBuckets > 0 && cellBuckets > 0, "bucket counts must be positive")
-    val appended = new java.util.concurrent.atomic.AtomicLong(0L)
-    locally {
-      val (targetPath, fs) = hadoopFs(spark, targetDir)
-      checkOrWriteSigGeometry(fs, targetPath, idCol, sigCol, nBuckets, cellBuckets)
-    }
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (targetPath, fs) = hadoopFs(spark, targetDir)
-        val docsDir = new org.apache.hadoop.fs.Path(targetPath, "docs")
-        val cellsDir = new org.apache.hadoop.fs.Path(targetPath, "cells")
-        val commitsDir = new org.apache.hadoop.fs.Path(targetPath, "_graft_commits")
-        val marker = new org.apache.hadoop.fs.Path(commitsDir, batchId.toString)
-        if (!fs.exists(marker)) {
-          // within-batch: exact winner per signature (null-sig rows are
-          // each their own group — no decoder claimed them, they can't
-          // be dups of each other), then the greedy near rule
-          val wExact = Window
-            .partitionBy(col(sigCol),
-              when(col(sigCol).isNull, col(idCol)))
-            .orderBy(col(idCol))
-          val batchExact = batch.withColumn("__rn", row_number().over(wExact))
-            .filter(col("__rn") === 1).drop("__rn")
-          val nearPairs = graft.ops.Dedup.hamming64Pairs(
-            batchExact.select(col(idCol), col(sigCol)),
-            idCol, sigCol, maxDistance)
-          val batchUnique = batchExact.join(
-              nearPairs.select(col("id_b").as("__nb")).distinct(),
-              batchExact(idCol) <=> col("__nb"), "left_anti")
-            .persist()
+    val (targetPath, fs) = hadoopFs(spark, targetDir)
+    checkOrWriteMarker(fs, targetPath, "_graft_sig_geometry", "signature-dedup",
+      s"idCol=$idCol,sigCol=$sigCol,nBuckets=$nBuckets,cellBuckets=$cellBuckets")
+    val docsDir = new Path(targetPath, "docs")
+    val cellsDir = new Path(targetPath, "cells")
+    fenced(stream, targetDir, checkpointDir) { (batch, _) =>
+      // within-batch: exact winner per signature (null-sig rows are
+      // each their own group — no decoder claimed them, they can't
+      // be dups of each other), then the greedy near rule
+      val wExact = Window
+        .partitionBy(col(sigCol),
+          when(col(sigCol).isNull, col(idCol)))
+        .orderBy(col(idCol))
+      val batchExact = batch.withColumn("__rn", row_number().over(wExact))
+        .filter(col("__rn") === 1).drop("__rn")
+      val nearPairs = graft.ops.Dedup.hamming64Pairs(
+        batchExact.select(col(idCol), col(sigCol)),
+        idCol, sigCol, maxDistance)
+      val batchUnique = batchExact.join(
+          nearPairs.select(col("id_b").as("__nb")).distinct(),
+          batchExact(idCol) <=> col("__nb"), "left_anti")
+        .persist()
+      try {
+        val batchCells = sigCellRows(batchUnique, idCol, sigCol,
+          cellBuckets).persist()
+        try {
+          // ---- corpus probe: partition-pruned cell collisions,
+          // verified in place (the cell row carries the signature)
+          val drops =
+            if (planeHasData(fs, cellsDir, "__cb")) {
+              // ≤ 4·cellBuckets small longs — bounded driver traffic
+              val cb = batchCells.select("__cb").distinct()
+                .collect().map(_.getLong(0)).toSeq
+              val stored = spark.read.parquet(cellsDir.toString)
+                .where(col("__cb").isin(cb: _*)) // partition-pruned
+                .select(col("chunk"), col("bucket"),
+                  col("sig").as("__csig"), col(idCol).as("__cid"))
+              batchCells.join(stored, Seq("chunk", "bucket"))
+                // torn replay: this batch's own cells may be stored
+                // already — a doc must never collide with itself
+                .filter(!(col(idCol) <=> col("__cid")))
+                .filter(expr("bit_count(sig ^ __csig)") <= maxDistance)
+                .select(col(idCol).as("__did")).distinct()
+            } else batchCells.select(col(idCol).as("__did")).limit(0)
+          val fresh0 = batchUnique.join(drops,
+            batchUnique(idCol) <=> col("__did"), "left_anti")
+            .withColumn("__kb", hashBucket(nBuckets, col(idCol)))
+          // id-level idempotence (torn-replay re-drop), bucket-pruned
+          val fresh =
+            if (planeHasData(fs, docsDir, "__kb")) {
+              val kb = batchUnique
+                .select(hashBucket(nBuckets, col(idCol)).as("__kb"))
+                .distinct().collect().map(_.getLong(0)).toSeq
+              if (kb.isEmpty) fresh0
+              else fresh0.join(
+                spark.read.parquet(docsDir.toString)
+                  .where(col("__kb").isin(kb: _*))
+                  .select(col(idCol).as("__eid")),
+                fresh0(idCol) <=> col("__eid"), "left_anti")
+            } else fresh0
+          fresh.persist()
           try {
-            val batchCells = sigCellRows(batchUnique, idCol, sigCol,
-              cellBuckets).persist()
-            try {
-              // ---- corpus probe: partition-pruned cell collisions,
-              // verified in place (the cell row carries the signature)
-              val drops =
-                if (planeHasData(fs, cellsDir, "__cb")) {
-                  // ≤ 4·cellBuckets small longs — bounded driver traffic
-                  val cb = batchCells.select("__cb").distinct()
-                    .collect().map(_.getLong(0)).toSeq
-                  val stored = spark.read.parquet(cellsDir.toString)
-                    .where(col("__cb").isin(cb: _*)) // partition-pruned
-                    .select(col("chunk"), col("bucket"),
-                      col("sig").as("__csig"), col(idCol).as("__cid"))
-                  batchCells.join(stored, Seq("chunk", "bucket"))
-                    // torn replay: this batch's own cells may be stored
-                    // already — a doc must never collide with itself
-                    .filter(!(col(idCol) <=> col("__cid")))
-                    .filter(expr("bit_count(sig ^ __csig)") <= maxDistance)
-                    .select(col(idCol).as("__did")).distinct()
-                } else batchCells.select(col(idCol).as("__did")).limit(0)
-              val fresh0 = batchUnique.join(drops,
-                batchUnique(idCol) <=> col("__did"), "left_anti")
-                .withColumn("__kb", hashBucket(nBuckets, col(idCol)))
-              // id-level idempotence (torn-replay re-drop), bucket-pruned
-              val fresh =
-                if (planeHasData(fs, docsDir, "__kb")) {
-                  val kb = batchUnique
-                    .select(hashBucket(nBuckets, col(idCol)).as("__kb"))
-                    .distinct().collect().map(_.getLong(0)).toSeq
-                  if (kb.isEmpty) fresh0
-                  else fresh0.join(
-                    spark.read.parquet(docsDir.toString)
-                      .where(col("__kb").isin(kb: _*))
-                      .select(col(idCol).as("__eid")),
-                    fresh0(idCol) <=> col("__eid"), "left_anti")
-                } else fresh0
-              fresh.persist()
-              try {
-                val n = fresh.count()
-                if (n > 0) {
-                  val freshIds = fresh.select(col(idCol))
-                  batchCells.join(freshIds,
-                      batchCells(idCol) <=> freshIds(idCol), "left_semi")
-                    .write.mode(SaveMode.Append).partitionBy("__cb")
-                    .parquet(cellsDir.toString)
-                  fresh.write.mode(SaveMode.Append).partitionBy("__kb")
-                    .parquet(docsDir.toString)
-                }
-                appended.addAndGet(n)
-              } finally fresh.unpersist()
-            } finally batchCells.unpersist()
-          } finally batchUnique.unpersist()
-          fs.mkdirs(commitsDir)
-          fs.createNewFile(marker)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    appended.get()
+            val n = fresh.count()
+            if (n > 0) {
+              val freshIds = fresh.select(col(idCol))
+              batchCells.join(freshIds,
+                  batchCells(idCol) <=> freshIds(idCol), "left_semi")
+                .write.mode(SaveMode.Append).partitionBy("__cb")
+                .parquet(cellsDir.toString)
+              fresh.write.mode(SaveMode.Append).partitionBy("__kb")
+                .parquet(docsDir.toString)
+            }
+            (n, nothingAfter)
+          } finally fresh.unpersist()
+        } finally batchCells.unpersist()
+      } finally batchUnique.unpersist()
+    }
   }
 
   /** The serving corpus of a [[signatureAppendSink]] target. */
   def readSignatureTarget(spark: SparkSession, targetDir: String): DataFrame =
-    spark.read.parquet(
-      new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(targetDir), "docs").toString)
+    spark.read.parquet(new Path(targetDir, "docs").toString)
 
   /** Bootstrap a [[signatureAppendSink]] target from an EXISTING
     * (already-deduplicated) media corpus — [[bootstrapNearDupTarget]]'s
@@ -1022,33 +987,33 @@ object StreamingIngest {
     val (targetPath, fs) = hadoopFs(spark, targetDir)
     for ((plane, pc) <- Seq("docs" -> "__kb", "cells" -> "__cb"))
       require(!planeHasData(fs,
-        new org.apache.hadoop.fs.Path(targetPath, plane), pc),
+        new Path(targetPath, plane), pc),
         s"bootstrapSignatureTarget requires an empty target, found $plane under " +
           s"$targetDir (after a crashed bootstrap, delete the target and rerun)")
-    checkOrWriteSigGeometry(fs, targetPath, idCol, sigCol, nBuckets, cellBuckets)
+    checkOrWriteMarker(fs, targetPath, "_graft_sig_geometry", "signature-dedup",
+      s"idCol=$idCol,sigCol=$sigCol,nBuckets=$nBuckets,cellBuckets=$cellBuckets")
     if (corpus.isEmpty) return 0L
     sigCellRows(corpus, idCol, sigCol, cellBuckets)
       .write.mode(SaveMode.Append).partitionBy("__cb")
-      .parquet(new org.apache.hadoop.fs.Path(targetPath, "cells").toString)
-    val docsPath = new org.apache.hadoop.fs.Path(targetPath, "docs").toString
+      .parquet(new Path(targetPath, "cells").toString)
+    val docsPath = new Path(targetPath, "docs").toString
     corpus.withColumn("__kb", hashBucket(nBuckets, col(idCol)))
       .write.mode(SaveMode.Append).partitionBy("__kb").parquet(docsPath)
     spark.read.parquet(docsPath).count()
   }
 
   /** Streaming UPDATE-IN-PLACE upsert (SCD1 over a stream) on plain
-    * parquet — the boundary [[dedupAppendSink]]'s scaladoc used to hand to
-    * table formats, closed with the two patterns this sink already proves
-    * composed: the dedup sink's hash-bucket layout (per-batch cost ∝
-    * touched buckets) and [[aggStateSink]]'s versioned-dirs-plus-markers
-    * commit protocol (plain parquet has no atomic overwrite; versions +
-    * markers give crash-safe exactly-once). The result is copy-on-write at
-    * BUCKET granularity — the same granularity trick Delta/Iceberg use at
-    * file level, expressed with directory renames:
+    * parquet, composed of two patterns: the dedup sink's hash-bucket layout
+    * (per-batch cost ∝ touched buckets) and [[aggStateSink]]'s versioned
+    * directories under the commit fence (plain parquet has no atomic
+    * overwrite; versions + markers give crash-safe exactly-once). The
+    * result is copy-on-write at BUCKET granularity — the same granularity
+    * trick Delta/Iceberg use at file level, expressed with directory
+    * renames:
     *
     * Layout: `targetDir/b<bucket>/v<batchId>/part-*.parquet` where
     * `bucket = pmod(xxhash64(key), nBuckets)` (stored in-row as `__kb`),
-    * plus global `_graft_commits/<batchId>` markers. A bucket's SERVING
+    * plus the fence's commit markers ([[fenced]]). A bucket's SERVING
     * content is its highest version whose batchId is committed; an
     * uncommitted (torn) version directory is invisible to readers.
     *
@@ -1061,27 +1026,20 @@ object StreamingIngest {
     *   3. MERGE batch into them and write the touched buckets' FULL new
     *      content as `v<batchId>` (one partitioned job, then one rename
     *      per bucket — metadata ops, no data copy);
-    *   4. fence with the commit marker, then prune each touched bucket's
-    *      committed versions beyond `keepVersions`.
+    *   4. commit through the fence ([[fenced]]), then prune each touched
+    *      bucket's committed versions beyond `keepVersions`.
     *
-    * Replays skip at the marker; a crash anywhere before the marker leaves
-    * only uncommitted `v<batchId>` dirs that readers ignore and the replay
-    * overwrites (same-batch replays touch the same buckets — the file
-    * source replays identical input). Untouched buckets are never opened,
-    * never rewritten: at 100 TB with buckets sized to a few GB, an upsert
-    * wave costs its buckets, not the corpus. Commit markers accumulate one
+    * A crash anywhere before the marker leaves only uncommitted
+    * `v<batchId>` dirs that readers ignore and the replay overwrites
+    * (same-batch replays touch the same buckets — the file source replays
+    * identical input). Untouched buckets are never opened, never
+    * rewritten: at 100 TB with buckets sized to a few GB, an upsert wave
+    * costs its buckets, not the corpus. Commit markers accumulate one
     * empty file per batch (a long-retention target can archive markers
     * below the per-bucket version floor offline).
     *
-    * Checkpoint-target coupling: the markers encode the CHECKPOINT's
-    * batch numbering — restarting against an existing target with a
-    * fresh checkpoint would let old markers silently skip the restarted
-    * batches (see the [[nearDupAppendSink]] scaladoc); a new checkpoint
-    * requires a new target.
-    *
-    * Blocks until available input drains (AvailableNow). Returns the
-    * number of micro-batches applied (replays contribute 0). Serve with
-    * [[readUpsertTarget]].
+    * Returns the number of micro-batches applied (replays contribute 0).
+    * Serve with [[readUpsertTarget]].
     */
   def upsertSink(spark: SparkSession, stream: DataFrame, keyCol: String,
                  orderCol: String, targetDir: String, checkpointDir: String,
@@ -1089,86 +1047,41 @@ object StreamingIngest {
     import org.apache.spark.sql.functions._
     require(nBuckets > 0, "nBuckets must be positive")
     require(keepVersions >= 1, "keepVersions must be at least 1")
-    locally {
-      // layout contract enforced up-front: a different nBuckets (or
-      // keyCol) against an existing target would remap keys to other
-      // buckets and serve stale duplicates from the old ones
-      val (targetPath, fs) = hadoopFs(spark, targetDir)
-      checkOrWriteUpsertGeometry(fs, targetPath, keyCol, nBuckets)
+    val (targetPath, fs) = hadoopFs(spark, targetDir)
+    checkOrWriteMarker(fs, targetPath, "_graft_upsert_geometry", "upsert",
+      s"keyCol=$keyCol,nBuckets=$nBuckets")
+    fenced(stream, targetDir, checkpointDir) { (batch, batchId) =>
+      val batchKb = batch
+        .withColumn(bucketCol, pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong)))
+        .persist() // bucket discovery + merge read it once each
+      try {
+        // ≤ nBuckets small longs — bounded driver traffic by design.
+        // Null keys: xxhash64(NULL) evaluates to its seed (42), so a
+        // null-keyed row gets a valid bucket here and is then rejected
+        // row-level by ScaleOps.upsert's MERGE null check during the
+        // write job — the batch fails loudly before any rename.
+        val touched = batchKb.select(bucketCol).distinct().collect()
+          .map(_.getLong(0)).toSeq
+        val committed = committedVersions(fs, targetPath).toSet
+        val currentPaths = touched.flatMap(b =>
+          latestVersion(fs, new Path(targetPath, s"b$b"), committed))
+        val merged =
+          if (currentPaths.isEmpty)
+            graft.ops.ScaleOps.upsert(
+              spark.createDataFrame(
+                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+                batchKb.schema),
+              batchKb, Seq(keyCol), Some(orderCol))
+          else
+            graft.ops.ScaleOps.upsert(
+              spark.read.parquet(currentPaths: _*),
+              batchKb, Seq(keyCol), Some(orderCol))
+        publishBuckets(fs, merged, targetPath,
+          new Path(targetPath, s"_graft_upsert_tmp_v$batchId"), batchId)
+        (1L, () => pruneBuckets(fs, targetPath, touched, committed + batchId,
+          keepVersions))
+      } finally batchKb.unpersist()
     }
-    val applied = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (targetPath, fs) = hadoopFs(spark, targetDir)
-        val commitsDir = new org.apache.hadoop.fs.Path(targetPath, "_graft_commits")
-        val marker = new org.apache.hadoop.fs.Path(commitsDir, batchId.toString)
-        if (!fs.exists(marker)) {
-          val batchKb = batch
-            .withColumn(bucketCol, pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong)))
-            .persist() // bucket discovery + merge read it once each
-          try {
-            // ≤ nBuckets small longs — bounded driver traffic by design.
-            // Null keys: xxhash64(NULL) evaluates to its seed (42), so a
-            // null-keyed row gets a valid bucket here and is then rejected
-            // row-level by ScaleOps.upsert's MERGE null check during the
-            // write job — the batch fails loudly before any rename.
-            val touched = batchKb.select(bucketCol).distinct().collect()
-              .map(_.getLong(0)).toSeq
-            val committed = committedVersions(fs, targetPath).toSet
-            val currentPaths = touched.flatMap(b =>
-              latestBucketVersion(fs, targetPath, b, committed))
-            val merged =
-              if (currentPaths.isEmpty)
-                graft.ops.ScaleOps.upsert(
-                  spark.createDataFrame(
-                    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                    batchKb.schema),
-                  batchKb, Seq(keyCol), Some(orderCol))
-              else
-                graft.ops.ScaleOps.upsert(
-                  spark.read.parquet(currentPaths: _*),
-                  batchKb, Seq(keyCol), Some(orderCol))
-            // one partitioned job writes every touched bucket's new
-            // content; __kbp is the throwaway DIRECTORY-NAMING copy
-            // (partitionBy strips its column from the data files — `__kb`
-            // itself must survive IN-ROW for readers and later merges)
-            val tmp = new org.apache.hadoop.fs.Path(
-              targetPath, s"_graft_upsert_tmp_v$batchId")
-            merged.withColumn("__kbp", col(bucketCol))
-              .write.mode(SaveMode.Overwrite).partitionBy("__kbp")
-              .parquet(tmp.toString)
-            fs.globStatus(new org.apache.hadoop.fs.Path(tmp, "__kbp=*"))
-              .filter(_.isDirectory).foreach { d =>
-                val b = d.getPath.getName.stripPrefix("__kbp=")
-                val bucketDir = new org.apache.hadoop.fs.Path(targetPath, s"b$b")
-                val dest = new org.apache.hadoop.fs.Path(bucketDir, s"v$batchId")
-                fs.mkdirs(bucketDir)
-                fs.delete(dest, true) // stale uncommitted attempt, if any
-                require(fs.rename(d.getPath, dest),
-                  s"upsertSink: rename failed: ${d.getPath} -> $dest")
-              }
-            fs.delete(tmp, true)
-            fs.mkdirs(commitsDir)
-            fs.createNewFile(marker)
-            applied.incrementAndGet()
-            // retention: prune each touched bucket's committed versions
-            val nowCommitted = committed + batchId
-            touched.foreach { b =>
-              val bucketDir = new org.apache.hadoop.fs.Path(targetPath, s"b$b")
-              bucketVersions(fs, bucketDir).filter(nowCommitted)
-                .sorted.reverse.drop(keepVersions).foreach { old =>
-                  fs.delete(new org.apache.hadoop.fs.Path(bucketDir, s"v$old"), true)
-                }
-            }
-          } finally batchKb.unpersist()
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    applied.get()
   }
 
   /** The latest COMMITTED content of an [[upsertSink]] target: per bucket,
@@ -1179,31 +1092,72 @@ object StreamingIngest {
     */
   def readUpsertTarget(spark: SparkSession, targetDir: String): DataFrame = {
     val (targetPath, fs) = hadoopFs(spark, targetDir)
-    val committed = committedVersions(fs, targetPath).toSet
-    val latest = fs.globStatus(new org.apache.hadoop.fs.Path(targetPath, "b*"))
-      .filter(_.isDirectory)
-      .flatMap { b =>
-        bucketVersions(fs, b.getPath).filter(committed).maxOption
-          .map(v => new org.apache.hadoop.fs.Path(b.getPath, s"v$v").toString)
-      }
+    val latest = latestBuckets(fs, targetPath, committedVersions(fs, targetPath).toSet)
     if (latest.isEmpty) throw new IllegalStateException(
       s"no committed upsert state under $targetDir")
-    spark.read.parquet(latest.toIndexedSeq: _*)
+    spark.read.parquet(latest: _*)
   }
 
-  private def bucketVersions(fs: org.apache.hadoop.fs.FileSystem,
-                             bucketDir: org.apache.hadoop.fs.Path): Seq[Long] =
+  // ---- the bucketed layout (upsertSink, sessionSink's open plane):
+  // `<root>/b<bucket>/v<batchId>/`, a version served once committed
+
+  private def bucketVersions(fs: FileSystem, bucketDir: Path): Seq[Long] =
     if (!fs.exists(bucketDir)) Seq.empty
-    else fs.listStatus(bucketDir).toSeq.flatMap(st =>
-      scala.util.Try(st.getPath.getName.stripPrefix("v").toLong).toOption)
+    else fs.listStatus(bucketDir).toSeq.flatMap(
+      _.getPath.getName.stripPrefix("v").toLongOption)
 
-  private def latestBucketVersion(fs: org.apache.hadoop.fs.FileSystem,
-                                  targetPath: org.apache.hadoop.fs.Path,
-                                  bucket: Long, committed: Set[Long]): Option[String] = {
-    val bucketDir = new org.apache.hadoop.fs.Path(targetPath, s"b$bucket")
+  private def latestVersion(fs: FileSystem, bucketDir: Path,
+                            committed: Set[Long]): Option[String] =
     bucketVersions(fs, bucketDir).filter(committed).maxOption
-      .map(v => new org.apache.hadoop.fs.Path(bucketDir, s"v$v").toString)
+      .map(v => new Path(bucketDir, s"v$v").toString)
+
+  /** The newest committed version of every bucket under `root`. */
+  private def latestBuckets(fs: FileSystem, root: Path,
+                            committed: Set[Long]): Seq[String] =
+    fs.globStatus(new Path(root, "b*")).toSeq.filter(_.isDirectory)
+      .flatMap(b => latestVersion(fs, b.getPath, committed))
+
+  /** Writes `df` as version `v<batchId>` of each bucket it holds: one job
+    * partitioned by `__kbp`, a throwaway copy of [[bucketCol]] (partitionBy
+    * strips its column from the files, and `__kb` must stay in-row for
+    * readers and later merges), into the `_`-prefixed `tmp`, then one
+    * rename per bucket into `<root>/b<k>/v<batchId>`, replacing a torn
+    * attempt's directory.
+    */
+  private def publishBuckets(fs: FileSystem, df: DataFrame, root: Path,
+                             tmp: Path, batchId: Long): Unit = {
+    df.withColumn("__kbp", org.apache.spark.sql.functions.col(bucketCol))
+      .write.mode(SaveMode.Overwrite).partitionBy("__kbp").parquet(tmp.toString)
+    fs.globStatus(new Path(tmp, "__kbp=*")).filter(_.isDirectory).foreach { d =>
+      val bucketDir = new Path(root, s"b${d.getPath.getName.stripPrefix("__kbp=")}")
+      val dest = new Path(bucketDir, s"v$batchId")
+      fs.mkdirs(bucketDir)
+      fs.delete(dest, true)
+      require(fs.rename(d.getPath, dest), s"rename failed: ${d.getPath} -> $dest")
+    }
+    fs.delete(tmp, true)
   }
+
+  /** Bucketed retention: each touched bucket keeps its newest `keep`
+    * committed versions.
+    */
+  private def pruneBuckets(fs: FileSystem, root: Path, touched: Seq[Long],
+                           committed: Set[Long], keep: Int): Unit =
+    touched.foreach { b =>
+      val bucketDir = new Path(root, s"b$b")
+      bucketVersions(fs, bucketDir).filter(committed).sorted.reverse.drop(keep)
+        .foreach(old => fs.delete(new Path(bucketDir, s"v$old"), true))
+    }
+
+  /** Flat retention (aggStateSink, topkStateSink): a state directory keeps
+    * its newest `keep` committed versions `v<batchId>`; older versions go
+    * with their markers.
+    */
+  private def pruneVersions(fs: FileSystem, statePath: Path, keep: Int): Unit =
+    committedVersions(fs, statePath).sorted.reverse.drop(keep).foreach { old =>
+      fs.delete(new Path(statePath, s"v$old"), true)
+      fs.delete(new Path(commitsDir(statePath), old.toString), false)
+    }
 
   /** Streaming materialized-view maintenance: fold each micro-batch into a
     * persistent [[graft.ops.AggState]] state table — the end-to-end form
@@ -1211,11 +1165,11 @@ object StreamingIngest {
     * the continuous refresh). Per batch: build the batch's partial state
     * (cost ∝ batch), merge it with the stored state (cost ∝ |groups|,
     * never history), and write the result as a NEW VERSION directory
-    * `v<batchId>` committed by a marker file — plain parquet has no
-    * atomic overwrite, so versions + markers give crash-safe exactly-once:
-    * a replayed batch sees its marker and skips (state-level idempotence),
-    * a crash between data and marker leaves an uncommitted directory that
-    * [[readAggState]] ignores and the replay overwrites. Older committed
+    * `v<batchId>` committed by the fence's marker ([[fenced]]) — plain
+    * parquet has no atomic overwrite, so versions + markers give
+    * crash-safe exactly-once: a crash between data and marker leaves an
+    * uncommitted directory that [[readAggState]] ignores and the replay
+    * overwrites. Older committed
     * versions beyond `keepVersions` are pruned after each commit (readers
     * of the LATEST version are unaffected; run long-retention readers
     * against their own pinned version like any versioned-artifact
@@ -1231,41 +1185,20 @@ object StreamingIngest {
     import graft.ops.AggState
     require(keyCols.nonEmpty, "aggStateSink needs at least one key column")
     require(keepVersions >= 1, "keepVersions must be at least 1")
-    val applied = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (statePath, fs) = hadoopFs(spark, stateDir)
-        val commitsDir = new org.apache.hadoop.fs.Path(statePath, "_graft_commits")
-        val marker = new org.apache.hadoop.fs.Path(commitsDir, batchId.toString)
-        if (!fs.exists(marker)) {
-          val batchState = AggState.build(batch, keyCols, valueCol, scale)
-          val merged = latestCommittedVersion(fs, statePath) match {
-            case Some(v) =>
-              val current = spark.read.parquet(
-                new org.apache.hadoop.fs.Path(statePath, s"v$v").toString)
-              AggState.merge(keyCols, current, batchState)
-            case None => batchState
-          }
-          // Overwrite handles a crashed earlier attempt at this version
-          merged.write.mode(SaveMode.Overwrite)
-            .parquet(new org.apache.hadoop.fs.Path(statePath, s"v$batchId").toString)
-          fs.mkdirs(commitsDir)
-          fs.createNewFile(marker)
-          applied.incrementAndGet()
-          // prune committed versions beyond the retention window
-          committedVersions(fs, statePath).sorted.reverse.drop(keepVersions)
-            .foreach { old =>
-              fs.delete(new org.apache.hadoop.fs.Path(statePath, s"v$old"), true)
-              fs.delete(new org.apache.hadoop.fs.Path(commitsDir, old.toString), false)
-            }
-        }
-        ()
+    val (statePath, fs) = hadoopFs(spark, stateDir)
+    fenced(stream, stateDir, checkpointDir) { (batch, batchId) =>
+      val batchState = AggState.build(batch, keyCols, valueCol, scale)
+      val merged = latestCommittedVersion(fs, statePath) match {
+        case Some(v) =>
+          val current = spark.read.parquet(new Path(statePath, s"v$v").toString)
+          AggState.merge(keyCols, current, batchState)
+        case None => batchState
       }
-      .start()
-    q.awaitTermination()
-    applied.get()
+      // Overwrite handles a crashed earlier attempt at this version
+      merged.write.mode(SaveMode.Overwrite)
+        .parquet(new Path(statePath, s"v$batchId").toString)
+      (1L, () => pruneVersions(fs, statePath, keepVersions))
+    }
   }
 
   /** Streaming ANN index maintenance: fold each micro-batch of embeddings
@@ -1275,19 +1208,17 @@ object StreamingIngest {
     * ingest-to-serving path: build once offline, append forever, rebuild
     * only on [[graft.ops.Ivf.indexStats]] drift).
     *
-    * Exactly-once at VECTOR level on plain parquet:
-    *   - a committed-batch marker (`_graft_commits/<batchId>`) makes a
-    *     fully-replayed batch skip entirely;
-    *   - a replay that crashed BETWEEN append and marker re-runs with
-    *     `dedupeIds = true`: the batch anti-joins against the ids already
-    *     in the lists its vectors hash into — `__cid` partition pruning
-    *     keeps that probe ∝ touched lists, not index size (the
-    *     [[dedupAppendSink]] bucket shape with centroid ids as buckets).
+    * Exactly-once at VECTOR level under the commit fence ([[fenced]]): a
+    * replay that crashed between append and marker re-runs with
+    * `dedupeIds = true`, so the batch anti-joins against the ids already
+    * in the lists its vectors hash into — `__cid` partition pruning keeps
+    * that probe ∝ touched lists, not index size (the [[dedupAppendSink]]
+    * bucket shape with centroid ids as buckets).
     *
     * Centroids stay frozen across waves (the appendToIndex drift
     * contract); quantized layouts are preserved per its layout dispatch.
-    * Blocks until available input drains (AvailableNow). Returns vectors
-    * appended across this invocation (replays contribute 0).
+    * Returns vectors appended across this invocation (replays contribute
+    * 0).
     */
   def annIndexSink(spark: SparkSession, stream: DataFrame,
                    idCol: String, vecCol: String,
@@ -1304,29 +1235,15 @@ object StreamingIngest {
                                idCol: String, vecCol: String,
                                indexDir: String, checkpointDir: String,
                                trackCids: Boolean): (Long, Seq[Int]) = {
-    val appended = new java.util.concurrent.atomic.AtomicLong(0L)
     val cids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (indexPath, fs) = hadoopFs(spark, indexDir)
-        val commitsDir = new org.apache.hadoop.fs.Path(indexPath, "_graft_commits")
-        val marker = new org.apache.hadoop.fs.Path(commitsDir, batchId.toString)
-        if (!fs.exists(marker)) {
-          val (n, hit) = graft.ops.Ivf.appendToIndexTracked(
-            spark, indexDir, batch, idCol, vecCol, dedupeIds = true,
-            trackCids = trackCids)
-          appended.addAndGet(n)
-          hit.foreach(cids.add)
-          fs.mkdirs(commitsDir)
-          fs.createNewFile(marker)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    (appended.get(), cids.toArray(Array.empty[Integer]).map(_.toInt).toSeq)
+    val appended = fenced(stream, indexDir, checkpointDir) { (batch, _) =>
+      val (n, hit) = graft.ops.Ivf.appendToIndexTracked(
+        spark, indexDir, batch, idCol, vecCol, dedupeIds = true,
+        trackCids = trackCids)
+      hit.foreach(cids.add)
+      (n, nothingAfter)
+    }
+    (appended, cids.toArray(Array.empty[Integer]).map(_.toInt).toSeq)
   }
 
   /** Rebuild-trigger policy for [[annIndexSinkWithPolicy]]: the index is
@@ -1399,15 +1316,15 @@ object StreamingIngest {
     * — the frequent-items sibling of the [[aggStateSink]]+hdrBucketize
     * HDR lane. The sketch build needs windows over the batch's exact
     * count plane, which a streaming query plan cannot express, so each
-    * batch is summarized INSIDE foreachBatch (batch context — the same
+    * batch is summarized INSIDE the fenced batch body (batch context — the same
     * place [[aggStateSink]] runs `AggState.build`) to a bounded LEAF
     * (≤ k item rows + 1 meta row per group), exploded to registers
     * (group…, item, reg ∈ {cnt, tseen}, v), and merged into the stored
     * state by register SUM — exactly [[graft.ops.Sketches.topkMerge]],
     * so the stored state equals a batch merge of the same per-wave
     * leaves register-for-register (asserted in StreamingAggSpec).
-    * Versioned directories + commit markers give the [[aggStateSink]]
-    * crash-safe exactly-once contract verbatim. Serve with
+    * Versioned directories under the commit fence give the
+    * [[aggStateSink]] crash-safe exactly-once contract verbatim. Serve with
     * [[graft.ops.Sketches.topkFromRegisters]](readAggState(...)) →
     * `topkHeavyHitters`.
     *
@@ -1426,43 +1343,23 @@ object StreamingIngest {
     require(k >= 1, s"topkStateSink needs k >= 1, got $k")
     require(keepVersions >= 1, "keepVersions must be at least 1")
     val keyCols = groupCols ++ Seq("item", "reg")
-    val applied = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (statePath, fs) = hadoopFs(spark, stateDir)
-        val commitsDir = new org.apache.hadoop.fs.Path(statePath, "_graft_commits")
-        val marker = new org.apache.hadoop.fs.Path(commitsDir, batchId.toString)
-        if (!fs.exists(marker)) {
-          val leaf = Sketches.topkRegisters(
-            Sketches.topkSketch(batch, groupCols, itemCol, k), groupCols)
-            .withColumn("v", col("v").cast("bigint"))
-          val merged = latestCommittedVersion(fs, statePath) match {
-            case Some(ver) =>
-              val current = spark.read.parquet(
-                new org.apache.hadoop.fs.Path(statePath, s"v$ver").toString)
-              current.unionByName(leaf)
-                .groupBy(keyCols.map(col): _*)
-                .agg(coalesce(sum(col("v")).cast("bigint"), lit(0L)).as("v"))
-            case None => leaf
-          }
-          merged.write.mode(SaveMode.Overwrite)
-            .parquet(new org.apache.hadoop.fs.Path(statePath, s"v$batchId").toString)
-          fs.mkdirs(commitsDir)
-          fs.createNewFile(marker)
-          applied.incrementAndGet()
-          committedVersions(fs, statePath).sorted.reverse.drop(keepVersions)
-            .foreach { old =>
-              fs.delete(new org.apache.hadoop.fs.Path(statePath, s"v$old"), true)
-              fs.delete(new org.apache.hadoop.fs.Path(commitsDir, old.toString), false)
-            }
-        }
-        ()
+    val (statePath, fs) = hadoopFs(spark, stateDir)
+    fenced(stream, stateDir, checkpointDir) { (batch, batchId) =>
+      val leaf = Sketches.topkRegisters(
+        Sketches.topkSketch(batch, groupCols, itemCol, k), groupCols)
+        .withColumn("v", col("v").cast("bigint"))
+      val merged = latestCommittedVersion(fs, statePath) match {
+        case Some(ver) =>
+          val current = spark.read.parquet(new Path(statePath, s"v$ver").toString)
+          current.unionByName(leaf)
+            .groupBy(keyCols.map(col): _*)
+            .agg(coalesce(sum(col("v")).cast("bigint"), lit(0L)).as("v"))
+        case None => leaf
       }
-      .start()
-    q.awaitTermination()
-    applied.get()
+      merged.write.mode(SaveMode.Overwrite)
+        .parquet(new Path(statePath, s"v$batchId").toString)
+      (1L, () => pruneVersions(fs, statePath, keepVersions))
+    }
   }
 
   /** The latest COMMITTED aggregate state written by [[aggStateSink]]
@@ -1472,8 +1369,7 @@ object StreamingIngest {
   def readAggState(spark: SparkSession, stateDir: String): DataFrame = {
     val (statePath, fs) = hadoopFs(spark, stateDir)
     latestCommittedVersion(fs, statePath) match {
-      case Some(v) => spark.read.parquet(
-        new org.apache.hadoop.fs.Path(statePath, s"v$v").toString)
+      case Some(v) => spark.read.parquet(new Path(statePath, s"v$v").toString)
       case None => throw new IllegalStateException(
         s"no committed aggregate state under $stateDir")
     }
@@ -1502,8 +1398,8 @@ object StreamingIngest {
     * crash-replayed batch is id-idempotent (the [[dedupAppendSink]]
     * contract); the `grams/` plane tolerates replay duplicates (marking
     * joins de-duplicate) and still anti-joins to keep steady-state
-    * growth digest-distinct. Batch replays skip on `_graft_commits`
-    * markers; `_graft_dupspan_geometry` pins (k, nBuckets) — a
+    * growth digest-distinct. Batches commit through the fence
+    * ([[fenced]]); `_graft_dupspan_geometry` pins (k, nBuckets) — a
     * different k would silently mark nothing against old digests.
     *
     * @return documents appended across this invocation
@@ -1516,109 +1412,92 @@ object StreamingIngest {
     import org.apache.spark.sql.functions._
     require(k >= 2, s"dupSpanAppendSink needs k >= 2, got $k")
     require(nBuckets > 0, "nBuckets must be positive")
-    val appended = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (targetPath, fs) = hadoopFs(spark, targetDir)
-        val commitsDir = new org.apache.hadoop.fs.Path(targetPath, "_graft_commits")
-        val marker = new org.apache.hadoop.fs.Path(commitsDir, batchId.toString)
-        // geometry validates BEFORE the replay skip: a mismatched k must
-        // refuse loudly even when the batch itself would be skipped
-        checkOrWriteMarker(fs, targetPath, "_graft_dupspan_geometry",
-          "dup-span", s"k=$k,nBuckets=$nBuckets,digest=md5")
-        if (!fs.exists(marker)) {
-          val gramsPath = new org.apache.hadoop.fs.Path(targetPath, "grams")
-          val docsPath = new org.apache.hadoop.fs.Path(targetPath, "docs")
-          val occ = graft.ops.TextOps.windowDigests(
-              batch.select(col(idCol), col(textCol)), idCol, textCol, k)
-            .withColumn("__bkt",
-              pmod(xxhash64(col("__key")), lit(nBuckets.toLong)))
-            .persist()
-          try {
-            val batchMarked = occ
-              .withColumn("__n",
-                count(lit(1)).over(Window.partitionBy("__key")))
-              .filter(col("__n") > 1)
+    val (targetPath, fs) = hadoopFs(spark, targetDir)
+    checkOrWriteMarker(fs, targetPath, "_graft_dupspan_geometry",
+      "dup-span", s"k=$k,nBuckets=$nBuckets,digest=md5")
+    val gramsPath = new Path(targetPath, "grams")
+    val docsPath = new Path(targetPath, "docs")
+    fenced(stream, targetDir, checkpointDir) { (batch, _) =>
+      val occ = graft.ops.TextOps.windowDigests(
+          batch.select(col(idCol), col(textCol)), idCol, textCol, k)
+        .withColumn("__bkt",
+          pmod(xxhash64(col("__key")), lit(nBuckets.toLong)))
+        .persist()
+      try {
+        val batchMarked = occ
+          .withColumn("__n",
+            count(lit(1)).over(Window.partitionBy("__key")))
+          .filter(col("__n") > 1)
+          .select(col(idCol), col("pos"))
+        val gramsLive = planeHasData(fs, gramsPath, "__bkt")
+        val hitBuckets =
+          if (gramsLive) occ.select("__bkt").distinct()
+            .collect().map(_.getLong(0)).toSeq
+          else Seq.empty[Long]
+        def existingKeys = spark.read.parquet(gramsPath.toString)
+          .where(col("__bkt").isin(hitBuckets: _*))
+          .select(col("__key").as("__ek"))
+        val corpusMarked =
+          if (gramsLive)
+            occ.join(existingKeys, col("__key") === col("__ek"))
               .select(col(idCol), col("pos"))
-            val gramsLive = planeHasData(fs, gramsPath, "__bkt")
-            val hitBuckets =
-              if (gramsLive) occ.select("__bkt").distinct()
+          else occ.filter(lit(false)).select(col(idCol), col("pos"))
+        val marked = batchMarked.union(corpusMarked).distinct()
+        val spans = graft.ops.TextOps
+          .mergeMarkedWindows(marked, idCol, k)
+          .groupBy(col(idCol))
+          .agg(sort_array(collect_list(
+            struct(col("span_start"), col("span_end")))).as("dup_spans"),
+            sum(col("span_end") - col("span_start")).as("dup_tokens"))
+        val docRows = batch.select(col(idCol), col(textCol))
+          .join(spans, Seq(idCol), "left")
+          .select(col(idCol), col(textCol),
+            coalesce(col("dup_spans"), typedLit(
+              Seq.empty[(Long, Long)]).cast(
+              "array<struct<span_start:bigint,span_end:bigint>>"))
+              .as("dup_spans"),
+            coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens"))
+          .withColumn("__dbkt",
+            coalesce(pmod(xxhash64(col(idCol)), lit(nBuckets.toLong)),
+              lit(0L)))
+          .persist()
+        val appended = try {
+          // id-idempotent docs append (crash-replay safe)
+          val freshDocs =
+            if (planeHasData(fs, docsPath, "__dbkt")) {
+              val dHit = docRows.select("__dbkt").distinct()
                 .collect().map(_.getLong(0)).toSeq
-              else Seq.empty[Long]
-            def existingKeys = spark.read.parquet(gramsPath.toString)
-              .where(col("__bkt").isin(hitBuckets: _*))
-              .select(col("__key").as("__ek"))
-            val corpusMarked =
-              if (gramsLive)
-                occ.join(existingKeys, col("__key") === col("__ek"))
-                  .select(col(idCol), col("pos"))
-              else occ.filter(lit(false)).select(col(idCol), col("pos"))
-            val marked = batchMarked.union(corpusMarked).distinct()
-            val spans = graft.ops.TextOps
-              .mergeMarkedWindows(marked, idCol, k)
-              .groupBy(col(idCol))
-              .agg(sort_array(collect_list(
-                struct(col("span_start"), col("span_end")))).as("dup_spans"),
-                sum(col("span_end") - col("span_start")).as("dup_tokens"))
-            val docRows = batch.select(col(idCol), col(textCol))
-              .join(spans, Seq(idCol), "left")
-              .select(col(idCol), col(textCol),
-                coalesce(col("dup_spans"), typedLit(
-                  Seq.empty[(Long, Long)]).cast(
-                  "array<struct<span_start:bigint,span_end:bigint>>"))
-                  .as("dup_spans"),
-                coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens"))
-              .withColumn("__dbkt",
-                coalesce(pmod(xxhash64(col(idCol)), lit(nBuckets.toLong)),
-                  lit(0L)))
-              .persist()
-            try {
-              // id-idempotent docs append (crash-replay safe)
-              val freshDocs =
-                if (planeHasData(fs, docsPath, "__dbkt")) {
-                  val dHit = docRows.select("__dbkt").distinct()
-                    .collect().map(_.getLong(0)).toSeq
-                  val ids = spark.read.parquet(docsPath.toString)
-                    .where(col("__dbkt").isin(dHit: _*))
-                    .select(col(idCol).as("__eid"))
-                  docRows.join(ids, docRows(idCol) <=> col("__eid"),
-                    "left_anti")
-                } else docRows
-              freshDocs.persist()
-              try {
-                val n = freshDocs.count()
-                if (n > 0) freshDocs.write.mode(SaveMode.Append)
-                  .partitionBy("__dbkt").parquet(docsPath.toString)
-                appended.addAndGet(n)
-              } finally freshDocs.unpersist()
-            } finally docRows.unpersist()
-            // grow the digest plane by the batch's genuinely-new digests
-            val batchKeys = occ.select(col("__key"), col("__bkt")).distinct()
-            val freshKeys =
-              if (gramsLive)
-                batchKeys.join(existingKeys,
-                  col("__key") === col("__ek"), "left_anti")
-              else batchKeys
-            freshKeys.write.mode(SaveMode.Append)
-              .partitionBy("__bkt").parquet(gramsPath.toString)
-          } finally occ.unpersist()
-          fs.mkdirs(commitsDir)
-          fs.createNewFile(marker)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    appended.get()
+              val ids = spark.read.parquet(docsPath.toString)
+                .where(col("__dbkt").isin(dHit: _*))
+                .select(col(idCol).as("__eid"))
+              docRows.join(ids, docRows(idCol) <=> col("__eid"),
+                "left_anti")
+            } else docRows
+          freshDocs.persist()
+          try {
+            val n = freshDocs.count()
+            if (n > 0) freshDocs.write.mode(SaveMode.Append)
+              .partitionBy("__dbkt").parquet(docsPath.toString)
+            n
+          } finally freshDocs.unpersist()
+        } finally docRows.unpersist()
+        // grow the digest plane by the batch's genuinely-new digests
+        val batchKeys = occ.select(col("__key"), col("__bkt")).distinct()
+        val freshKeys =
+          if (gramsLive)
+            batchKeys.join(existingKeys,
+              col("__key") === col("__ek"), "left_anti")
+          else batchKeys
+        freshKeys.write.mode(SaveMode.Append)
+          .partitionBy("__bkt").parquet(gramsPath.toString)
+        (appended, nothingAfter)
+      } finally occ.unpersist()
+    }
   }
 
   /** Read a [[dupSpanAppendSink]] target's document plane. */
   def readDupSpanTarget(spark: SparkSession, targetDir: String): DataFrame =
-    spark.read.parquet(
-      new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(targetDir), "docs").toString)
+    spark.read.parquet(new Path(targetDir, "docs").toString)
       .drop("__dbkt")
 
   /** Streaming INCREMENTAL SESSIONIZATION on plain parquet — the state
@@ -1634,9 +1513,8 @@ object StreamingIngest {
     * arrives ≥ gapUs after it, so the last one is always open) plus the
     * running `session_seq` counter that keeps ids deterministic across
     * batches; `closed/v<batchId>/` is the append-only closed-session
-    * log; global `_graft_commits/<batchId>` markers fence both planes
-    * (a torn write is invisible to [[readSessionTarget]] and replays
-    * overwrite it).
+    * log; the commit fence ([[fenced]]) covers both planes (a torn write
+    * is invisible to [[readSessionTarget]] and replays overwrite it).
     *
     * Per micro-batch: sessionize WITHIN the batch (one user-keyed
     * window pass, exact DECIMAL value sums); read ONLY the touched
@@ -1654,8 +1532,7 @@ object StreamingIngest {
     * Feed event-time-ordered input (e.g. a watermarked upstream);
     * boundary TIES (same microsecond) sessionize in arrival order.
     *
-    * Blocks until available input drains (AvailableNow). Returns
-    * batches applied (replays contribute 0).
+    * Returns batches applied (replays contribute 0).
     */
   def sessionSink(spark: SparkSession, stream: DataFrame, userCol: String,
                   usCol: String, tieCol: String, valueCol: String,
@@ -1666,171 +1543,127 @@ object StreamingIngest {
     require(gapUs > 0, s"gapUs must be > 0, got $gapUs")
     require(nBuckets > 0, "nBuckets must be positive")
     require(keepVersions >= 1, "keepVersions must be at least 1")
-    locally {
-      val (targetPath, fs) = hadoopFs(spark, targetDir)
-      checkOrWriteMarker(fs, targetPath, "_graft_session_geometry",
-        "session", s"userCol=$userCol,usCol=$usCol,tieCol=$tieCol," +
-          s"valueCol=$valueCol,gapUs=$gapUs,nBuckets=$nBuckets")
-    }
-    val applied = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (targetPath, fs) = hadoopFs(spark, targetDir)
-        val commitsDir = new org.apache.hadoop.fs.Path(targetPath, "_graft_commits")
-        val marker = new org.apache.hadoop.fs.Path(commitsDir, batchId.toString)
-        if (!fs.exists(marker)) {
-          val ev = batch.select(col(userCol).as("__u"),
-              col(usCol).cast("long").as("__eus"),
-              col(tieCol).as("__tie"),
-              coalesce(col(valueCol).cast("double").cast("decimal(18,6)"),
-                lit(0).cast("decimal(18,6)")).as("__v"))
-            .filter(col("__u").isNotNull && col("__eus").isNotNull)
-          // within-batch sessions: per (user, bseq) bounds/count and the
-          // EXACT decimal sum — state must accumulate exactly across
-          // batches, so the double cast happens only at read time
-          val wU = Window.partitionBy("__u")
-          val bsess = graft.ops.EventOps
-            .sessionize(ev, "__u", "__eus", "__tie", gapUs)
-            .groupBy(col("__u"), col("session_seq").as("__bseq"))
-            .agg(min(col("__eus")).as("__bstart"),
-              max(col("__eus")).as("__bend"),
-              count(lit(1)).as("__bn"),
-              sum(col("__v")).cast("decimal(28,6)").as("__bsum"))
-            .withColumn("__kmax", max(col("__bseq")).over(wU))
-            .withColumn(bucketCol,
-              pmod(xxhash64(col("__u")), lit(nBuckets.toLong)))
-            .persist()
-          try {
-            // ≤ nBuckets small longs — bounded driver traffic by design
-            val touched = bsess.select(bucketCol).distinct().collect()
-              .map(_.getLong(0)).toSeq
-            val openRoot = new org.apache.hadoop.fs.Path(targetPath, "open")
-            val committed = committedVersions(fs, targetPath).toSet
-            val curPaths = touched.flatMap(b =>
-              latestBucketVersion(fs, openRoot, b, committed))
-            def openShape(df: DataFrame) = df.select(col("__u"),
-              lit(0L).as("session_seq"), lit(0L).as("start_us"),
-              lit(0L).as("end_us"), lit(0L).as("n_events"),
-              lit(0).cast("decimal(28,6)").as("sum_v"), col(bucketCol))
-            val openCur =
-              if (curPaths.isEmpty) openShape(bsess).limit(0)
-              else spark.read.parquet(curPaths: _*)
-                .withColumnRenamed(userCol, "__u")
-            val batchUsers = bsess.select("__u").distinct()
-            val openCarry = openCur.join(batchUsers, Seq("__u"), "left_anti")
-            val oj = bsess.join(
-                openCur.join(batchUsers, Seq("__u"), "left_semi")
-                  .select(col("__u"), col("session_seq").as("__oseq"),
-                    col("start_us").as("__ostart"),
-                    col("end_us").as("__oend"),
-                    col("n_events").as("__on"), col("sum_v").as("__osum")),
-                Seq("__u"), "left")
-              // cross-batch ordering contract, enforced row-level
-              .filter(coalesce(
-                assert_true(col("__oend").isNull || col("__bseq") > 1 ||
-                    col("__bstart") >= col("__oend"),
-                  concat_ws("", lit("sessionSink: out-of-order event for"),
-                    lit(" user "), col("__u").cast("string"),
-                    lit(" — batch starts "), col("__bstart"),
-                    lit(" before stored open session end "),
-                    col("__oend"))),
-                lit(true)))
-              .withColumn("__mf1", when(col("__bseq") === 1,
-                col("__oend").isNotNull &&
-                  (col("__bstart") - col("__oend") < gapUs)))
-              .withColumn("__mf",
-                coalesce(max(col("__mf1")).over(wU), lit(false)))
-              .withColumn("__seq", coalesce(col("__oseq"), lit(0L)) +
-                col("__bseq") - when(col("__mf"), 1L).otherwise(0L))
-              .withColumn("__merged", col("__bseq") === 1 && col("__mf"))
-              .withColumn("__start", when(col("__merged"),
-                col("__ostart")).otherwise(col("__bstart")))
-              .withColumn("__n", when(col("__merged"),
-                col("__on") + col("__bn")).otherwise(col("__bn")))
-              .withColumn("__sum", when(col("__merged"),
-                col("__osum") + col("__bsum")).otherwise(col("__bsum"))
-                .cast("decimal(28,6)"))
-              .persist() // feeds the open write, the closed emptiness
-                         // probe and the closed write — one computation
-            val newOpen = openCarry.unionByName(
-              oj.filter(col("__bseq") === col("__kmax"))
-                .select(col("__u"), col("__seq").as("session_seq"),
-                  col("__start").as("start_us"),
-                  col("__bend").as("end_us"), col("__n").as("n_events"),
-                  col("__sum").as("sum_v"), col(bucketCol)))
-            val closed = oj.filter(col("__bseq") < col("__kmax"))
-              .select(col("__u"), col("__seq").as("session_seq"),
-                col("__start").as("start_us"), col("__bend").as("end_us"),
-                col("__n").as("n_events"), col("__sum").as("sum_v"))
-              .unionByName(
-                // an open session a non-merging batch closes, as stored
-                oj.filter(col("__bseq") === 1 && col("__oseq").isNotNull &&
-                    !col("__mf"))
-                  .select(col("__u"), col("__oseq").as("session_seq"),
-                    col("__ostart").as("start_us"),
-                    col("__oend").as("end_us"), col("__on").as("n_events"),
-                    col("__osum").as("sum_v")))
-            // one partitioned job rewrites the touched buckets' open rows
-            val tmp = new org.apache.hadoop.fs.Path(
-              targetPath, s"_graft_session_tmp_v$batchId")
-            newOpen.withColumnRenamed("__u", userCol)
-              .withColumn("__kbp", col(bucketCol))
-              .write.mode(SaveMode.Overwrite).partitionBy("__kbp")
-              .parquet(tmp.toString)
-            fs.globStatus(new org.apache.hadoop.fs.Path(tmp, "__kbp=*"))
-              .filter(_.isDirectory).foreach { d =>
-                val b = d.getPath.getName.stripPrefix("__kbp=")
-                val bucketDir = new org.apache.hadoop.fs.Path(openRoot, s"b$b")
-                val dest = new org.apache.hadoop.fs.Path(bucketDir, s"v$batchId")
-                fs.mkdirs(bucketDir)
-                fs.delete(dest, true) // stale uncommitted attempt, if any
-                require(fs.rename(d.getPath, dest),
-                  s"sessionSink: rename failed: ${d.getPath} -> $dest")
-              }
-            fs.delete(tmp, true)
-            // closed log: append-only, one dir per closing batch
-            if (!closed.isEmpty) {
-              val ctmp = new org.apache.hadoop.fs.Path(
-                targetPath, s"_graft_session_closed_tmp_v$batchId")
-              closed.withColumnRenamed("__u", userCol)
-                .write.mode(SaveMode.Overwrite).parquet(ctmp.toString)
-              val closedRoot = new org.apache.hadoop.fs.Path(targetPath, "closed")
-              fs.mkdirs(closedRoot)
-              val dest = new org.apache.hadoop.fs.Path(closedRoot, s"v$batchId")
-              fs.delete(dest, true) // stale uncommitted attempt, if any
-              require(fs.rename(ctmp, dest),
-                s"sessionSink: rename failed: $ctmp -> $dest")
-            }
-            fs.mkdirs(commitsDir)
-            fs.createNewFile(marker)
-            applied.incrementAndGet()
-            oj.unpersist()
-            // retention: prune each touched OPEN bucket's committed
-            // versions (the closed log is the output — never pruned)
-            val nowCommitted = committed + batchId
-            touched.foreach { b =>
-              val bucketDir = new org.apache.hadoop.fs.Path(openRoot, s"b$b")
-              bucketVersions(fs, bucketDir).filter(nowCommitted)
-                .sorted.reverse.drop(keepVersions).foreach { old =>
-                  fs.delete(
-                    new org.apache.hadoop.fs.Path(bucketDir, s"v$old"), true)
-                }
-            }
-          } finally bsess.unpersist()
+    val (targetPath, fs) = hadoopFs(spark, targetDir)
+    checkOrWriteMarker(fs, targetPath, "_graft_session_geometry",
+      "session", s"userCol=$userCol,usCol=$usCol,tieCol=$tieCol," +
+        s"valueCol=$valueCol,gapUs=$gapUs,nBuckets=$nBuckets")
+    val openRoot = new Path(targetPath, "open")
+    fenced(stream, targetDir, checkpointDir) { (batch, batchId) =>
+      val ev = batch.select(col(userCol).as("__u"),
+          col(usCol).cast("long").as("__eus"),
+          col(tieCol).as("__tie"),
+          coalesce(col(valueCol).cast("double").cast("decimal(18,6)"),
+            lit(0).cast("decimal(18,6)")).as("__v"))
+        .filter(col("__u").isNotNull && col("__eus").isNotNull)
+      // within-batch sessions: per (user, bseq) bounds/count and the
+      // EXACT decimal sum — state must accumulate exactly across
+      // batches, so the double cast happens only at read time
+      val wU = Window.partitionBy("__u")
+      val bsess = graft.ops.EventOps
+        .sessionize(ev, "__u", "__eus", "__tie", gapUs)
+        .groupBy(col("__u"), col("session_seq").as("__bseq"))
+        .agg(min(col("__eus")).as("__bstart"),
+          max(col("__eus")).as("__bend"),
+          count(lit(1)).as("__bn"),
+          sum(col("__v")).cast("decimal(28,6)").as("__bsum"))
+        .withColumn("__kmax", max(col("__bseq")).over(wU))
+        .withColumn(bucketCol,
+          pmod(xxhash64(col("__u")), lit(nBuckets.toLong)))
+        .persist()
+      try {
+        // ≤ nBuckets small longs — bounded driver traffic by design
+        val touched = bsess.select(bucketCol).distinct().collect()
+          .map(_.getLong(0)).toSeq
+        val committed = committedVersions(fs, targetPath).toSet
+        val curPaths = touched.flatMap(b =>
+          latestVersion(fs, new Path(openRoot, s"b$b"), committed))
+        def openShape(df: DataFrame) = df.select(col("__u"),
+          lit(0L).as("session_seq"), lit(0L).as("start_us"),
+          lit(0L).as("end_us"), lit(0L).as("n_events"),
+          lit(0).cast("decimal(28,6)").as("sum_v"), col(bucketCol))
+        val openCur =
+          if (curPaths.isEmpty) openShape(bsess).limit(0)
+          else spark.read.parquet(curPaths: _*)
+            .withColumnRenamed(userCol, "__u")
+        val batchUsers = bsess.select("__u").distinct()
+        val openCarry = openCur.join(batchUsers, Seq("__u"), "left_anti")
+        val oj = bsess.join(
+            openCur.join(batchUsers, Seq("__u"), "left_semi")
+              .select(col("__u"), col("session_seq").as("__oseq"),
+                col("start_us").as("__ostart"),
+                col("end_us").as("__oend"),
+                col("n_events").as("__on"), col("sum_v").as("__osum")),
+            Seq("__u"), "left")
+          // cross-batch ordering contract, enforced row-level
+          .filter(coalesce(
+            assert_true(col("__oend").isNull || col("__bseq") > 1 ||
+                col("__bstart") >= col("__oend"),
+              concat_ws("", lit("sessionSink: out-of-order event for"),
+                lit(" user "), col("__u").cast("string"),
+                lit(" — batch starts "), col("__bstart"),
+                lit(" before stored open session end "),
+                col("__oend"))),
+            lit(true)))
+          .withColumn("__mf1", when(col("__bseq") === 1,
+            col("__oend").isNotNull &&
+              (col("__bstart") - col("__oend") < gapUs)))
+          .withColumn("__mf",
+            coalesce(max(col("__mf1")).over(wU), lit(false)))
+          .withColumn("__seq", coalesce(col("__oseq"), lit(0L)) +
+            col("__bseq") - when(col("__mf"), 1L).otherwise(0L))
+          .withColumn("__merged", col("__bseq") === 1 && col("__mf"))
+          .withColumn("__start", when(col("__merged"),
+            col("__ostart")).otherwise(col("__bstart")))
+          .withColumn("__n", when(col("__merged"),
+            col("__on") + col("__bn")).otherwise(col("__bn")))
+          .withColumn("__sum", when(col("__merged"),
+            col("__osum") + col("__bsum")).otherwise(col("__bsum"))
+            .cast("decimal(28,6)"))
+          .persist() // feeds the open write, the closed emptiness
+                     // probe and the closed write — one computation
+        val newOpen = openCarry.unionByName(
+          oj.filter(col("__bseq") === col("__kmax"))
+            .select(col("__u"), col("__seq").as("session_seq"),
+              col("__start").as("start_us"),
+              col("__bend").as("end_us"), col("__n").as("n_events"),
+              col("__sum").as("sum_v"), col(bucketCol)))
+        val closed = oj.filter(col("__bseq") < col("__kmax"))
+          .select(col("__u"), col("__seq").as("session_seq"),
+            col("__start").as("start_us"), col("__bend").as("end_us"),
+            col("__n").as("n_events"), col("__sum").as("sum_v"))
+          .unionByName(
+            // an open session a non-merging batch closes, as stored
+            oj.filter(col("__bseq") === 1 && col("__oseq").isNotNull &&
+                !col("__mf"))
+              .select(col("__u"), col("__oseq").as("session_seq"),
+                col("__ostart").as("start_us"),
+                col("__oend").as("end_us"), col("__on").as("n_events"),
+                col("__osum").as("sum_v")))
+        publishBuckets(fs, newOpen.withColumnRenamed("__u", userCol), openRoot,
+          new Path(targetPath, s"_graft_session_tmp_v$batchId"), batchId)
+        // closed log: append-only, one dir per closing batch
+        if (!closed.isEmpty) {
+          val ctmp = new Path(targetPath, s"_graft_session_closed_tmp_v$batchId")
+          closed.withColumnRenamed("__u", userCol)
+            .write.mode(SaveMode.Overwrite).parquet(ctmp.toString)
+          val closedRoot = new Path(targetPath, "closed")
+          fs.mkdirs(closedRoot)
+          val dest = new Path(closedRoot, s"v$batchId")
+          fs.delete(dest, true) // stale uncommitted attempt, if any
+          require(fs.rename(ctmp, dest),
+            s"sessionSink: rename failed: $ctmp -> $dest")
         }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    applied.get()
+        oj.unpersist()
+        // retention prunes the OPEN buckets only: the closed log is the output
+        (1L, () => pruneBuckets(fs, openRoot, touched, committed + batchId,
+          keepVersions))
+      } finally bsess.unpersist()
+    }
   }
 
-  /** Offline compactor for a [[sessionSink]] target's CLOSED plane —
-    * the r16 verdict gap: the closed log gains one `closed/v<batchId>`
-    * directory per closing wave, so a many-wave deployment accumulates
-    * small files that tax every read. This folds ALL committed closed
+  /** Offline compactor for a [[sessionSink]] target's CLOSED plane: the
+    * closed log gains one `closed/v<batchId>` directory per closing wave,
+    * so a many-wave deployment accumulates small files that tax every read. This folds ALL committed closed
     * directories into one consolidated directory (named after the
     * largest folded id, which is already commit-fenced), sized to
     * `targetFileBytes` — the [[compactDedupTarget]] maintenance shape
@@ -1861,13 +1694,10 @@ object StreamingIngest {
                            targetFileBytes: Long = 128L * 1024 * 1024): Int = {
     val (targetPath, fs) = hadoopFs(spark, targetDir)
     if (!fs.exists(targetPath)) return 0
-    val closedRoot = new org.apache.hadoop.fs.Path(targetPath, "closed")
-    val plan = new org.apache.hadoop.fs.Path(
-      targetPath, "_graft_session_compact_plan")
-    val tmp = new org.apache.hadoop.fs.Path(
-      targetPath, "_graft_session_closed_ctmp")
-    def trashOf(v: Long) = new org.apache.hadoop.fs.Path(
-      closedRoot, s"_graft_compact_old_closed_v$v")
+    val closedRoot = new Path(targetPath, "closed")
+    val plan = new Path(targetPath, "_graft_session_compact_plan")
+    val tmp = new Path(targetPath, "_graft_session_closed_ctmp")
+    def trashOf(v: Long) = new Path(closedRoot, s"_graft_compact_old_closed_v$v")
     // ---- recovery from a torn previous run ------------------------------
     if (fs.exists(plan)) {
       val in = fs.open(plan)
@@ -1885,14 +1715,14 @@ object StreamingIngest {
           // dirs are intact and the state is 'no plan in flight'
           fs.delete(plan, false)
         case scala.util.Success((dest, srcs)) =>
-          val destDir = new org.apache.hadoop.fs.Path(closedRoot, s"v$dest")
+          val destDir = new Path(closedRoot, s"v$dest")
           if (fs.exists(destDir) && !fs.exists(tmp)) {
             // swap completed — finish the cleanup
             srcs.foreach(v => fs.delete(trashOf(v), true))
           } else if (fs.exists(tmp)) {
             // tmp complete (plan is written only after) — roll forward
             srcs.foreach { v =>
-              val orig = new org.apache.hadoop.fs.Path(closedRoot, s"v$v")
+              val orig = new Path(closedRoot, s"v$v")
               if (fs.exists(orig)) require(fs.rename(orig, trashOf(v)),
                 s"compactSessionTarget: recovery rename failed: $orig")
             }
@@ -1905,7 +1735,7 @@ object StreamingIngest {
             srcs.foreach { v =>
               val t = trashOf(v)
               if (fs.exists(t)) require(fs.rename(t,
-                new org.apache.hadoop.fs.Path(closedRoot, s"v$v")),
+                new Path(closedRoot, s"v$v")),
                 s"compactSessionTarget: rollback rename failed: $t")
             }
           }
@@ -1931,11 +1761,10 @@ object StreamingIngest {
     spark.read.parquet(srcDirs.map(_._2.getPath.toString): _*)
       .coalesce(wantFiles)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"), false)
+    fs.delete(new Path(tmp, "_SUCCESS"), false)
     // plan goes live by RENAME (the same atomicity primitive the swap
     // relies on) — a crash mid-write leaves only the inert .inprogress
-    val planTmp = new org.apache.hadoop.fs.Path(
-      targetPath, "_graft_session_compact_plan.inprogress")
+    val planTmp = new Path(targetPath, "_graft_session_compact_plan.inprogress")
     val out = fs.create(planTmp, true)
     try out.write(
       (s"dest=$dest;src=${srcDirs.map(_._1).mkString(",")}").getBytes("UTF-8"))
@@ -1947,7 +1776,7 @@ object StreamingIngest {
         s"compactSessionTarget: rename failed: ${d.getPath}")
     }
     require(fs.rename(tmp,
-      new org.apache.hadoop.fs.Path(closedRoot, s"v$dest")),
+      new Path(closedRoot, s"v$dest")),
       s"compactSessionTarget: rename failed: $tmp")
     srcDirs.foreach { case (v, _) => fs.delete(trashOf(v), true) }
     fs.delete(plan, false)
@@ -1974,18 +1803,12 @@ object StreamingIngest {
     import org.apache.spark.sql.functions._
     val (targetPath, fs) = hadoopFs(spark, targetDir)
     val committed = committedVersions(fs, targetPath).toSet
-    val openRoot = new org.apache.hadoop.fs.Path(targetPath, "open")
-    val openPaths = fs.globStatus(new org.apache.hadoop.fs.Path(openRoot, "b*"))
-      .filter(_.isDirectory)
-      .flatMap { b =>
-        bucketVersions(fs, b.getPath).filter(committed).maxOption
-          .map(v => new org.apache.hadoop.fs.Path(b.getPath, s"v$v").toString)
-      }
+    val openPaths = latestBuckets(fs, new Path(targetPath, "open"), committed)
     if (openPaths.isEmpty) throw new IllegalStateException(
       s"no committed session state under $targetDir")
-    val open = spark.read.parquet(openPaths.toIndexedSeq: _*).drop(bucketCol)
+    val open = spark.read.parquet(openPaths: _*).drop(bucketCol)
       .withColumn("is_open", lit(true))
-    val closedRoot = new org.apache.hadoop.fs.Path(targetPath, "closed")
+    val closedRoot = new Path(targetPath, "closed")
     val closedPaths =
       if (!fs.exists(closedRoot)) Seq.empty[String]
       else fs.listStatus(closedRoot).toSeq.filter(_.isDirectory)
@@ -2001,8 +1824,7 @@ object StreamingIngest {
       case None => both
       case Some(asOf) =>
         // gap from the geometry marker the sink wrote at target birth
-        val marker = new org.apache.hadoop.fs.Path(
-          targetPath, "_graft_session_geometry")
+        val marker = new Path(targetPath, "_graft_session_geometry")
         require(fs.exists(marker),
           s"readSessionTarget: no session geometry under $targetDir")
         val in = fs.open(marker)
@@ -2021,16 +1843,4 @@ object StreamingIngest {
       .withColumn("sum_value", col("sum_v").cast("string").cast("double"))
       .drop("sum_v")
   }
-
-  private def committedVersions(fs: org.apache.hadoop.fs.FileSystem,
-                                statePath: org.apache.hadoop.fs.Path): Seq[Long] = {
-    val commitsDir = new org.apache.hadoop.fs.Path(statePath, "_graft_commits")
-    if (!fs.exists(commitsDir)) Seq.empty
-    else fs.listStatus(commitsDir).toSeq
-      .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-  }
-
-  private def latestCommittedVersion(fs: org.apache.hadoop.fs.FileSystem,
-                                     statePath: org.apache.hadoop.fs.Path): Option[Long] =
-    committedVersions(fs, statePath).sorted.lastOption
 }

@@ -17,6 +17,14 @@ class EtlSpec extends AnyFunSuite {
 
   private def raw = Sources.csv(spark, fixture, Schemas.covidRaw)
 
+  private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+    val s = Files.walk(from)
+    try s.forEach { p =>
+      val dst = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(dst) else Files.copy(p, dst)
+    } finally s.close()
+  }
+
   test("transform keeps exactly the rows the reference keeps") {
     val clean = CovidTransform.clean(raw)
     val rows = clean.orderBy("entity").collect()
@@ -110,6 +118,41 @@ class EtlSpec extends AnyFunSuite {
     val n3 = streaming.StreamingIngest.runAvailableNow(spark, dir.toString, out, ckpt)
     assert(n3 == 5)
     assert(spark.read.parquet(out).count() == 10)
+    // a crash after the batch's write but before the checkpoint's commit
+    // replays that batch id: the output's commit marker makes it write nothing
+    val last = Paths.get(ckpt, "commits").toFile.list().flatMap(_.toLongOption).max
+    def uncommit(): Unit = Seq(s"$last", s".$last.crc").foreach(f =>
+      Files.deleteIfExists(Paths.get(ckpt, "commits", f)))
+    uncommit()
+    assert(streaming.StreamingIngest.runAvailableNow(spark, dir.toString, out, ckpt) == 0)
+    assert(spark.read.parquet(out).count() == 10)
+    // a crash before the marker too: the replay rewrites the batch once
+    uncommit()
+    Files.delete(Paths.get(out, "_graft_commits", s"$last"))
+    assert(streaming.StreamingIngest.runAvailableNow(spark, dir.toString, out, ckpt) == 5)
+    // both files carry the same five rows: each is in the output once per file
+    val perRow = spark.read.parquet(out)
+      .groupBy("entity", "Day", "total_confirmed_deaths").count()
+      .collect().map(_.getLong(3)).toSeq
+    assert(perRow.length == 5 && perRow.forall(_ == 2L), perRow)
+  }
+
+  test("ELT pipeline reruns against a warehouse an earlier JVM left behind") {
+    spark.sql("DROP DATABASE IF EXISTS covid_same_jvm CASCADE")
+    Jobs.eltPipeline(spark, fixture, "covid_same_jvm")
+    val sameJvm = Jobs.eltPipeline(spark, fixture, "covid_same_jvm")
+    assert(sameJvm == 16)
+    // the session catalog is in-memory: a second JVM sees the database's
+    // table directories but no catalog entries
+    spark.sql("DROP DATABASE IF EXISTS covid_orphan CASCADE")
+    Jobs.eltPipeline(spark, fixture, "covid_orphan")
+    val dbDir = Paths.get(new java.net.URI(
+      spark.sessionState.catalog.getDatabaseMetadata("covid_orphan").locationUri.toString))
+    val aside = Files.createTempDirectory("graft-elt-aside").resolve("covid_orphan")
+    copyTree(dbDir, aside)
+    spark.sql("DROP DATABASE covid_orphan CASCADE")
+    copyTree(aside, dbDir)
+    assert(Jobs.eltPipeline(spark, fixture, "covid_orphan") == sameJvm)
   }
 
   test("source resolver dispatches by extension") {
