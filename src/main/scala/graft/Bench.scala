@@ -1,75 +1,32 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
 
-/** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line {"metric":...,"queries":{...}}.
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Benchmark main: times every declared lane on SPARK_GRAFT_SF_DIR, prints
+  * one compact JSON line and writes the full record to
+  * `bench/last_run_c<cpus>_<sf>.json`. With SPARK_GRAFT_ONLY it is the
+  * lane probe: the named lanes only, written to `bench/last_subset.json`.
   *
-  * Methodology:
-  *   - session warmed up with one untimed query so JIT/classloading/codegen
-  *     compilation is not billed to the first timed query;
-  *   - the `noop` sink forces FULL materialization of every output row
-  *     (`count()` would let Catalyst prune the projections being measured);
-  *   - queries run in sorted name order, min over the measured cold reps
-  *     reported (the first run still pays plan codegen; min approximates
-  *     steady-state and damps host noise);
-  *   - TIERED REPS (r15 verdict ask #2 — the min-of-3 sweep's wall time
-  *     grew linearly with the 254-query inventory): a query whose
-  *     normalized analyzed-plan hash matches the previous full sweep's
-  *     (code untouched) runs TWO cold reps and stops early when the
-  *     min-of-2 confirms the previous pin (within 15% + 50 ms — rep 1
-  *     pays codegen, so a single rep can never confirm); any query that
-  *     is NEW, TOUCHED (hash changed/missing), or UNCONFIRMED gets the
-  *     full three base reps plus the variance machinery below. Reported
-  *     mins stay comparable round-over-round because the previous pin
-  *     was produced by the same rule, and a genuinely regressed query
-  *     always fails the confirm and falls through to the full reps and
-  *     the auto re-pin protocol. THE REPORTED NUMBER IS ALWAYS THIS
-  *     RUN'S MIN-OF-REPS (r20 verdict #1: the old rule reported
-  *     min(cur, committed pin) for confirmed lanes, which re-emitted
-  *     historical minima in the judged artifact — a one-way ratchet
-  *     that overstated round-over-round gains). The accumulated
-  *     low-water marks survive as the separate `pins` diagnostic map;
-  *     they gate only HOW MANY reps a lane runs (the fast-tier
-  *     confirm), never what is reported. The pin file is keyed by
-  *     (cpus, sf) so confirm/accumulation never cross configurations
-  *     (r20 verdict #1: the driver's 8-core run confirmed against and
-  *     then overwrote 32-core pins). Plan hashes normalize expression ids,
-  *     object addresses and the SF dir, so they are stable across JVMs
-  *     for identical code; an eager (checkpointed) query's hash covers
-  *     only its output schema — the confirm-vs-prev rule, not the hash,
-  *     is what guards those;
-  *   - the cache is cleared after EVERY rep, so each rep is cold: a query
-  *     that persists an intermediate frame is billed its real wall time,
-  *     not warm-cache serving cost;
-  *   - extra reps are VARIANCE-DRIVEN, not hand-listed: after the base 3
-  *     reps, any query whose steady-state rep spread (max-min)/min OVER
-  *     REPS 2..n — rep 1 always pays plan codegen and would trip the
-  *     rule for every query — exceeds 33% gets up to 2 more reps
-  *     (5 total). The 33% bound is the measured clean-run jitter ceiling
-  *     of the iterative queries on this host (r3: multi-job queries
-  *     swung ±15-33% between clean sweeps while single-stage queries
-  *     held ±15%); deriving membership from the observed spread means
-  *     newly-added iterative queries are covered automatically;
-  *   - the artifact self-diagnoses host contention: per-rep wall times and
-  *     per-rep JVM GC time (GarbageCollectorMXBeans collection-time delta)
-  *     are emitted alongside the min, so a sustained host event (uniform
-  *     rep inflation, flat GC) is distinguishable from a plan property
-  *     (every rep slow) or allocation pressure (GC-dominated reps) in the
-  *     judged artifact itself;
-  *   - PREV-AWARE AUTO RE-PIN: before a query can enter
-  *     `vs_prev.regressions`, it must hold its slowdown through up to 3
-  *     EXTRA reps run immediately (min-of-all reported). Five rounds of
-  *     history (q59, q56, q34, q147/q148, q180-q182) show this artifact's
-  *     only recurring false signal is a transient host-contention window
-  *     inflating a few consecutive sweep slots; extra reps minutes later
-  *     in the same sweep land outside the window and re-pin the true
-  *     time, making `vs_prev` self-adjudicating. A REAL regression (every
-  *     rep slow) survives the extra reps and is still named. Re-pinned
-  *     query names and their extra-rep counts are emitted as `repinned`
-  *     in both artifact lines.
+  * Rep policy: after one untimed warm-up lane, every lane runs 3 cold
+  * reps and reports their minimum. A rep builds the lane and writes it to
+  * the `noop` sink, which materializes every row, under a wall-clock
+  * circuit breaker; the cache is cleared after each rep. A lane whose
+  * minimum [[regressed]] against the prior sweep at the same (cpus, sf)
+  * runs up to 3 more reps before `vs_prev` may name it (the auto re-pin,
+  * listed in `repinned`): a host-contention window passes, a real
+  * regression survives. Per rep the record holds the wall, the JVM GC
+  * millis and the rep's [[RepRecord]].
   */
 object Bench {
+
+  private val Reps = 3
+  private val RepinReps = 3
 
   private def fmt(d: Double): String = BigDecimal(d)
     .setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
@@ -85,28 +42,93 @@ object Bench {
       cur - prev > RegressionAbsSec
 
   /** Timed-out rep sentinel — distinct from the −1.0 raised-on-every-rep
-    * failure marker so the artifact names the two differently (r18: one
-    * lane that could not finish a rep consumed the driver's whole bench
-    * budget and invalidated the artifact for 81 healthy lanes behind it).
+    * failure marker so the artifact names the two differently: one lane
+    * that cannot finish a rep must cost one row, not the sweep.
     */
   private[graft] val TimedOutSentinel = -2.0
 
+  /** The Spark work of one rep: jobs, completed stages, tasks and their
+    * summed executor run time.
+    */
+  private[graft] final case class RepRecord(jobs: Int, stages: Int,
+                                            tasks: Int, taskRunMs: Long)
+
+  /** Counts a [[RepRecord]] per job group. Stage and task events carry no
+    * job group, so a stage counts toward the group of the job that
+    * submitted it.
+    */
+  private[graft] final class RepListener extends SparkListener {
+    private final class Counts {
+      val started, ended, stages, tasks = new AtomicInteger
+      val taskRunMs = new AtomicLong
+    }
+    private val groups = new ConcurrentHashMap[String, Counts]
+    private val jobs = new ConcurrentHashMap[Int, Counts]
+    private val stages = new ConcurrentHashMap[Int, Counts]
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .foreach { g =>
+          val c = groups.computeIfAbsent(g, _ => new Counts)
+          jobs.put(e.jobId, c)
+          e.stageIds.foreach(stages.put(_, c))
+          c.started.incrementAndGet()
+        }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      Option(jobs.remove(e.jobId)).foreach { c =>
+        c.ended.incrementAndGet()
+        synchronized(notifyAll())
+      }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      Option(stages.get(e.stageInfo.stageId)).foreach(_.stages.incrementAndGet())
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      Option(stages.get(e.stageId)).foreach { c =>
+        c.tasks.incrementAndGet()
+        if (e.taskMetrics != null) c.taskRunMs.addAndGet(e.taskMetrics.executorRunTime)
+      }
+
+    /** Removes and returns `group`'s record; call it once the group's jobs
+      * have returned. The listener bus is asynchronous, so this first runs
+      * a zero-partition fence job: the scheduler posts its start and end
+      * at once, after every event of the finished jobs, and the record is
+      * read when the fence's job-end count equals its job-start count.
+      * Runs the fence under this thread's job group, then clears it; a
+      * fence that does not settle in 30 s leaves the record as counted.
+      */
+    def take(sc: SparkContext, group: String): RepRecord = {
+      val fence = s"$group-fence"
+      sc.setJobGroup(fence, fence)
+      try sc.emptyRDD[Int].count() finally sc.clearJobGroup()
+      def settled = Option(groups.get(fence)).exists(c => c.ended.get == c.started.get)
+      val deadline = System.nanoTime() + 30000L * 1000000L
+      synchronized {
+        while (!settled && System.nanoTime() < deadline)
+          wait(math.max(1L, (deadline - System.nanoTime()) / 1000000L))
+      }
+      groups.remove(fence)
+      val c = Option(groups.remove(group)).getOrElse(new Counts)
+      stages.values.removeIf(_ eq c)
+      RepRecord(c.started.get, c.stages.get, c.tasks.get, c.taskRunMs.get)
+    }
+  }
+
+  private val repSeq = new AtomicLong
+
   /** One rep under a wall-clock circuit breaker: the lane body (plan
     * construction AND the noop write — iterative lanes launch jobs from
-    * both) runs on a daemon thread inside its own job group with
-    * `interruptOnCancel`; past `timeoutMs` the group is cancelled (kills
-    * executor-side hangs), then the thread interrupted (driver-side
-    * hangs), and the rep records [[TimedOutSentinel]] while the sweep
-    * CONTINUES on the still-healthy SparkContext. Returns (wall seconds
-    * or a negative sentinel, normalized plan hash when the rep
-    * completed).
+    * both) runs on a daemon thread inside a job group of its own with
+    * `interruptOnCancel`; past `timeoutMs` the group's running and
+    * future jobs are cancelled (kills executor-side hangs), then the
+    * thread interrupted (driver-side hangs), and the rep records
+    * [[TimedOutSentinel]] while the sweep continues on the still-healthy
+    * SparkContext. Returns (wall seconds or a negative sentinel, the
+    * rep's record from `listener`).
     */
   private[graft] def boundedRep(spark: SparkSession, name: String,
-      sfDir: String, timeoutMs: Long)(
-      build: () => org.apache.spark.sql.DataFrame): (Double, Option[String]) = {
-    val group = s"graft-bench-rep-$name"
-    val timedOut = new java.util.concurrent.atomic.AtomicBoolean(false)
-    @volatile var hash: Option[String] = None
+      timeoutMs: Long, listener: RepListener)(
+      build: () => DataFrame): (Double, RepRecord) = {
+    val group = s"graft-bench-rep-$name-${repSeq.incrementAndGet()}"
+    val timedOut = new AtomicBoolean(false)
     // stays the sentinel unless the body lands a value — an abandoned
     // (unkillable driver-side) thread still yields a parseable artifact
     @volatile var elapsed: Double = TimedOutSentinel
@@ -118,15 +140,8 @@ object Bench {
           // thread so the cancel targets exactly this rep's jobs
           spark.sparkContext.setJobGroup(group, s"bench rep: $name",
             interruptOnCancel = true)
-          val df = build()
-          df.write.mode("overwrite").format("noop").save()
-          val t = (System.nanoTime() - t0) / 1e9
-          // untimed: the plan string + md5 cost milliseconds and must not
-          // be billed to the rep
-          hash = scala.util.Try(
-            normalizedPlanHash(df.queryExecution.analyzed.toString, sfDir)
-          ).toOption
-          t
+          build().write.mode("overwrite").format("noop").save()
+          (System.nanoTime() - t0) / 1e9
         } catch {
           case e: Throwable =>
             if (timedOut.get) TimedOutSentinel
@@ -145,83 +160,20 @@ object Bench {
       System.err.println(
         s"[bench] $name rep exceeded ${timeoutMs / 1000}s — cancelling " +
           "its job group and continuing the sweep")
-      scala.util.Try(spark.sparkContext.cancelJobGroup(group))
+      // the group is this rep's alone, so its future jobs go too: a job
+      // the body submits after the cancel must not outlive the rep
+      scala.util.Try(spark.sparkContext.cancelJobGroupAndFutureJobs(group))
       body.join(30000)
       if (body.isAlive) { // driver-side hang: interrupt, then abandon
         body.interrupt()
         body.join(30000)
       }
     }
-    (elapsed, hash)
+    (elapsed, listener.take(spark.sparkContext, group))
   }
 
-  /** Fast-tier early-stop: an unchanged-plan query's min-of-2 confirms the
-    * previous pin when within 15% + 50 ms (measured on r15 rep data: this
-    * bound stops ~92% of queries at 2 reps with +4.5% aggregate bias in
-    * the transition round and none at steady state, cutting sweep wall
-    * time 856 s → ~600 s at 254 queries).
-    */
-  private[graft] val ConfirmRatio = 1.15
-  private[graft] val ConfirmAbsSec = 0.05
-  private[graft] def confirms(cur: Double, prev: Double): Boolean =
-    prev > 0 && cur >= 0 && cur <= prev * ConfirmRatio + ConfirmAbsSec
-
-  /** A lane's next low-water pin from this run's min-of-reps `cur` (< 0
-    * when no rep succeeded) and the previous pin. While the lane's plan
-    * is unchanged the pin only ratchets down, and a failed/timed-out run
-    * carries it forward; a changed plan drops it, since a rewritten lane
-    * may be legitimately slower and a stale pin would fail every
-    * fast-tier confirm after it.
-    */
-  private[graft] def nextPin(cur: Double, prevPin: Option[Double],
-                             samePlan: Boolean): Double = {
-    val carried = prevPin.filter(_ => samePlan)
-    if (cur >= 0) math.min(cur, carried.getOrElse(cur))
-    else carried.getOrElse(cur)
-  }
-
-  /** Plan-identity hash for the touched-query detector: expression ids
-    * (#123), object addresses and the SF dir are run-varying noise and
-    * normalized away; everything else (operators, columns, literals,
-    * join types) is the query's code shape.
-    */
-  private[graft] def normalizedPlanHash(plan: String, sfDir: String): String =
-    md5Hex(normalizePlan(plan, sfDir))
-
-  private[graft] def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-
-  private[graft] def normalizePlan(plan: String, sfDir: String): String = {
-    plan.replace(sfDir, "<SF>")
-      .replaceAll("#\\d+", "#")
-      // JVM lambda class names (typed-Dataset closures render into the
-      // analyzed plan, e.g. MapPartitions Multimodal$$Lambda$123/0x7f...)
-      // carry a classload-order counter + per-JVM address — run-varying
-      // noise, the one instability of 308 lanes in r19 (q119's
-      // mapPartitions). Strip both forms (JDK 8 `$$Lambda$N`, 9+ adds
-      // `/0xADDR`).
-      .replaceAll("\\$\\$Lambda\\$?\\d*(/0x[0-9a-fA-F]+|/\\d+)?", "\\$\\$Lambda")
-      .replaceAll("@[0-9a-fA-F]{6,}", "@")
-      // higher-order-function lambda variables are named from a global
-      // JVM counter (`lambda x_119#`, `lambda y_21#`) — the counter value
-      // depends on how many HOF plans the session built before this one,
-      // which made all 60 transform/aggregate lanes re-hash between sweep
-      // and audit
-      .replaceAll("\\b([a-z])_\\d+#", "$1_#")
-      // recursive-CTE plan ids are global counters too (CTERelationDef 4,
-      // UnionLoop 0) — strip the number, keep the operator
-      .replaceAll("\\b(CTERelationDef|CTERelationRef|UnionLoop|UnionLoopRef) \\d+",
-        "$1 ")
-      // generated 12-hex suffixes (scratch dirs, temp-view tags) are
-      // run-varying ids, never semantics
-      .replaceAll("_[0-9a-f]{12}\\b", "_<ID>")
-  }
-
-  /** Pin-file name keyed by configuration: fast-tier confirm and pin
-    * accumulation must never cross (cpus, sf) — an 8-core sweep confirming
-    * 32-core minima corrupts both the scaling read and the pin history.
+  /** Prior-file name keyed by configuration: the auto re-pin and
+    * `vs_prev` never compare across (cpus, sf).
     */
   private[graft] def pinFileName(cpus: String, sfDir: String): String = {
     val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
@@ -251,51 +203,6 @@ object Bench {
       }
     }.toOption.filter(_.nonEmpty)
 
-  /** The accumulated per-config low-water marks (`pins` in the full
-    * artifact; falls back to `queries` for a file written before the
-    * pins/queries split so the first keyed sweep still gets a fast tier).
-    * Diagnostic + rep-count gating only — never reported as a time.
-    */
-  private[graft] def parsePrevPins(
-      path: java.nio.file.Path): Map[String, Double] =
-    if (!java.nio.file.Files.exists(path)) Map.empty
-    else scala.util.Try {
-      import org.json4s._
-      val j = org.json4s.jackson.JsonMethods.parse(new String(
-        java.nio.file.Files.readAllBytes(path),
-        java.nio.charset.StandardCharsets.UTF_8))
-      def asMap(v: JValue): Map[String, Double] = v match {
-        case JObject(fs) => fs.collect {
-          case (k, JDouble(x)) => k -> x
-          case (k, JDecimal(x)) => k -> x.toDouble
-          case (k, JInt(x)) => k -> x.toDouble
-        }.toMap
-        case _ => Map.empty[String, Double]
-      }
-      val pins = asMap(j \ "pins")
-      if (pins.nonEmpty) pins else asMap(j \ "queries")
-    }.getOrElse(Map.empty)
-
-  /** The previous sweep's per-query plan hashes (absent in pre-r16
-    * artifacts → every query reads as touched → full reps, the safe
-    * degradation).
-    */
-  private[graft] def parsePrevHashes(
-      path: java.nio.file.Path): Map[String, String] =
-    if (!java.nio.file.Files.exists(path)) Map.empty
-    else scala.util.Try {
-      import org.json4s._
-      val j = org.json4s.jackson.JsonMethods.parse(new String(
-        java.nio.file.Files.readAllBytes(path),
-        java.nio.charset.StandardCharsets.UTF_8))
-      (j \ "plan_hash") match {
-        case JObject(fs) => fs.collect {
-          case (k, JString(v)) => k -> v
-        }.toMap
-        case _ => Map.empty[String, String]
-      }
-    }.getOrElse(Map.empty)
-
   /** Round-over-round comparison JSON: totals over the queries COMMON to
     * both sweeps (new queries must not read as a slowdown), plus named
     * regressions when both >1.5x and >0.3s absolute (sub-second jitter is
@@ -311,8 +218,7 @@ object Bench {
     // common lanes. The median is robust to the handful of genuinely
     // changed lanes, so a sweep on a 1.3x-loaded host reads ~1.3 here
     // while its named regressions read much higher — the artifact
-    // carries its own host-vs-code adjudication signal instead of
-    // leaning on a later quiet-window A/B (r20 carry item #4).
+    // carries its own host-vs-code adjudication signal.
     val ratios = common.collect {
       case n if pm(n) > 0 => curMap(n) / pm(n)
     }.sorted
@@ -329,195 +235,100 @@ object Bench {
         hf)},"regressions":$regs}"""
   }
 
+  private final case class Rep(sec: Double, gcMs: Long, work: RepRecord)
+  private final case class Lane(name: String, sec: Double, reps: Seq[Rep],
+                                repins: Int)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val only = SparkEntry.onlyLanes(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = JobRunner.session("graft-bench")
+    val listener = new RepListener
+    spark.sparkContext.addSparkListener(listener)
+    val lanes = SparkEntry.queries
 
     import scala.jdk.CollectionConverters._
     def gcMillis(): Long =
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
 
-    // per-rep wall-clock circuit breaker (r18: lane q293 sat 41 min in
-    // its first rep and starved the 81 lanes after it — one bad lane must
-    // cost one bad ROW, not the artifact). 120 s default is >10x the
-    // slowest healthy lane's solo pin.
+    // per-rep circuit breaker: 120 s by default, over 10x the slowest
+    // healthy lane
     val repTimeoutMs = sys.env.get("SPARK_GRAFT_REP_TIMEOUT_SEC")
       .map(_.trim.toLong * 1000L).getOrElse(120000L)
 
-    /** One cold rep under the circuit breaker: (wall seconds or negative
-      * sentinel, GC millis spent during the rep, normalized plan hash —
-      * computed OUTSIDE the timed region).
-      */
-    def runNoop(name: String): (Double, Long, Option[String]) = {
+    def runNoop(name: String): Rep = {
       val gc0 = gcMillis()
-      val (elapsed, hash) = boundedRep(spark, name, sfDir, repTimeoutMs)(
-        () => SparkEntry.queries(name)(spark, sfDir))
+      val (sec, work) = boundedRep(spark, name, repTimeoutMs, listener)(
+        () => lanes(name)(spark, sfDir))
       val gcDelta = gcMillis() - gc0
-      // every rep runs COLD (clear is untimed): a query that persist()s an
-      // intermediate frame (e.g. q113's weights diamond) would otherwise
-      // serve later reps from the leftover cache, and min-of-N would
-      // report warm serving cost instead of the query's real wall time —
-      // clearing also keeps leftover caches from accumulating across the
-      // 100+-query sweep
+      // untimed, and what makes every rep cold: a lane that persist()s an
+      // intermediate frame would otherwise serve its later reps from cache
       spark.catalog.clearCache()
-      (elapsed, gcDelta, hash)
+      Rep(sec, gcDelta, work)
     }
 
-    // SPARK_GRAFT_ONLY=q59_lateral_explode,q60_... re-pins a subset with the
-    // same methodology (warm-up + min-of-3) — for bisecting single-query
-    // regressions without paying the full sweep
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty) // empty/whitespace-only value = no filter
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.mkString(", ")}")
-    }
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-    require(names.nonEmpty, "SPARK_GRAFT_ONLY matched no queries")
+    val names = lanes.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
     runNoop(names.head) // warm-up, untimed
 
-    // prev sweep read BEFORE this sweep both overwrites it and uses it for
-    // the auto re-pin below. The file is keyed by (cpus, sf): a sweep at a
-    // different core count or SF sees no prior (full reps, no vs_prev)
-    // instead of confirming against another configuration's numbers.
+    // read before this sweep overwrites it; a subset run has no prior and
+    // writes a side file instead
     val prevPath = java.nio.file.Paths.get("bench", pinFileName(cpus, sfDir))
     val prevMap: Option[Map[String, Double]] =
       if (only.nonEmpty) None else parsePrevQueries(prevPath)
-    val prevPins: Map[String, Double] =
-      if (only.nonEmpty) Map.empty else parsePrevPins(prevPath)
-    val prevHashes: Map[String, String] =
-      if (only.nonEmpty) Map.empty else parsePrevHashes(prevPath)
+    val outPath =
+      if (only.isEmpty) prevPath else prevPath.resolveSibling("last_subset.json")
 
-    val baseReps = 3
-    val maxReps = 5
-    val repinReps = 3
-    val spreadBound = 0.33
     val results = names.map { n =>
-      val runs = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
-      val first = runNoop(n)
-      runs += ((first._1, first._2))
-      val hash = first._3
-      // last run's measured value (vs_prev naming / auto re-pin reference)
-      val prevRun = prevMap.flatMap(_.get(n)).filter(_ >= 0)
-      // accumulated low-water mark for this (cpus, sf) — rep-count gating
-      // and the `pins` diagnostic only, never reported as a time
-      val prevPin = prevPins.get(n).filter(_ >= 0)
-      // a timed-out rep already cost `repTimeoutMs`; further reps of the
-      // same lane would starve the sweep again — one rep, sentinel pin
-      def timedOut: Boolean = runs.exists(_._1 == TimedOutSentinel)
-      // fast tier: plan hash unchanged vs the previous full sweep AND a
-      // reference exists to confirm against
-      val confirmRef = (prevPin.toSeq ++ prevRun.toSeq).minOption
-      val fastTier = confirmRef.isDefined && hash.isDefined &&
-        prevHashes.get(n) == hash
-      if (!timedOut) runs += { val r = runNoop(n); (r._1, r._2) }
+      val runs = scala.collection.mutable.ArrayBuffer.empty[Rep]
+      // a timed-out rep already cost `repTimeoutMs`: the lane runs no more
+      def timedOut: Boolean = runs.exists(_.sec == TimedOutSentinel)
       def curMin: Double = {
-        val ok = runs.map(_._1).filter(_ >= 0)
+        val ok = runs.map(_.sec).filter(_ >= 0)
         if (ok.nonEmpty) ok.min
         else if (timedOut) TimedOutSentinel
         else -1.0
       }
-      // confirm against the LOWEST known reference: a quiet-host sweep
-      // stops at 2 reps; a noisy-host or regressed sweep falls through to
-      // full reps and reports its honest (higher) this-run number
-      val confirmed = fastTier && confirmRef.exists(p => confirms(curMin, p))
-      if (!confirmed && !timedOut) {
-        // full methodology: third base rep + variance-driven extras
-        while (runs.size < baseReps && !timedOut)
-          runs += { val r = runNoop(n); (r._1, r._2) }
-        def spread: Double = {
-          // rep 1 pays this query's plan codegen (only the sweep-global
-          // warm-up is untimed) — judge steady-state jitter on reps 2..n
-          val ok = runs.drop(1).map(_._1).filter(_ >= 0)
-          if (ok.size < 2 || ok.min <= 0) 0.0 else (ok.max - ok.min) / ok.min
-        }
-        while (runs.size < maxReps && !timedOut && spread > spreadBound)
-          runs += { val r = runNoop(n); (r._1, r._2) }
-      }
-      // auto re-pin: a would-be vs_prev regression (same thresholds as
-      // vsPrevJson) gets up to `repinReps` more reps before it may be
-      // named — a contention window passes, a real regression survives
-      def looksRegressed: Boolean =
-        prevRun.exists(p => regressed(curMin, p))
+      while (runs.size < Reps && !timedOut) runs += runNoop(n)
+      val prev = prevMap.flatMap(_.get(n)).filter(_ >= 0)
       var extra = 0
-      while (extra < repinReps && !timedOut && looksRegressed) {
-        runs += { val r = runNoop(n); (r._1, r._2) }; extra += 1
+      while (extra < RepinReps && !timedOut && prev.exists(regressed(curMin, _))) {
+        runs += runNoop(n); extra += 1
       }
-      // REPORTED VALUE = THIS RUN'S MIN-OF-REPS, unconditionally. The
-      // accumulated low-water mark goes to the separate `pins` diagnostic
-      val pin = nextPin(curMin, prevPin, prevHashes.get(n) == hash)
-      (n, curMin, pin, runs.toSeq, extra, confirmed, hash)
+      Lane(n, curMin, runs.toSeq, extra)
     }
-    val qs = results.map { case (k, v, _, _, _, _, _) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val pinsJson = results.map { case (k, _, p, _, _, _, _) =>
-      "\"" + k + "\":" + fmt(p) }.mkString("{", ",", "}")
-    val reps = results.map { case (k, _, _, rs, _, _, _) =>
-      "\"" + k + "\":[" + rs.map(r => fmt(r._1)).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val gc = results.map { case (k, _, _, rs, _, _, _) =>
-      "\"" + k + "\":[" + rs.map(_._2.toString).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val hashes = results.collect { case (k, _, _, _, _, _, Some(h)) =>
-      "\"" + k + "\":\"" + h + "\"" }.mkString("{", ",", "}")
-    val nFast = results.count(_._6)
-    val total = results.map(_._2).filter(_ >= 0).sum
-    // A -1.0 sentinel means the query RAISED on every rep. Summing only the
-    // successes would report a partial run as a faster total (r10's 13
-    // events-query failures read as a 2.1x "improvement") — name the failures
-    // in the artifact so a partial run can never pass as a clean one.
-    // timed-out lanes are named separately below — keep the two sets
-    // disjoint so n_failed diffs cleanly across rounds
-    val failedNames = results.collect {
-      case (k, v, _, _, _, _, _) if v < 0 && v != TimedOutSentinel => k }
-    val failedJson = failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // −2.0 = circuit-breaker sentinel: named separately from raised
-    // failures so the artifact distinguishes "too slow to measure" from
-    // "broken" (both are red, neither can pass as a clean sweep)
-    val timedOutNames = results.collect {
-      case (k, v, _, _, _, _, _) if v == TimedOutSentinel => k }
-    val timedOutJson = timedOutNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // re-pin protocol record: which queries needed extra reps before
-    // vs_prev adjudication, and how many (judge-auditable in the artifact)
-    val repinned = results.collect { case (k, _, _, _, e, _, _) if e > 0 =>
-      "\"" + k + "\":" + e }.mkString("{", ",", "}")
 
-    // ---- vs_prev: round-over-round regression guard. The previous FULL
-    // sweep's per-query map was read before this sweep overwrote it; the
-    // compared total covers only the queries common to both sweeps (new
-    // queries must not read as a slowdown), and per-query regressions are
-    // named when both >1.5x and >0.3s absolute (sub-second jitter is not a
-    // regression) AND the slowdown survived the auto re-pin reps above.
-    // Parsed defensively: a missing/old-format file yields "vs_prev":null,
-    // never a failed bench.
-    val curMap = results.collect { case (k, v, _, _, _, _, _) if v >= 0 => k -> v }.toMap
+    def quoted(s: String) = "\"" + s + "\""
+    def byLane(value: Lane => String): String =
+      results.map(l => quoted(l.name) + ":" + value(l)).mkString("{", ",", "}")
+    def perRep(value: Rep => Any): String =
+      byLane(_.reps.map(value).mkString("[", ",", "]"))
+    def nameList(ns: Seq[String]) = ns.map(quoted).mkString("[", ",", "]")
+    val okVals = results.map(_.sec).filter(_ >= 0)
+    val total = okVals.sum
+    // −1.0 (raised on every rep) and −2.0 (timed out) are named apart and
+    // never summed: a partial run must not pass as a faster clean one
+    val failedNames = results.collect {
+      case l if l.sec < 0 && l.sec != TimedOutSentinel => l.name }
+    val timedOutNames = results.filter(_.sec == TimedOutSentinel).map(_.name)
+    val repinned = results.filter(_.repins > 0)
+      .map(l => quoted(l.name) + ":" + l.repins).mkString("{", ",", "}")
+    val curMap = results.collect { case l if l.sec >= 0 => l.name -> l.sec }.toMap
     val vsPrev = prevMap.map(pm => vsPrevJson(curMap, pm)).getOrElse("null")
+    val head = s""""metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${results.size},"n_failed":${failedNames.size},"failed":${nameList(failedNames)},"n_timed_out":${timedOutNames.size},"timed_out":${nameList(timedOutNames)},"repinned":$repinned"""
 
     val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${results.size},"n_failed":${failedNames.size},"failed":$failedJson,"n_timed_out":${timedOutNames.size},"timed_out":$timedOutJson,"repinned":$repinned,"n_fast_tier":$nFast,"vs_prev":$vsPrev,"queries":$qs,"pins":$pinsJson,"reps_sec":$reps,"gc_ms_per_rep":$gc,"plan_hash":$hashes}"""
-    // STDOUT gets a COMPACT line: the driver's BENCH_r{N}.json keeps only
-    // the last ~2000 stdout chars, so the full 10k+ line arrived truncated
-    // and its `parsed` field was null in every judged round artifact. The
-    // compact line (total, failures, slowest-10, deltas_vs_prev, vs_prev)
-    // parses; the full per-query map, accumulated pins, per-rep walls and
-    // GC live in the keyed pin file named by `queries_full`.
-    val okVals = results.map(_._2).filter(_ >= 0)
-    val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(10)
-      .map { case (k, v, _, _, _, _, _) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    // per-query visibility for the driver (r20 verdict #2): the lanes that
-    // actually CHANGED vs the previous sweep, largest absolute delta
-    // first, trimmed so the whole compact line stays inside the driver's
-    // ~2000-char stdout window (slowest-10 covers the heavy lanes; this
-    // map covers the movers).
+      s"""{$head,"vs_prev":$vsPrev,"queries":${byLane(l => fmt(l.sec))},"reps_sec":${perRep(r => fmt(r.sec))},"gc_ms_per_rep":${perRep(_.gcMs)},"jobs_per_rep":${perRep(_.work.jobs)},"stages_per_rep":${perRep(_.work.stages)},"tasks_per_rep":${perRep(_.work.tasks)},"task_run_ms_per_rep":${perRep(_.work.taskRunMs)}}"""
+    // stdout gets a compact line of at most 1800 chars: a reader that
+    // keeps only the last ~2000 stdout chars would get the full line
+    // truncated and unparseable. It carries the total, the failures, the
+    // slowest 10 lanes and the lanes that moved most against the prior.
+    val slowest = results.filter(_.sec >= 0).sortBy(-_.sec).take(10)
+      .map(l => quoted(l.name) + ":" + fmt(l.sec)).mkString("{", ",", "}")
     def compactLine(deltas: String) =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${results.size},"n_failed":${failedNames.size},"failed":$failedJson,"n_timed_out":${timedOutNames.size},"timed_out":$timedOutJson,"repinned":$repinned,"n_fast_tier":$nFast,"avg_sec":${fmt(
-        if (okVals.nonEmpty) total / okVals.size else -1.0)},"slowest":$slowest,"deltas_vs_prev":$deltas,"vs_prev":$vsPrev,"queries_full":"bench/${pinFileName(cpus, sfDir)}"}"""
+      s"""{$head,"avg_sec":${fmt(
+        if (okVals.nonEmpty) total / okVals.size else -1.0)},"slowest":$slowest,"deltas_vs_prev":$deltas,"vs_prev":$vsPrev,"queries_full":"$outPath"}"""
     val changed = prevMap.map { pm =>
       curMap.keySet.intersect(pm.keySet).toSeq
         .map(n => (n, curMap(n), pm(n)))
@@ -533,12 +344,8 @@ object Bench {
       .find(_.length <= 1800)
       .getOrElse(compactLine("{}"))
     println(compact)
-    // full sweeps only: a SPARK_GRAFT_ONLY subset run must not overwrite
-    // the last complete sweep (it goes to a side file for local debugging)
-    java.nio.file.Files.createDirectories(prevPath.getParent)
-    java.nio.file.Files.write(
-      if (only.isEmpty) prevPath
-      else prevPath.resolveSibling("last_subset.json"),
+    java.nio.file.Files.createDirectories(outPath.getParent)
+    java.nio.file.Files.write(outPath,
       (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()
   }

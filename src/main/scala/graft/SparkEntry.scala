@@ -20,6 +20,21 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     specs.map(q => q.name -> q.builder).toMap
 
+  /** The lanes a SPARK_GRAFT_ONLY value names (comma-separated), or None
+    * for all lanes when it is unset or blank. A name that is not in
+    * [[queries]] raises, so a typo cannot pass as an empty clean run.
+    */
+  def onlyLanes(value: Option[String]): Option[Set[String]] = {
+    val only = value.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .filter(_.nonEmpty)
+    only.foreach { o =>
+      val unknown = o -- queries.keySet
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    }
+    only
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */

@@ -5,13 +5,11 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = JobRunner.session("graft-verify")
-    new java.io.File(outDir).mkdirs()
     // Local-iteration filter (driver sets no env → full run): run only the
     // named queries, e.g. SPARK_GRAFT_ONLY=q86_zscore_outliers,q69_merge_upsert
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty) // blank env var means "all", not "none"
+    val only = SparkEntry.onlyLanes(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = JobRunner.session("graft-verify")
+    new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -21,6 +23,14 @@ import org.apache.spark.sql.execution.LogicalRDD
 private[graft] object Rounds {
   private val Probe = "graft_round_probe"
 
+  /** `RDD.unpersist` warns, through the logger of the RDD's class, that a
+    * checkpointed RDD's lineage is gone. A release means exactly that, so
+    * the logger of the class `Dataset.localCheckpoint` builds is raised to
+    * ERROR, once per JVM.
+    */
+  private lazy val quietCheckpointUnpersist: Unit =
+    Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
+
   /** Eager `localCheckpoint` of `df` with `probes` observed on the same
     * job → (the checkpointed frame, the probe row in `probes` order).
     */
@@ -35,7 +45,9 @@ private[graft] object Rounds {
   def release(df: DataFrame): Unit = {
     df.unpersist()
     df.queryExecution.logical match {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case r: LogicalRDD =>
+        quietCheckpointUnpersist
+        r.rdd.unpersist(blocking = false)
       case _ =>
     }
   }

@@ -212,15 +212,18 @@ object TextOps {
     * was shuffle overhead around a per-row O(len) loop. The kernel's
     * hash is exactly `conv(substring(md5(gram), 1, 12), 16, 10)` over
     * the code-point k-gram, its selection the identical
-    * (hash asc, pos desc) rightmost window minimum, its dedupe the old
-    * `.distinct()` — values byte-identical (oracle hash re-verified).
+    * (hash asc, pos desc) rightmost window minimum, its within-row
+    * dedupe the old `.distinct()` for unique ids — values byte-identical
+    * (oracle hash re-verified).
     * Fingerprint count per document is ≈ 2·len/w (the paper's
     * density), so downstream near-dup joins on fp_hash ride skinny
     * planes.
     *
-    * → (idCol, fp_pos — 1-based k-gram position, fp_hash) distinct,
-    *   one-to-many per document; documents shorter than w + k − 1
-    *   chars emit nothing (no full window exists).
+    * → (idCol, fp_pos — 1-based k-gram position, fp_hash), one-to-many
+    *   per document and distinct within a document; documents shorter
+    *   than w + k − 1 chars emit nothing (no full window exists).
+    *   `idCol` must uniquely identify rows: each row is fingerprinted on
+    *   its own, so a duplicated id emits its rows once per input row.
     */
   def winnowingFingerprints(df: DataFrame, idCol: String, textCol: String,
                             k: Int = 8, w: Int = 4): DataFrame = {

@@ -80,8 +80,8 @@ object TrainingQueries {
       .select(col("query_id"), col("rank"), col("vec_id"),
         round(col("__cos"), 6).as("cosine"), col(verdictCol))
       // local sort only: a global orderBy's range-sample re-ran the
-      // post-exchange rank/verdict subtree (the q188/r21-SortAb finding;
-      // the harness compare is row-order-agnostic)
+      // post-exchange rank/verdict subtree (the harness compare is
+      // row-order-agnostic)
       .sortWithinPartitions("query_id", "rank")
   }
 

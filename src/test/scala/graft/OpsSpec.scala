@@ -1433,6 +1433,22 @@ class OpsSpec extends AnyFunSuite {
     assert(!fps.exists(_._1 == 3L))
   }
 
+  test("winnowing: rows are distinct within a document, and a duplicated " +
+    "id emits its rows once per input row") {
+    import spark.implicits._
+    // repeated text makes neighbouring windows select the same position
+    val d = "abcabcabcabc the same words the same words again and again"
+    def fps(rows: Seq[(Long, String)]) = TextOps
+      .winnowingFingerprints(rows.toDF("id", "text"), "id", "text", 8, 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val once = fps(Seq((1L, d)))
+    assert(once.nonEmpty && once.distinct.size == once.size)
+    // the unique-id precondition: no dedupe across rows of the same id
+    val twice = fps(Seq((1L, d), (1L, d)))
+    assert(twice.size == 2 * once.size)
+    assert(twice.distinct.sorted == once.sorted)
+  }
+
   test("scriptProfile: exact per-script counts, dominant script, empty/NULL text") {
     import spark.implicits._
     val rows = Seq(

@@ -42,6 +42,18 @@ class QueriesSpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(qs))
   }
 
+  test("onlyLanes: a blank SPARK_GRAFT_ONLY selects all lanes, and an " +
+    "unknown name raises") {
+    assert(SparkEntry.onlyLanes(None).isEmpty)
+    assert(SparkEntry.onlyLanes(Some(" , ")).isEmpty)
+    val two = SparkEntry.queries.keys.toSeq.sorted.take(2)
+    assert(SparkEntry.onlyLanes(Some(two.mkString(" ", " , ", ","))) ==
+      Some(two.toSet))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.onlyLanes(Some(s"${two.head},q_no_such_lane")))
+    assert(e.getMessage.contains("q_no_such_lane"))
+  }
+
   test("q15 global count matches table size") {
     val n = SparkEntry.queries("q15_global_count")(spark, sf)
       .collect().head.getLong(0)

@@ -29,6 +29,35 @@ class RoundsSpec extends AnyFunSuite {
     assert(cachedPartitions == 0)
   }
 
+  test("Rounds.release of a checkpoint logs no lineage warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.execution.LogicalRDD
+    val df = spark.range(0, 10, 1, 2).toDF("x").localCheckpoint()
+    val id = df.queryExecution.logical match { case r: LogicalRDD => r.rdd.id }
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("rounds-spec-release", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        logged.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    try Rounds.release(df)
+    finally {
+      root.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    val warned = logged.asScala.filter(_.contains(s"RDD $id was locally checkpointed"))
+    assert(warned.isEmpty, warned.mkString("\n"))
+  }
+
   test("Rounds.checkpoint reads the probes off the checkpoint job") {
     import org.apache.spark.sql.functions._
     val (chk, m) = Rounds.checkpoint(spark.range(0, 10, 1, 2).toDF("x"),
