@@ -1,30 +1,17 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Single-pass record counting + audit trail (SURVEY.md §2.3 A1/A2, §2.5
-  * K2/K6).
+/** The audit trail (SURVEY.md §2.5 K2/K6): one row per completed run.
   *
   * The reference traverses its processed stream twice — once for
   * `Count.Globally` (`/root/reference/dataflow_transform.py:192-195`) and
   * once for the main sink — plus a per-bundle side counter DoFn (`:75-89`).
-  * Spark's `Dataset.observe` attaches the count to the WRITE pass itself:
-  * one scan, no second traversal, no cache. The accumulator-merge happens on
-  * the driver exactly like Beam's per-bundle combine.
+  * Here the record count is observed on the write pass itself
+  * (`CovidTransform.checked`): one scan, no second traversal, no cache.
   */
 object Audit {
-
-  /** Wrap a DataFrame so its next action also produces a record count. */
-  final case class Counted(df: DataFrame, observation: Observation) {
-    /** Valid after an action has run on `df`. */
-    def recordCount: Long = observation.get("record_count").asInstanceOf[Long]
-  }
-
-  def observed(df: DataFrame): Counted = {
-    val obs = new Observation()
-    Counted(df.observe(obs, count(lit(1)).as("record_count")), obs)
-  }
 
   /** The 6-field audit row (`dataflow_transform.py:91-106`). Table name is
     * derived from the dataset properly, not via the reference's literal

@@ -1,11 +1,14 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
+import graft.etl.Validation.{Report, Rule, Warn}
+
 /** The reference's per-row clean+type transform
-  * (`/root/reference/dataflow_transform.py:32-73`) re-expressed as one
-  * declarative select+filter plan.
+  * (`dataflow_transform.py:32-73`) and its CSV validation gate
+  * (`dataflow.py:344-359`), re-expressed as one declarative plan that
+  * parses each field once.
   *
   * Python reject semantics preserved exactly:
   *   - missing/empty (falsy) required field → reject (`:39-41`);
@@ -17,67 +20,86 @@ import org.apache.spark.sql.functions._
   *   - append `processed_timestamp` = now-UTC (`:68`) — per-QUERY in Spark
   *     vs per-row in Python, a documented improvement (SURVEY.md §7.3).
   *
-  * Where Beam runs a Python function per record, this compiles to a single
-  * whole-stage-codegen'd projection over a columnar scan: the same WHAT at
-  * 100 TB without a Python boundary. Rejects are dropped by predicate (the
-  * reference's `beam.Filter(x is not None)` pair, `:173`/`:175` — Catalyst
-  * merges all reject conditions into one Filter).
+  * Where Beam runs a Python function per record, this compiles to
+  * whole-stage-codegen'd projections over a columnar scan: the same WHAT at
+  * 100 TB without a Python boundary. The plan is
+  * parse → observe → filter → project: one projection parses every field,
+  * `Dataset.observe` counts the rows, the rule violations and the clean
+  * rows on it, and the reject filter reads the parsed columns. The observe
+  * also keeps Catalyst from pushing the filter below the parse, which would
+  * evaluate every parse a second time.
   */
 object CovidTransform {
 
-  private def emptyish(c: Column): Column = c.isNull || trim(c) === ""
-
-  /** Parse results as columns; null ⇒ that field failed its parse/check.
-    * Both casts are try_cast: the outer one turns NaN/Infinity doubles into
-    * rejects (Python's int(float("NaN")) raises ⇒ row dropped), where an
-    * ANSI cast would throw CAST_OVERFLOW at runtime.
+  /** The reference's CSV rule set (`dataflow.py:344-359`), warn-level for
+    * CSV (`:344-347`). The numeric and date rules read the parsed columns
+    * of [[checked]]'s projection, so validating parses nothing again; the
+    * rules apply to that projection only.
     */
-  private def deathsParsed: Column =
-    when(emptyish(col("total_confirmed_deaths")), lit(null))
-      .otherwise(expr(
-        // double→long truncates toward zero == Python int(float(x))
-        "try_cast(try_cast(trim(total_confirmed_deaths) AS DOUBLE) AS BIGINT)"))
+  val covidCsvRules: Seq[Rule] = Seq(
+    Validation.requiredNonEmpty("entity", Warn),
+    Validation.requiredNonEmpty("Day", Warn),
+    Validation.requiredNonEmpty("total_confirmed_deaths", Warn),
+    Rule("numeric_total_confirmed_deaths", // dataflow.py:349-353
+      col("total_confirmed_deaths").isNotNull && col("__double").isNull, Warn),
+    Rule("date_Day", col("Day").isNotNull && col("__day").isNull, Warn)) // :355-359
 
-  private def dayParsed: Column =
-    when(!col("Day").rlike("^\\d{4}-\\d{2}-\\d{2}$"), lit(null))
-      .otherwise(expr("try_to_date(Day, 'yyyy-MM-dd')"))
+  /** Clean rows of one input, with the gate's counts observed on the pass
+    * that produces them.
+    */
+  final case class Checked(df: DataFrame, observation: Observation) {
+    /** Valid after an action has run on `df`. */
+    def report: Report = Validation.report(covidCsvRules, observation.get)
+    def recordCount: Long = observation.get("records").asInstanceOf[Long]
+  }
+
+  /** [[clean]] of `raw`, observing the total, every [[covidCsvRules]]
+    * violation count and the clean-row count on the same pass.
+    */
+  def checked(raw: DataFrame): Checked = {
+    val ok = col("__entity").isNotNull && col("__day").isNotNull && col("__deaths").isNotNull
+    val counts = count_if(ok).as("records") +: Validation.ruleCounts(covidCsvRules)
+    val observation = new Observation()
+    val df = parsed(raw)
+      .observe(observation, counts.head, counts.tail: _*)
+      .filter(ok)
+      .select(col("__entity").as("entity"), col("__day").as("Day"),
+        col("__deaths").as("total_confirmed_deaths"),
+        current_timestamp().as("processed_timestamp"))
+    Checked(df, observation)
+  }
 
   /** Clean rows that survive every check, in the strict typed schema. */
-  def clean(raw: DataFrame): DataFrame =
-    parsed(raw).filter(col("__ok")).drop("__ok")
+  def clean(raw: DataFrame): DataFrame = checked(raw).df
 
   /** Rows the reference would drop, with a reason column (extension: the
     * reference silently discards; at scale you want a quarantine channel).
     */
-  def rejects(raw: DataFrame): DataFrame = {
-    val p = parsedKeepRaw(raw)
-    p.filter(!col("__ok"))
-      .select(col("entity_raw").as("entity"), col("Day_raw").as("Day"),
-        col("deaths_raw").as("total_confirmed_deaths"),
-        when(emptyish(col("entity_raw")) || emptyish(col("Day_raw")) ||
-             emptyish(col("deaths_raw")), "missing_required_field")
+  def rejects(raw: DataFrame): DataFrame =
+    parsed(raw)
+      .filter(col("__entity").isNull || col("__day").isNull || col("__deaths").isNull)
+      .select(col("entity"), col("Day"), col("total_confirmed_deaths"),
+        when(emptyish(col("entity")) || emptyish(col("Day")) ||
+             emptyish(col("total_confirmed_deaths")), "missing_required_field")
           .when(col("__deaths").isNull, "invalid_numeric")
           .otherwise("invalid_date").as("reject_reason"))
-  }
 
+  private def emptyish(c: Column): Column = c.isNull || trim(c) === ""
+
+  /** The raw strings beside their parses; null ⇒ that field failed its
+    * parse/check. `__double` is its own projection below the rest because
+    * the numeric rule and the deaths parse both read it. Both casts are
+    * try_cast: the outer one turns NaN/Infinity doubles into rejects
+    * (Python's int(float("NaN")) raises ⇒ row dropped), where an ANSI cast
+    * would throw CAST_OVERFLOW at runtime; double→long truncates toward
+    * zero == Python int(float(x)).
+    */
   private def parsed(raw: DataFrame): DataFrame =
-    parsedKeepRaw(raw).select(
-      col("__entity").as("entity"),
-      col("__day").as("Day"),
-      col("__deaths").as("total_confirmed_deaths"),
-      current_timestamp().as("processed_timestamp"),
-      col("__ok"))
-
-  private def parsedKeepRaw(raw: DataFrame): DataFrame = {
-    raw
-      .withColumn("entity_raw", col("entity"))
-      .withColumn("Day_raw", col("Day"))
-      .withColumn("deaths_raw", col("total_confirmed_deaths"))
-      .withColumn("__entity",
-        when(emptyish(col("entity")), lit(null)).otherwise(trim(col("entity").cast("string"))))
-      .withColumn("__deaths", deathsParsed)
-      .withColumn("__day", dayParsed)
-      .withColumn("__ok",
-        col("__entity").isNotNull && col("__deaths").isNotNull && col("__day").isNotNull)
-  }
+    raw.select(col("entity"), col("Day"), col("total_confirmed_deaths"),
+        expr("try_cast(trim(total_confirmed_deaths) AS DOUBLE)").as("__double"))
+      .select(col("entity"), col("Day"), col("total_confirmed_deaths"), col("__double"),
+        when(trim(col("entity")) =!= "", trim(col("entity"))).as("__entity"),
+        when(col("Day").rlike("^\\d{4}-\\d{2}-\\d{2}$"), expr("try_to_date(Day, 'yyyy-MM-dd')"))
+          .as("__day"),
+        expr("try_cast(__double AS BIGINT)").as("__deaths"))
 }

@@ -1,6 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.Sources
@@ -8,7 +9,8 @@ import graft.sources.Sources
 /** The reference's two orchestrated pipelines, restated as driver-side stage
   * functions (SURVEY.md §3.2/§3.3): what was 6 Airflow tasks across 3
   * services becomes one driver program; only transform/validate/write touch
-  * executors.
+  * executors. Each pipeline reads its CSV in one pass: Path A validates,
+  * cleans and writes in one job, Path B loads without an inference pass.
   */
 object Jobs {
 
@@ -19,16 +21,20 @@ object Jobs {
       recordCount: Long,
       status: String)
 
-  /** A gate turned the run down: file checks, validation or the post-load
-    * check. The same input fails the same way again, so
-    * [[graft.JobRunner.withRetries]] does not retry it.
+  /** A gate turned the run down: file checks, validation, a malformed row
+    * in the ELT load or the post-load check. The same input fails the same
+    * way again, so [[graft.JobRunner.withRetries]] does not retry it.
     */
   final class GateFailure(msg: String) extends IllegalStateException(msg)
 
   /** Path A — the validated Beam-path pipeline
-    * (`/root/reference/dataflow.py:486` chain + `dataflow_transform.py`):
-    * validate → clean/type → write main table (truncate) → append audit row,
-    * with the record count observed on the write pass (no second traversal).
+    * (the reference's `dataflow.py:486` chain + `dataflow_transform.py`),
+    * as write-audit-publish in one job: the clean rows are written to a
+    * staging directory while the validation report and the record count
+    * are observed on the same pass; the gate then decides from the report
+    * whether the staging becomes the main table (truncate) or is dropped.
+    * A run the gate turns down leaves the table and the audit table as they
+    * were. On success an audit row is appended.
     */
   def covidPipeline(spark: SparkSession, inputCsv: String, outputTable: String,
                     auditTable: String, runId: String = "local-run"): RunSummary = {
@@ -41,29 +47,31 @@ object Jobs {
           fileGate.files.filter(f => !f.exists || f.empty || !f.utf8Ok)
             .map(_.path).mkString(","))
 
-    // Stage 1: data-quality gate (replaces dataflow.py:62-134)
-    val raw = Sources.csv(spark, inputCsv, Schemas.covidRaw)
-    val report = Validation.run(raw, Validation.covidCsvRules)
-    if (report.failed)
-      throw new GateFailure(
-        s"validation failed for $inputCsv: total=${report.totalRecords} " +
-          report.results.filter(_.violations > 0).map(r => s"${r.name}=${r.violations}").mkString(","))
-
-    // Stage 2+3: transform + truncate-write with observed count
-    val counted = Audit.observed(CovidTransform.clean(raw))
-    Sinks.overwriteTable(counted.df, outputTable)
-    val n = counted.recordCount
+    // Stage 1-3: parse, validate (replaces dataflow.py:62-134), clean, and
+    // write; publish only if the data-quality gate passes
+    val checked = CovidTransform.checked(Sources.csv(spark, inputCsv, Schemas.covidRaw))
+    Sinks.overwriteTable(checked.df, outputTable) {
+      val report = checked.report
+      if (report.failed)
+        throw new GateFailure(
+          s"validation failed for $inputCsv: total=${report.totalRecords} " +
+            report.results.filter(_.violations > 0).map(r => s"${r.name}=${r.violations}").mkString(","))
+    }
+    val n = checked.recordCount
 
     // Stage 4: audit append (dataflow_transform.py:192-214)
     Sinks.appendTable(Audit.auditRow(spark, inputCsv, n), auditTable)
-    RunSummary(runId, inputCsv, report, n, "completed")
+    RunSummary(runId, inputCsv, checked.report, n, "completed")
   }
 
   /** Path B — the ELT/SQL pipeline (`/root/reference/airflow.py:37-123`, in
     * its INTENDED task order, SURVEY.md §0): DDL staging+final → bulk load
-    * with schema autodetect + truncate → INSERT INTO final SELECT …
-    * WHERE total_confirmed_deaths > 0 (`airflow.py:108-116`), executed by
-    * Spark SQL's own parse→analyze→optimize→execute lifecycle.
+    * of the header's string columns, typed by the staging schema's casts,
+    * + truncate → INSERT INTO final SELECT … WHERE total_confirmed_deaths > 0
+    * (`airflow.py:108-116`), executed by Spark SQL's own
+    * parse→analyze→optimize→execute lifecycle → post-load check. A
+    * malformed row fails the load as a [[GateFailure]]. Returns the final
+    * table's row count.
     */
   def eltPipeline(spark: SparkSession, inputCsv: String, db: String): Long = {
     Sinks.ensureDatabase(spark, db)
@@ -77,7 +85,11 @@ object Jobs {
       .withColumn("Day", expr("try_cast(Day AS TIMESTAMP_NTZ)"))
       .withColumn("total_confirmed_deaths", expr("try_cast(total_confirmed_deaths AS DOUBLE)"))
       .select("entity", "Day", "total_confirmed_deaths")
-    loaded.write.mode("overwrite").insertInto(s"$db.stg_covid_data")
+    try loaded.write.mode("overwrite").insertInto(s"$db.stg_covid_data")
+    catch {
+      case e: Exception if malformedRecord(e) =>
+        throw new GateFailure(s"ELT load of $inputCsv failed on a malformed row: ${e.getMessage}")
+    }
 
     // the one piece of real SQL in the reference (airflow.py:108-116)
     spark.sql(
@@ -88,8 +100,17 @@ object Jobs {
 
     // post-load assertion — the imported-but-unused BigQueryCheckOperator
     // intent (airflow.py:7; SURVEY.md §2.8)
-    if (!Sinks.check(spark, s"SELECT COUNT(*) > 0 FROM $db.final_covid_data"))
-      throw new GateFailure("post-load check failed: final table is empty")
-    spark.table(s"$db.final_covid_data").count()
+    val n = spark.table(s"$db.final_covid_data").count()
+    if (n == 0) throw new GateFailure("post-load check failed: final table is empty")
+    n
   }
+
+  /** A FAILFAST CSV read raises a MALFORMED_* error somewhere in the cause
+    * chain of the failed job.
+    */
+  private def malformedRecord(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case t: SparkThrowable => Option(t.getCondition).exists(_.startsWith("MALFORMED_"))
+      case _ => false
+    }
 }

@@ -2,17 +2,16 @@ package graft.etl
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat, CatalogTable, CatalogTableType}
 import org.apache.spark.sql.types.StructType
 
 /** Table sinks + DDL (SURVEY.md §2.5 K1-K5).
   *
   * The reference's `WRITE_TRUNCATE`/`WRITE_APPEND` + `CREATE_IF_NEEDED`
   * (`/root/reference/dataflow_transform.py:180-189`, `:204-214`) map to
-  * SaveMode.Overwrite/Append against catalog tables backed by parquet.
-  *
-  * Scale: writes go through the distributed commit protocol; pass
-  * `partitionBy` (e.g. the date column) so downstream reads get partition
-  * pruning — configuration, not new operators (SURVEY.md §4.3).
+  * managed parquet tables: truncate is a staged write published by rename
+  * ([[overwriteTable]]), append is SaveMode.Append. Writes go through the
+  * distributed commit protocol.
   */
 object Sinks {
 
@@ -20,8 +19,8 @@ object Sinks {
     * leaves its warehouse location on disk but no catalog entry, and a
     * naive saveAsTable or CREATE TABLE then fails with
     * LOCATION_ALREADY_EXISTS. Returns that orphan location, if any; the
-    * callers resolve it per their save mode: re-register it as a table
-    * (append and create keep history) or remove it (truncate).
+    * callers re-register it as a table, so append and create keep its
+    * history ([[overwriteTable]] removes it instead).
     */
   private def orphanLocation(spark: SparkSession, table: String): Option[(Path, FileSystem)] =
     if (spark.catalog.tableExists(table)) None
@@ -32,13 +31,34 @@ object Sinks {
       if (fs.exists(path)) Some((path, fs)) else None
     }
 
-  /** K1 — truncate-and-load with create-if-needed (`WRITE_TRUNCATE`:
-    * a stale location from an earlier run is removed, as truncate implies).
+  /** K1 — truncate-and-load with create-if-needed, as write-audit-publish.
+    * `df` is written to `_graft_stage_<name>` beside the table's managed
+    * location; then `audit` runs, on the values the write observed. If it
+    * throws, the staging directory is removed and the table is left as it
+    * was. Otherwise the old table is dropped, the staging directory is
+    * renamed to the location (a stale location from an earlier JVM is
+    * removed first, as truncate implies) and registered as the managed
+    * table, so `DROP TABLE` removes its files. The table is absent only
+    * between the drop and the register, never during the write.
     */
-  def overwriteTable(df: DataFrame, table: String, partitionBy: Seq[String] = Nil): Unit = {
-    orphanLocation(df.sparkSession, table).foreach { case (p, fs) => fs.delete(p, true) }
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).saveAsTable(table)
+  def overwriteTable(df: DataFrame, table: String)(audit: => Unit): Unit = {
+    val spark = df.sparkSession
+    val catalog = spark.sessionState.catalog
+    val ident = catalog.qualifyIdentifier(spark.sessionState.sqlParser.parseTableIdentifier(table))
+    val location = new Path(catalog.defaultTablePath(ident))
+    val fs = location.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stage = new Path(location.getParent, s"_graft_stage_${location.getName}")
+    try {
+      df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+      audit
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      fs.delete(location, true)
+      require(fs.rename(stage, location), s"overwriteTable: rename failed: $stage -> $location")
+      catalog.createTable(CatalogTable(ident, CatalogTableType.MANAGED,
+          CatalogStorageFormat.empty.copy(locationUri = Some(location.toUri)),
+          StructType(df.schema.map(_.copy(nullable = true))), provider = Some("parquet")),
+        ignoreIfExists = false, validateLocation = false)
+    } finally fs.delete(stage, true)
   }
 
   /** K2/K3 — append (audit rows; INSERT INTO final). A location from an
@@ -62,20 +82,5 @@ object Sinks {
   def ensureTable(spark: SparkSession, table: String, schema: StructType): Unit = {
     val location = orphanLocation(spark, table).fold("") { case (p, _) => s"LOCATION '$p'" }
     spark.sql(s"CREATE TABLE IF NOT EXISTS $table (${schema.toDDL}) USING parquet $location")
-  }
-
-  /** The declared-but-uninstantiated `BigQueryCheckOperator`
-    * (`airflow.py:7`; SURVEY.md §2.8): a post-load SQL assertion — the first
-    * cell of the first row must be truthy.
-    */
-  def check(spark: SparkSession, sql: String): Boolean = {
-    val rows = spark.sql(sql).limit(1).collect()
-    rows.nonEmpty && (rows.head.get(0) match {
-      case null => false
-      case b: Boolean => b
-      case n: Number => n.longValue() != 0L
-      case s: String => s.nonEmpty
-      case _ => true
-    })
   }
 }

@@ -42,16 +42,6 @@ object Validation {
   def requiredNonEmpty(c: String, severity: Severity = Fail): Rule =
     Rule(s"required_$c", col(c).isNull || trim(col(c).cast("string")) === "", severity)
 
-  def numeric(c: String, severity: Severity = Warn): Rule = // dataflow.py:349-353
-    Rule(s"numeric_$c",
-      col(c).isNotNull && expr(s"try_cast(trim($c) AS DOUBLE)").isNull, severity)
-
-  def dateFormat(c: String, severity: Severity = Warn): Rule = // dataflow.py:355-359
-    Rule(s"date_$c",
-      col(c).isNotNull &&
-        (!col(c).rlike("^\\d{4}-\\d{2}-\\d{2}$") ||
-          expr(s"try_to_date($c, 'yyyy-MM-dd')").isNull), severity)
-
   /** Multi-format timestamp check (`dataflow.py:361-384`): any of the 5
     * accepted formats parses.
     */
@@ -80,27 +70,24 @@ object Validation {
     df.groupBy(element_at(split(input_file_name(), "/"), -1).as("file_name"))
       .agg(count(lit(1)).as("record_count"))
 
+  /** The aggregates of one validation pass: the row total, then one
+    * violation count per rule. [[run]] aggregates them; a pass that also
+    * writes can observe them instead (`CovidTransform.checked`).
+    */
+  private[etl] def ruleCounts(rules: Seq[Rule]): Seq[Column] =
+    count(lit(1)).as("__total") +:
+      rules.zipWithIndex.map { case (r, i) => count_if(r.violation).as(s"__r$i") }
+
+  /** The [[Report]] of [[ruleCounts]]' values, by aggregate name. */
+  private[etl] def report(rules: Seq[Rule], values: Map[String, Any]): Report =
+    Report(values("__total").asInstanceOf[Long], rules.zipWithIndex.map { case (r, i) =>
+      RuleResult(r.name, r.severity, values(s"__r$i").asInstanceOf[Long])
+    })
+
   /** Run every rule in one aggregation pass. */
   def run(df: DataFrame, rules: Seq[Rule]): Report = {
-    val aggs = count(lit(1)).as("__total") +:
-      rules.zipWithIndex.map { case (r, i) =>
-        sum(when(r.violation, 1L).otherwise(0L)).as(s"__r$i")
-      }
-    val row = df.agg(aggs.head, aggs.tail: _*).collect().head
-    val total = row.getLong(0)
-    val results = rules.zipWithIndex.map { case (r, i) =>
-      RuleResult(r.name, r.severity, if (row.isNullAt(i + 1)) 0L else row.getLong(i + 1))
-    }
-    Report(total, results)
+    val aggs = ruleCounts(rules)
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    report(rules, row.getValuesMap[Any](row.schema.fieldNames.toSeq))
   }
-
-  /** The reference's COVID CSV rule set (`dataflow.py:344-359`): required
-    * fields warn-level for CSV, numeric + date checks.
-    */
-  def covidCsvRules: Seq[Rule] = Seq(
-    requiredNonEmpty("entity", Warn), // CSV path warns, dataflow.py:344-347
-    requiredNonEmpty("Day", Warn),
-    requiredNonEmpty("total_confirmed_deaths", Warn),
-    numeric("total_confirmed_deaths", Warn),
-    dateFormat("Day", Warn))
 }

@@ -29,14 +29,18 @@ object Sources {
       .schema(schema)
       .csv(path)
 
-  /** S3 — the ELT bulk load: schema autodetect (`airflow.py:93`), quoted
-    * newlines allowed, jagged rows fatal (`allow_jagged_rows=False`,
-    * `airflow.py:99` → FAILFAST).
+  /** S3 — the ELT bulk load (`airflow.py:87-101`): the header names the
+    * columns, every column is a string, and the caller's casts to its fixed
+    * staging schema do all the typing, so the autodetect of `airflow.py:93`
+    * needs no inference pass. Quoted newlines allowed (`airflow.py:98` →
+    * `multiLine`), jagged rows fatal (`allow_jagged_rows=False`,
+    * `airflow.py:99` → FAILFAST). Inferring from a prefix instead would fix
+    * a column's type before a later row can contradict it, and FAILFAST
+    * would then abort on that row.
     */
   def csvAutodetect(spark: SparkSession, path: String): DataFrame =
     spark.read
       .option("header", "true")
-      .option("inferSchema", "true")
       .option("multiLine", "true")
       .option("mode", "FAILFAST")
       .csv(path)

@@ -41,14 +41,14 @@ object StreamingIngest {
       fs.globStatus(new Path(out, s"b$batchId-*"))
         .foreach(st => fs.delete(st.getPath, false))
       val stage = new Path(out, s"_graft_stage_b$batchId")
-      val counted = graft.etl.Audit.observed(CovidTransform.clean(batch))
-      counted.df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+      val checked = CovidTransform.checked(batch)
+      checked.df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
       fs.listStatus(stage).map(_.getPath).filter(p => isDataFile(p.getName)).foreach { p =>
         val dest = new Path(out, s"b$batchId-${p.getName}")
         require(fs.rename(p, dest), s"runAvailableNow: rename failed: $p -> $dest")
       }
       fs.delete(stage, true)
-      (counted.recordCount, nothingAfter)
+      (checked.recordCount, nothingAfter)
     }
   }
 

@@ -2,6 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,6 +20,13 @@ class EtlSpec extends AnyFunSuite {
   private val fixture = "src/test/resources/covid_daily.csv"
 
   private def raw = Sources.csv(spark, fixture, Schemas.covidRaw)
+
+  /** The gate's report, observed on one clean pass over `df`. */
+  private def checkedReport(df: DataFrame): Validation.Report = {
+    val checked = CovidTransform.checked(df)
+    checked.df.collect()
+    checked.report
+  }
 
   private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
     val s = Files.walk(from)
@@ -55,7 +66,7 @@ class EtlSpec extends AnyFunSuite {
   }
 
   test("validation gate: one-pass report with warn counts, not failed") {
-    val report = Validation.run(raw, Validation.covidCsvRules)
+    val report = checkedReport(raw)
     assert(report.totalRecords == 12)
     assert(!report.failed)
     assert(report.violations("required_entity") == 1)
@@ -65,9 +76,14 @@ class EtlSpec extends AnyFunSuite {
     assert(report.violations("date_Day") == 3) // 2020-3-28, 03-29-2020, 2020-13-29
   }
 
+  test("clean parses each row once: one RLIKE in the executed plan") {
+    val plan = CovidTransform.clean(raw).queryExecution.executedPlan.toString
+    assert("RLIKE".r.findAllMatchIn(plan).size == 1, plan)
+  }
+
   test("validation gate fails on empty input") {
     val empty = raw.filter(lit(false))
-    assert(Validation.run(empty, Validation.covidCsvRules).failed)
+    assert(checkedReport(empty).failed)
   }
 
   test("covid pipeline end-to-end: tables + observed count + audit row") {
@@ -86,6 +102,77 @@ class EtlSpec extends AnyFunSuite {
     Jobs.covidPipeline(spark, fixture, "transformed_table", "audit_log")
     assert(spark.table("transformed_table").count() == 5)
     assert(spark.table("audit_log").count() == 2)
+  }
+
+  test("a failed gate leaves the table and the audit table as they were") {
+    spark.sql("DROP TABLE IF EXISTS gate_table")
+    spark.sql("DROP TABLE IF EXISTS gate_audit")
+    Jobs.covidPipeline(spark, fixture, "gate_table", "gate_audit")
+    val headerOnly = Files.createTempDirectory("graft-gate").resolve("header_only.csv")
+    Files.writeString(headerOnly, "entity,Day,total_confirmed_deaths\n")
+    intercept[Jobs.GateFailure] {
+      Jobs.covidPipeline(spark, headerOnly.toString, "gate_table", "gate_audit")
+    }
+    assert(spark.table("gate_table").count() == 5)
+    assert(spark.table("gate_audit").count() == 1)
+    val location = Paths.get(spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier("gate_table")).location)
+    val listing = Files.list(location.getParent)
+    val staged = try listing.iterator().asScala
+      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("_")).toList
+    finally listing.close()
+    assert(staged.isEmpty, staged)
+    Jobs.covidPipeline(spark, fixture, "gate_table", "gate_audit")
+    assert(spark.table("gate_table").count() == 5)
+    assert(spark.table("gate_audit").count() == 2)
+    // still a managed table: dropping it removes its files
+    spark.sql("DROP TABLE gate_table")
+    assert(!Files.exists(location))
+  }
+
+  /** Staging rows of an ELT load of `csv`, as `entity|Day|deaths` strings. */
+  private def eltStaging(csv: String, db: String): Seq[String] = {
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    Jobs.eltPipeline(spark, csv, db)
+    spark.table(s"$db.stg_covid_data").collect()
+      .map(r => s"${r.get(0)}|${r.get(1)}|${r.get(2)}").sorted.toSeq
+  }
+
+  test("ELT load: quoted newlines and inferable columns give the autodetect rows") {
+    val dir = Files.createTempDirectory("graft-elt-load")
+    val quoted = dir.resolve("quoted_newline.csv")
+    Files.writeString(quoted, Files.readString(Paths.get(fixture))
+      .replace("Afghanistan,", "\"Afghan\nistan\","))
+    assert(eltStaging(quoted.toString, "covid_quoted") == Seq(
+      " Albania |2020-03-24T00:00|21.0", "Afghan\nistan|2020-03-23T00:00|40.0",
+      "Algeria|2020-03-25T00:00|12.9", "Andorra|null|5.0", "Angola|2020-03-27T00:00|null",
+      "Argentina|2020-03-28T00:00|7.0", "Armenia|null|8.0", "Australia|null|9.0",
+      "Austria|2020-03-30T00:00|null", "Bahrain|2020-03-31T00:00|-3.0",
+      "Belgium|2020-04-01T00:00|0.0", "null|2020-03-26T00:00|10.0"))
+    // full-file inference types these columns INT and DATE
+    val typed = dir.resolve("inferable.csv")
+    Files.writeString(typed, "entity,Day,total_confirmed_deaths\n" +
+      "Afghanistan,2020-03-23,40\nAlbania,2020-03-24,0\nAlgeria,2020-03-25,-3\n")
+    assert(spark.read.option("header", "true").option("inferSchema", "true").csv(typed.toString)
+      .schema.map(_.dataType.typeName) == Seq("string", "date", "integer"))
+    assert(eltStaging(typed.toString, "covid_inferable") == Seq(
+      "Afghanistan|2020-03-23T00:00|40.0", "Albania|2020-03-24T00:00|0.0",
+      "Algeria|2020-03-25T00:00|-3.0"))
+  }
+
+  test("ELT: a jagged row and an empty final table are gate failures, run once") {
+    val dir = Files.createTempDirectory("graft-elt-gate")
+    Seq("jagged" -> "Afghanistan,2020-03-23,40\nAlbania,2020-03-24\n",
+        "no_deaths" -> "Afghanistan,2020-03-23,0\n").foreach { case (name, rows) =>
+      val csv = dir.resolve(s"$name.csv")
+      Files.writeString(csv, "entity,Day,total_confirmed_deaths\n" + rows)
+      var calls = 0
+      val e = intercept[Exception] {
+        JobRunner.withRetries() { calls += 1; Jobs.eltPipeline(spark, csv.toString, s"covid_$name") }
+      }
+      assert(calls == 1, name)
+      assert(e.isInstanceOf[Jobs.GateFailure], e)
+    }
   }
 
   test("ELT pipeline: autodetect load + INSERT INTO ... WHERE deaths > 0") {
@@ -251,11 +338,6 @@ class EtlSpec extends AnyFunSuite {
       42
     }
     assert(r == 42 && calls == 2)
-  }
-
-  test("post-load check operator semantics") {
-    assert(Sinks.check(spark, "SELECT 1"))
-    assert(!Sinks.check(spark, "SELECT COUNT(*) FROM range(10) WHERE id > 100"))
   }
 
   test("flattenStructs: deep nesting, arrays preserved, nulls, zero shuffles") {
