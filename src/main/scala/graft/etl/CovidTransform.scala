@@ -32,14 +32,16 @@ import graft.etl.Validation.{Report, Rule, Warn}
 object CovidTransform {
 
   /** The reference's CSV rule set (`dataflow.py:344-359`), warn-level for
-    * CSV (`:344-347`). The numeric and date rules read the parsed columns
-    * of [[checked]]'s projection, so validating parses nothing again; the
-    * rules apply to that projection only.
+    * CSV (`:344-347`). The entity, deaths, numeric and date rules read the
+    * trimmed and parsed columns of [[checked]]'s projection, so validating
+    * trims and parses nothing again; the rules apply to that projection
+    * only.
     */
   val covidCsvRules: Seq[Rule] = Seq(
-    Validation.requiredNonEmpty("entity", Warn),
+    Rule("required_entity", col("__entity").isNull, Warn),
     Validation.requiredNonEmpty("Day", Warn),
-    Validation.requiredNonEmpty("total_confirmed_deaths", Warn),
+    Rule("required_total_confirmed_deaths",
+      col("__trimmed_deaths").isNull || col("__trimmed_deaths") === "", Warn),
     Rule("numeric_total_confirmed_deaths", // dataflow.py:349-353
       col("total_confirmed_deaths").isNotNull && col("__double").isNull, Warn),
     Rule("date_Day", col("Day").isNotNull && col("__day").isNull, Warn)) // :355-359
@@ -87,8 +89,11 @@ object CovidTransform {
   private def emptyish(c: Column): Column = c.isNull || trim(c) === ""
 
   /** The raw strings beside their parses; null ⇒ that field failed its
-    * parse/check. `__double` is its own projection below the rest because
-    * the numeric rule and the deaths parse both read it. Both casts are
+    * parse/check. `entity` and `total_confirmed_deaths` are trimmed once,
+    * in the lowest projection, and `__double` is its own projection above
+    * it, because the rules and the parses above both read them: Catalyst
+    * does not inline a projected value that the projection above reads
+    * twice. Both casts are
     * try_cast: the outer one turns NaN/Infinity doubles into rejects
     * (Python's int(float("NaN")) raises ⇒ row dropped), where an ANSI cast
     * would throw CAST_OVERFLOW at runtime; double→long truncates toward
@@ -96,9 +101,14 @@ object CovidTransform {
     */
   private def parsed(raw: DataFrame): DataFrame =
     raw.select(col("entity"), col("Day"), col("total_confirmed_deaths"),
-        expr("try_cast(trim(total_confirmed_deaths) AS DOUBLE)").as("__double"))
-      .select(col("entity"), col("Day"), col("total_confirmed_deaths"), col("__double"),
-        when(trim(col("entity")) =!= "", trim(col("entity"))).as("__entity"),
+        trim(col("entity")).as("__trimmed_entity"),
+        trim(col("total_confirmed_deaths")).as("__trimmed_deaths"))
+      .select(col("entity"), col("Day"), col("total_confirmed_deaths"),
+        col("__trimmed_deaths"),
+        expr("try_cast(__trimmed_deaths AS DOUBLE)").as("__double"),
+        when(col("__trimmed_entity") =!= "", col("__trimmed_entity")).as("__entity"))
+      .select(col("entity"), col("Day"), col("total_confirmed_deaths"),
+        col("__trimmed_deaths"), col("__double"), col("__entity"),
         when(col("Day").rlike("^\\d{4}-\\d{2}-\\d{2}$"), expr("try_to_date(Day, 'yyyy-MM-dd')"))
           .as("__day"),
         expr("try_cast(__double AS BIGINT)").as("__deaths"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Host-graph analytics over a web corpus: the link-based quality plane
@@ -31,14 +31,11 @@ object WebGraph {
     * Scale shape: `edges` is distinct-ed and joined to its out-degree
     * ONCE, persisted, and reused every iteration (the invariant side of
     * the loop — at 100 TB this is the big frame, and re-deriving it per
-    * iteration would re-shuffle the corpus k times). Each iteration is
-    * one join (ranks are hash-partitioned on node, edges on src) plus
-    * one aggregation keyed by dst; ranks (N rows — HOSTS, not
-    * documents, ~10^7 at web scale) are localCheckpoint-ed so the plan
-    * stays one-iteration deep instead of k-joins deep. Dangling nodes
-    * (no out-edges) contribute nothing, matching the "remove dangling
-    * mass" PageRank variant — deterministic and oracle-replayable; the
-    * redistribution variant needs a global scalar per iteration.
+    * iteration would re-shuffle the corpus k times); the rounds are
+    * [[rankRounds]]. Dangling nodes (no out-edges) contribute nothing,
+    * matching the "remove dangling mass" PageRank variant —
+    * deterministic and oracle-replayable; the redistribution variant
+    * needs a global scalar per iteration.
     *
     * Driver traffic: a single `count()` of the node frame (one long) —
     * N is needed as an exact integer in the rank formula.
@@ -50,21 +47,19 @@ object WebGraph {
                scale: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1,50], got $iterations")
-    val (ranks, _) = pageRankLoop(edges, srcCol, dstCol, iterations,
-      dampingPct, scale, tolerance = -1L)
-    ranks
+    uniformPageRank(edges, srcCol, dstCol, iterations, dampingPct, scale,
+      tolerance = -1L)._1
   }
 
-  /** [[pageRank]] with a convergence probe: stops as soon as the largest
-    * per-node rank movement `max |rank_t+1 − rank_t|` drops to `tolerance`
-    * scaled-integer units or below, with `maxIter` as the backstop. Each
-    * probe is one join + max over the SKINNY rank frame (N hosts, not
-    * edges) — the [[graft.ops.Dedup.connectedComponents]] fixpoint-probe
-    * pattern — so at web scale the early exit saves whole edge-join
-    * iterations for the price of a per-round scalar. An intermediate
-    * iterate of the converged run is bit-identical to the fixed-k run at
-    * the same k (same update rule, same integer arithmetic), so the
-    * fixed-k flavor stays the oracle-replay surface.
+  /** [[pageRank]] that stops as soon as the largest per-node rank
+    * movement `max |rank_t+1 − rank_t|` drops to `tolerance`
+    * scaled-integer units or below, with `maxIter` as the backstop. The
+    * movement is an observed metric of each round's checkpoint job
+    * ([[rankRounds]]), so at web scale the early exit saves whole
+    * edge-join iterations at no probe job. An intermediate iterate of
+    * the converged run is bit-identical to the fixed-k run at the same k
+    * (same update rule, same integer arithmetic), so the fixed-k flavor
+    * stays the oracle-replay surface.
     *
     * @return (ranks, iterationsRun)
     */
@@ -75,62 +70,101 @@ object WebGraph {
     require(maxIter >= 1 && maxIter <= 50,
       s"maxIter must be in [1,50], got $maxIter")
     require(tolerance >= 0, s"tolerance must be >= 0, got $tolerance")
-    pageRankLoop(edges, srcCol, dstCol, maxIter, dampingPct, scale, tolerance)
+    uniformPageRank(edges, srcCol, dstCol, maxIter, dampingPct, scale,
+      tolerance)
   }
 
-  /** Shared iteration body; `tolerance < 0` disables the probe (fixed-k). */
-  private def pageRankLoop(edges: DataFrame, srcCol: String, dstCol: String,
-                           maxIter: Int, dampingPct: Int, scale: Long,
-                           tolerance: Long): (DataFrame, Int) = {
+  /** [[pageRank]]'s start and update rule on [[rankRounds]]. */
+  private def uniformPageRank(edges: DataFrame, srcCol: String,
+                              dstCol: String, maxIter: Int, dampingPct: Int,
+                              scale: Long, tolerance: Long): (DataFrame, Int) = {
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0,100], got $dampingPct")
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
+    val (nodes, eo) = outDegreePlane(edges, srcCol, dstCol)
+    val n = nodes.count() // bounded driver traffic: one scalar
+    require(n > 0, "pageRank: empty graph")
+    val r0 = scale / n
+    val base = (100L - dampingPct) * r0 / 100L
+    val out = rankRounds(eo, nodes.select(col("node"), lit(r0).as("rank")),
+      expr("rank div outdeg"),
+      lit(base) + expr(s"($dampingPct * inflow) div 100"), maxIter, tolerance)
+    nodes.unpersist()
+    eo.unpersist()
+    out
+  }
+
+  /** `edges`' (srcCol, dstCol) as a string pair plane named (`s`, `d`),
+    * rows with a null end dropped — how the unweighted operators read
+    * their edge list.
+    */
+  private def edgePlane(edges: DataFrame, srcCol: String, dstCol: String,
+                        s: String = "src", d: String = "dst"): DataFrame =
+    edges.select(col(srcCol).cast("string").as(s),
+        col(dstCol).cast("string").as(d))
+      .filter(col(s).isNotNull && col(d).isNotNull)
+
+  /** The distinct edges of [[pageRank]] and [[personalizedPageRank]] →
+    * (nodes (node), edges with their src out-degree (src, dst, outdeg)),
+    * both persisted; the caller unpersists.
+    */
+  private def outDegreePlane(edges: DataFrame, srcCol: String,
+                             dstCol: String): (DataFrame, DataFrame) = {
+    val e = edgePlane(edges, srcCol, dstCol).distinct()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
       .persist()
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    // the loop-invariant frame: one row per edge with its src out-degree
-    val eo = e.join(outdeg, "src").persist()
+    (nodes, e.join(outdeg, "src").persist())
+  }
 
-    val n = nodes.count() // bounded driver traffic: one scalar
-    require(n > 0, "pageRank: empty graph")
-    val r0 = scale / n
-    val base = (100L - dampingPct) * r0 / 100L
-
-    var ranks = nodes.select(col("node"), lit(r0).as("rank"))
+  /** The rank-propagation rounds of the PageRank family ([[pageRank]],
+    * [[katzCentrality]], [[weightedPageRank]], [[personalizedPageRank]]).
+    * Round t+1 joins the loop-invariant edge frame `eo` (src, dst, …) to
+    * round t's ranks on src and sums `contrib` (over `eo`'s columns and
+    * `rank`) per dst into `inflow`; round t's own rows join that sum as
+    * zero contributions, so every node keeps its row, its previous rank
+    * and the columns `ranks0` carries beside (node, rank). `rank` becomes
+    * `update`, an expression over `inflow` and those columns. Per round:
+    * one join keyed on src and one aggregation keyed on node, over skinny
+    * node-keyed frames, in the caller's exact integer arithmetic. (A left
+    * join of round t to the sums would shuffle round t's checkpoint once
+    * more: its partitioning is unknown to the planner.)
+    *
+    * With the previous rank on the same row, the largest movement
+    * `max |rank − prev|` is an observed metric of the round's
+    * [[Rounds.checkpoint]] job: the rounds stop once it is ≤ `tolerance`
+    * (`tolerance < 0` runs all `maxIter`) without a probe job. Each
+    * round is released once the next is materialized.
+    *
+    * @return ((node, rank) of the last round, rounds run)
+    */
+  private def rankRounds(eo: DataFrame, ranks0: DataFrame, contrib: Column,
+                         update: Column, maxIter: Int,
+                         tolerance: Long): (DataFrame, Int) = {
+    val carried = ranks0.columns.toSeq.filterNot(Set("node", "rank"))
+    val kept = carried :+ "__prev"
+    var ranks = ranks0
     var iter = 0
     var done = false
     while (!done && iter < maxIter) {
       val inflow = eo
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"), expr("rank div outdeg").as("contrib"))
-        .groupBy("dst")
-        .agg(sum("contrib").as("inflow"))
-      val next = nodes
-        .join(inflow.withColumnRenamed("dst", "node"), Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + expr(
-            s"($dampingPct * coalesce(inflow, cast(0 as bigint))) div 100"))
-            .as("rank"))
-        .localCheckpoint() // cut lineage: plan depth stays O(1), not O(k)
-      if (tolerance >= 0L) {
-        // probe over the skinny checkpointed frames: one scalar per round
-        val delta = next
-          .join(ranks.withColumnRenamed("rank", "__prev"), "node")
-          .agg(max(abs(col("rank") - col("__prev")))).head().getLong(0)
-        done = delta <= tolerance
-      }
+        .join(ranks.select(col("node").as("src"), col("rank")), "src")
+        .select(col("dst").as("node"), contrib.as("inflow"))
+      val own = ranks.select((col("node") +: carried.map(col)) :+
+        col("rank").as("__prev") :+ lit(0L).as("inflow"): _*)
+      val (next, moved) = Rounds.checkpoint(
+        inflow.unionByName(own, allowMissingColumns = true)
+          .groupBy("node")
+          .agg(sum("inflow").as("inflow"), kept.map(c => max(c).as(c)): _*)
+          .select((col("node") +: kept.map(col)) :+ update.as("rank"): _*),
+        max(abs(col("rank") - col("__prev"))))
+      Rounds.release(ranks)
       ranks = next
       iter += 1
+      done = tolerance >= 0L && moved.getLong(0) <= tolerance
     }
-    nodes.unpersist()
-    eo.unpersist()
-    (ranks, iter)
+    (ranks.select(col("node"), col("rank")), iter)
   }
 
   /** Truncated Katz centrality (Katz, Psychometrika 1953) — the
@@ -155,11 +189,9 @@ object WebGraph {
     * < 5e18). A graph/α pair outside the bound raises with the bound
     * named — pick a smaller α for hub-heavy graphs.
     *
-    * Scale shape identical to [[pageRank]]: edges distinct-ed and
-    * persisted once, per-iteration one join keyed on src + one
-    * aggregation keyed on dst over skinny rank frames,
-    * localCheckpoint per round, one scalar (max in-degree) to the
-    * driver up front.
+    * Edges are distinct-ed and persisted once; the rounds are
+    * [[rankRounds]]; one scalar (max in-degree) goes to the driver up
+    * front.
     *
     * → (node, katz) in SCALE-scaled integer units.
     */
@@ -173,12 +205,7 @@ object WebGraph {
       s"iterations must be in [1,8], got $iterations")
     require(scale >= 1L && scale <= 1000000000L,
       s"scale must be in [1,1e9], got $scale")
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .persist()
+    val e = edgePlane(edges, srcCol, dstCol).distinct().persist()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
@@ -190,22 +217,13 @@ object WebGraph {
         s"${alphaNum.toLong * maxInDeg} exceeds 7*alphaDen = " +
         s"${7L * alphaDen} — truncated Katz grows like " +
         s"(alpha*indegree)^t; choose a smaller alpha for this graph")
-    var ranks = nodes.select(col("node"), lit(scale).as("katz"))
-    for (_ <- 1 to iterations) {
-      val inflow = e
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst"))
-        .agg(sum(col("katz")).as("inflow"))
-      ranks = nodes
-        .join(inflow.withColumnRenamed("dst", "node"), Seq("node"), "left")
-        .select(col("node"),
-          (lit(scale) + expr(
-            s"($alphaNum * coalesce(inflow, cast(0 as bigint)))" +
-              s" div $alphaDen")).as("katz"))
-        .localCheckpoint() // plan depth stays O(1), not O(iterations)
-    }
+    val (ranks, _) = rankRounds(e,
+      nodes.select(col("node"), lit(scale).as("rank")), col("rank"),
+      lit(scale) + expr(s"($alphaNum * inflow) div $alphaDen"), iterations,
+      tolerance = -1L)
     e.unpersist()
-    ranks
+    Rounds.release(nodes)
+    ranks.withColumnRenamed("rank", "katz")
   }
 
   /** HITS hubs & authorities (Kleinberg, JACM 1999) over a (src, dst)
@@ -236,11 +254,7 @@ object WebGraph {
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1,50], got $iterations")
     require(scale > 0, s"scale must be > 0, got $scale")
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().persist()
+    val e = edgePlane(edges, srcCol, dstCol).distinct().persist()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct().persist()
@@ -289,7 +303,7 @@ object WebGraph {
     * DECIMAL(38,0) (HUGEINT in the oracle) so weight × SCALE cannot
     * overflow. Duplicate (src, dst) rows collapse additively. With all
     * weights equal the result is bit-identical to [[pageRank]]
-    * (spec-pinned).
+    * (spec-pinned). The rounds are [[rankRounds]].
     */
   def weightedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                        weightCol: String, iterations: Int = 8,
@@ -315,25 +329,11 @@ object WebGraph {
     require(n > 0, "weightedPageRank: empty graph")
     val r0 = scale / n
     val base = (100L - dampingPct) * r0 / 100L
-
-    var ranks = nodes.select(col("node"), lit(r0).as("rank"))
-    for (_ <- 1 to iterations) {
-      val inflow = eo
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"),
-          expr("CAST(CAST(rank AS DECIMAL(38,0)) * w AS DECIMAL(38,0))" +
-            " div outw").as("contrib"))
-        .groupBy("dst")
-        .agg(sum("contrib").as("inflow"))
-      val next = nodes
-        .join(inflow.withColumnRenamed("dst", "node"), Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + expr(
-            s"($dampingPct * coalesce(inflow, cast(0 as bigint))) div 100"))
-            .as("rank"))
-        .localCheckpoint()
-      ranks = next
-    }
+    val (ranks, _) = rankRounds(eo,
+      nodes.select(col("node"), lit(r0).as("rank")),
+      expr("CAST(CAST(rank AS DECIMAL(38,0)) * w AS DECIMAL(38,0)) div outw"),
+      lit(base) + expr(s"($dampingPct * inflow) div 100"), iterations,
+      tolerance = -1L)
     nodes.unpersist()
     eo.unpersist()
     ranks
@@ -360,11 +360,8 @@ object WebGraph {
     */
   def triangleStats(edges: DataFrame, srcCol: String,
                     dstCol: String): DataFrame = {
-    val und = edges
-      .select(col(srcCol).cast("string").as("u"),
-        col(dstCol).cast("string").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull &&
-        col("u") =!= col("v"))
+    val und = edgePlane(edges, srcCol, dstCol, "u", "v")
+      .filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("a"),
         greatest(col("u"), col("v")).as("b"))
       .distinct()
@@ -438,10 +435,7 @@ object WebGraph {
                        iterations: Int = 3): DataFrame = {
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1,50], got $iterations")
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
+    val e = edgePlane(edges, srcCol, dstCol)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
@@ -463,9 +457,11 @@ object WebGraph {
         .agg(min(struct((-col("c")).as("negc"), col("lbl").as("l")))
           .as("top"))
         .select(col("node"), col("top.l").as("__new"))
-      labels = labels.join(winner, Seq("node"), "left")
+      val next = labels.join(winner, Seq("node"), "left")
         .select(col("node"), coalesce(col("__new"), col("lbl")).as("lbl"))
         .localCheckpoint() // cut lineage: plan depth stays O(1), not O(k)
+      Rounds.release(labels)
+      labels = next
       iter += 1
     }
     nodes.unpersist()
@@ -495,10 +491,7 @@ object WebGraph {
                    source: String, maxHops: Int = 10): DataFrame = {
     require(maxHops >= 1 && maxHops <= 64,
       s"maxHops must be in [1,64], got $maxHops")
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
+    val e = edgePlane(edges, srcCol, dstCol)
       .distinct()
       .persist()
     val spark = edges.sparkSession
@@ -513,14 +506,18 @@ object WebGraph {
         .select(col("dst").as("node")).distinct()
         .join(visited.select(col("node")), Seq("node"), "left_anti")
         .localCheckpoint()
+      Rounds.release(frontier)
+      frontier = next
       if (next.isEmpty) done = true
       else {
-        visited = visited
+        val grown = visited
           .unionByName(next.select(col("node"), lit(hop).as("hop")))
           .localCheckpoint()
-        frontier = next
+        Rounds.release(visited)
+        visited = grown
       }
     }
+    Rounds.release(frontier)
     e.unpersist()
     visited
   }
@@ -573,8 +570,10 @@ object WebGraph {
           (col("dist").isNull || (col("__nd").isNotNull &&
             col("__nd") < col("dist"))).as("__improved"))
         .localCheckpoint()
+      Rounds.release(dist)
       done = merged.filter(col("__improved")).isEmpty
       dist = merged.select(col("node"), col("dist")).localCheckpoint()
+      Rounds.release(merged)
     }
     e.unpersist()
     dist
@@ -600,10 +599,7 @@ object WebGraph {
     */
   def graphStats(edges: DataFrame, srcCol: String,
                  dstCol: String): DataFrame = {
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
+    val e = edgePlane(edges, srcCol, dstCol)
       .distinct()
       .localCheckpoint() // reused five ways below
     val nNodes = e.select(col("src").as("node"))
@@ -685,11 +681,8 @@ object WebGraph {
             k: Int, maxRounds: Int = 200): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
+    val e = edgePlane(edges, srcCol, dstCol)
+      .filter(col("src") =!= col("dst"))
     // undirected simple view: each unordered pair once per direction
     val nbr = e.select(col("src").as("node"), col("dst").as("nb"))
       .union(e.select(col("dst").as("node"), col("src").as("nb")))
@@ -708,6 +701,7 @@ object WebGraph {
         .select(col("node")).localCheckpoint()
       val m = next.count()
       done = m == n // no node fell below k this round → fixpoint
+      Rounds.release(alive)
       alive = next
       n = m
       round += 1
@@ -722,6 +716,7 @@ object WebGraph {
       .groupBy("node").agg(count(lit(1)).as("core_degree"))
       .localCheckpoint(true)
     nbr.unpersist()
+    Rounds.release(alive)
     core
   }
 
@@ -754,11 +749,8 @@ object WebGraph {
              k: Int, maxRounds: Int = 64): DataFrame = {
     require(k >= 3, s"k must be >= 3 (k-2 triangles per edge), got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val e0 = edges
-      .select(col(srcCol).cast("string").as("__s"),
-        col(dstCol).cast("string").as("__d"))
-      .filter(col("__s").isNotNull && col("__d").isNotNull &&
-        col("__s") =!= col("__d"))
+    val e0 = edgePlane(edges, srcCol, dstCol, "__s", "__d")
+      .filter(col("__s") =!= col("__d"))
       .select(least(col("__s"), col("__d")).as("a"),
         greatest(col("__s"), col("__d")).as("b"))
       .distinct()
@@ -779,11 +771,15 @@ object WebGraph {
     while (!done) {
       require(round < maxRounds,
         s"kTruss did not converge within maxRounds=$maxRounds")
-      sup = support(cur).localCheckpoint()
-      val next = sup.filter(col("__sup") >= lit((k - 2).toLong))
+      val s = support(cur).localCheckpoint()
+      val next = s.filter(col("__sup") >= lit((k - 2).toLong))
         .select(col("a"), col("b")).localCheckpoint()
       val m = next.count()
       done = m == n || m == 0L
+      // the result joins the last round's survivors and supports
+      Rounds.release(sup)
+      Rounds.release(cur)
+      sup = s
       cur = next
       n = m
       round += 1
@@ -809,12 +805,11 @@ object WebGraph {
     * are proximity SCORES, not a probability simplex, and the replay
     * is bit-exact for it.
     *
-    * Scale shape identical to [[pageRank]]: edge⋈outdeg persisted
-    * once, one join + one agg per iteration over skinny rank frames,
-    * localCheckpoint per round. Seeds arrive as a DataFrame (not a
-    * driver-side list) so a seed set of any size — "all hosts the
-    * curator whitelisted" — stays distributed; it is deduplicated and
-    * counted once (one scalar to the driver).
+    * Edge⋈outdeg is persisted once, as in [[pageRank]]; the rounds are
+    * [[rankRounds]], the seed flag carried on the rank frame. Seeds
+    * arrive as a DataFrame (not a driver-side list) so a seed set of any
+    * size — "all hosts the curator whitelisted" — stays distributed; it
+    * is deduplicated and counted once (one scalar to the driver).
     *
     * → (node, rank) in SCALE-scaled integer units; nodes unreachable
     *   from the seeds score 0.
@@ -828,17 +823,7 @@ object WebGraph {
       s"iterations must be in [1,50], got $iterations")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0,100], got $dampingPct")
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .persist()
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val eo = e.join(outdeg, "src").persist()
+    val (nodes, eo) = outDegreePlane(edges, srcCol, dstCol)
     // seed flag joined onto the node frame once — seeds outside the
     // graph are ignored (they have no edges to walk)
     val seedNodes = seeds
@@ -854,24 +839,13 @@ object WebGraph {
     val r0 = scale / nSeeds
     val base = (100L - dampingPct) * r0 / 100L
 
-    var ranks = flagged.select(col("node"),
-      when(col("__seed"), lit(r0)).otherwise(lit(0L)).as("rank"))
-    var iter = 0
-    while (iter < iterations) {
-      val inflow = eo
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"), expr("rank div outdeg").as("contrib"))
-        .groupBy("dst")
-        .agg(sum("contrib").as("inflow"))
-      ranks = flagged
-        .join(inflow.withColumnRenamed("dst", "node"), Seq("node"), "left")
-        .select(col("node"),
-          (when(col("__seed"), lit(base)).otherwise(lit(0L)) + expr(
-            s"($dampingPct * coalesce(inflow, cast(0 as bigint))) div 100"))
-            .as("rank"))
-        .localCheckpoint() // cut lineage: plan depth stays O(1), not O(k)
-      iter += 1
-    }
+    // the seed flag rides every round's rank frame
+    val (ranks, _) = rankRounds(eo, flagged.select(col("node"),
+        when(col("__seed"), lit(r0)).otherwise(lit(0L)).as("rank"),
+        col("__seed")),
+      expr("rank div outdeg"),
+      when(col("__seed"), lit(base)).otherwise(lit(0L)) +
+        expr(s"($dampingPct * inflow) div 100"), iterations, tolerance = -1L)
     nodes.unpersist()
     eo.unpersist()
     flagged.unpersist()
@@ -884,11 +858,8 @@ object WebGraph {
     */
   private def undirectedNbr(edges: DataFrame, srcCol: String,
                             dstCol: String): DataFrame = {
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
+    val e = edgePlane(edges, srcCol, dstCol)
+      .filter(col("src") =!= col("dst"))
     e.select(col("src").as("node"), col("dst").as("nb"))
       .union(e.select(col("dst").as("node"), col("src").as("nb")))
       .distinct()
@@ -1351,11 +1322,8 @@ object WebGraph {
   private def sampledBfs(edges: DataFrame, srcCol: String, dstCol: String,
                          nSources: Int, maxDepth: Int)
       : (DataFrame, DataFrame, DataFrame, Int) = {
-    val e = edges
-      .select(col(srcCol).cast("string").as("esrc"),
-        col(dstCol).cast("string").as("edst"))
-      .filter(col("esrc").isNotNull && col("edst").isNotNull &&
-        col("esrc") =!= col("edst"))
+    val e = edgePlane(edges, srcCol, dstCol, "esrc", "edst")
+      .filter(col("esrc") =!= col("edst"))
       .distinct()
       .persist()
     val nodes = e.select(col("esrc").as("node"))
@@ -1658,11 +1626,8 @@ object WebGraph {
                                 reverse: Boolean, what: String)
                                (read: (Int, DataFrame) => T): Seq[T] = {
     require(maxT >= 1 && maxT <= 256, s"maxT must be in [1,256], got $maxT")
-    val e0 = edges
-      .select(col(srcCol).cast("string").as("esrc"),
-        col(dstCol).cast("string").as("edst"))
-      .filter(col("esrc").isNotNull && col("edst").isNotNull &&
-        col("esrc") =!= col("edst")) // v ∈ B_t(v) already
+    val e0 = edgePlane(edges, srcCol, dstCol, "esrc", "edst")
+      .filter(col("esrc") =!= col("edst")) // v ∈ B_t(v) already
       .distinct()
     val e = (if (reverse) e0.select(col("edst").as("esrc"),
         col("esrc").as("edst"))
@@ -1863,11 +1828,8 @@ object WebGraph {
     require(maxDepth >= 1 && maxDepth <= 256,
       s"maxDepth must be in [1,256], got $maxDepth")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val e0 = edges
-      .select(col(srcCol).cast("string").as("esrc"),
-        col(dstCol).cast("string").as("edst"))
-      .filter(col("esrc").isNotNull && col("edst").isNotNull &&
-        col("esrc") =!= col("edst")) // self-loops never change SCCs
+    val e0 = edgePlane(edges, srcCol, dstCol, "esrc", "edst")
+      .filter(col("esrc") =!= col("edst")) // self-loops never change SCCs
       .distinct()
       .persist()
     // the residual emptiness signal rides every residual checkpoint job
@@ -2038,11 +2000,8 @@ object WebGraph {
     import scala.concurrent.Await
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val e0 = edges
-      .select(col(srcCol).cast("string").as("esrc"),
-        col(dstCol).cast("string").as("edst"))
-      .filter(col("esrc").isNotNull && col("edst").isNotNull &&
-        col("esrc") =!= col("edst"))
+    val e0 = edgePlane(edges, srcCol, dstCol, "esrc", "edst")
+      .filter(col("esrc") =!= col("edst"))
       .distinct()
       .persist()
     val nodes = e0.select(col("esrc").as("node"))
@@ -2130,11 +2089,8 @@ object WebGraph {
                   compCol: String = "component",
                   weightCol: Option[String] = None): DataFrame = {
     val e0 = weightCol match {
-      case None => edges
-        .select(col(srcCol).cast("string").as("esrc"),
-          col(dstCol).cast("string").as("edst"))
-        .filter(col("esrc").isNotNull && col("edst").isNotNull &&
-          col("esrc") =!= col("edst"))
+      case None => edgePlane(edges, srcCol, dstCol, "esrc", "edst")
+        .filter(col("esrc") =!= col("edst"))
         .distinct()
       case Some(wc) => edges
         .select(col(srcCol).cast("string").as("esrc"),
@@ -2262,11 +2218,8 @@ object WebGraph {
     */
   def reciprocity(edges: DataFrame, srcCol: String,
                   dstCol: String): DataFrame = {
-    val e0 = edges
-      .select(col(srcCol).cast("string").as("esrc"),
-        col(dstCol).cast("string").as("edst"))
-      .filter(col("esrc").isNotNull && col("edst").isNotNull &&
-        col("esrc") =!= col("edst"))
+    val e0 = edgePlane(edges, srcCol, dstCol, "esrc", "edst")
+      .filter(col("esrc") =!= col("edst"))
       .distinct()
     val rev = e0.select(col("edst").as("esrc"), col("esrc").as("edst"))
     e0.join(rev, Seq("esrc", "edst"), "left_semi")
@@ -2309,11 +2262,8 @@ object WebGraph {
     require(walksPerNode >= 1 && walksPerNode <= 64,
       s"walksPerNode in [1,64], got $walksPerNode")
     require(walkLen >= 1 && walkLen <= 64, s"walkLen in [1,64], got $walkLen")
-    val e = edges
-      .select(col(srcCol).cast("string").as("__s"),
-        col(dstCol).cast("string").as("__d"))
-      .filter(col("__s").isNotNull && col("__d").isNotNull &&
-        col("__s") =!= col("__d"))
+    val e = edgePlane(edges, srcCol, dstCol, "__s", "__d")
+      .filter(col("__s") =!= col("__d"))
       .distinct()
     val wRank = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__s")).orderBy(col("__d"))

@@ -79,6 +79,9 @@ class EtlSpec extends AnyFunSuite {
   test("clean parses each row once: one RLIKE in the executed plan") {
     val plan = CovidTransform.clean(raw).queryExecution.executedPlan.toString
     assert("RLIKE".r.findAllMatchIn(plan).size == 1, plan)
+    // each raw field is trimmed once, for the parses and the rules alike
+    for (field <- Seq("entity", "Day", "total_confirmed_deaths"))
+      assert(s"trim\\($field#".r.findAllMatchIn(plan).size == 1, s"$field: $plan")
   }
 
   test("validation gate fails on empty input") {

@@ -322,6 +322,26 @@ class HtmlSpec extends AnyFunSuite {
     assert(got == refRanks(edges, iters))
   }
 
+  test("pageRankConverged starts exactly the jobs of fixed-k at the same k") {
+    import spark.implicits._
+    // the star graph above: the largest rank movement rides each round's
+    // checkpoint job, so the convergence test costs no job of its own
+    val edges = (1 to 5).map(i => ("hub", s"leaf$i")).toDF("s", "d")
+    val converged = GroupRun(spark, "html-spec-converged") {
+      val (ranks, iters) = WebGraph.pageRankConverged(edges, "s", "d",
+        maxIter = 50, tolerance = 0L)
+      ranks.collect()
+      iters
+    }
+    val fixed = GroupRun(spark, "html-spec-fixed-k") {
+      WebGraph.pageRank(edges, "s", "d", iterations = converged.value)
+        .collect()
+    }
+    assert(converged.jobs == fixed.jobs,
+      s"${converged.value} rounds: converged ${converged.jobs} jobs, " +
+        s"fixed-k ${fixed.jobs}")
+  }
+
   test("kCore: tail peels off, clique survives; k above max degree empties; loops/dups ignored") {
     import spark.implicits._
     // clique {a,b,c,d} with a 2-hop tail d-e-f; duplicate and reversed

@@ -2,8 +2,6 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageSubmitted}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Rounds, WebGraph}
@@ -66,65 +64,57 @@ class RoundsSpec extends AnyFunSuite {
     assert(chk.count() == 10L)
   }
 
-  test("stronglyConnectedComponents releases each pivot round's planes") {
+  /** (test name, a run of an iterative operator, the most persisted RDDs
+    * the run may leave behind): a run that releases its earlier rounds
+    * leaves only the frames its result reads. Every input here runs its
+    * operator for several rounds.
+    */
+  private def releaseCases: Seq[(String, () => Unit, Int)] = {
     import spark.implicits._
-    val sc = spark.sparkContext
-    // four disjoint 3-cycles: trim settles nothing, and one pivot per
-    // round settles one cycle, so the run takes four pivot rounds
-    val edges = (0 until 4).flatMap { c =>
-      Seq((s"c$c-0", s"c$c-1"), (s"c$c-1", s"c$c-2"), (s"c$c-2", s"c$c-0"))
-    }.toDF("src", "dst")
-    // the persisted RDDs this run's own stages touched: other suites in
-    // this JVM may persist RDDs concurrently, and the run's job group
-    // reaches its pooled threads through Par.grouped
-    val group = "rounds-spec-scc"
-    val touched = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      private def prop(p: java.util.Properties, k: String) =
-        Option(p).map(_.getProperty(k)).orNull
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (prop(e.properties, "spark.jobGroup.id") == group)
-          e.stageInfo.rddInfos.filter(_.storageLevel.isValid)
-            .foreach(i => touched.add(i.id))
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (prop(e.properties, "spark.job.description") == group)
-          marker.countDown()
+    // a 3-cycle with a tail into a second node pair
+    def small = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"),
+      ("d", "e"), ("e", "d")).toDF("src", "dst")
+    Seq(
+      // four disjoint 3-cycles: trim settles nothing, and one pivot per
+      // round settles one cycle, so the run takes four pivot rounds. Of
+      // the 53 persisted RDDs it touches, 52 stayed before each round
+      // released its accelerated plane, pivots and restricted edges.
+      ("stronglyConnectedComponents releases each pivot round's planes", () => {
+        val edges = (0 until 4).flatMap { c =>
+          Seq((s"c$c-0", s"c$c-1"), (s"c$c-1", s"c$c-2"), (s"c$c-2", s"c$c-0"))
+        }.toDF("src", "dst")
+        val got = WebGraph.stronglyConnectedComponents(edges, "src", "dst",
+            pivotsPerRound = 1, maxDepth = 8, maxRounds = 8)
+          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+        assert(got == (0 until 4).flatMap(c =>
+          (0 until 3).map(i => s"c$c-$i" -> s"c$c-0")).toMap)
+      }, 41),
+      // the rank loop keeps only its last round
+      ("pageRank releases each round but the last", () => {
+        WebGraph.pageRank(small, "src", "dst", iterations = 5).collect()
+      }, 1),
+      ("katzCentrality releases each round and its node frame", () => {
+        WebGraph.katzCentrality(small, "src", "dst").collect()
+      }, 1),
+      ("labelPropagation releases each round but the last", () => {
+        WebGraph.labelPropagation(small, "src", "dst", iterations = 3)
+          .collect()
+      }, 1),
+      // a triangle with a pendant edge: round 1 peels the pendant, round 2
+      // finds the fixpoint; the result reads its survivors and supports
+      ("kTruss releases the rounds before the last", () => {
+        val got = WebGraph.kTruss(
+            Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")).toDF("s", "d"),
+            "s", "d", k = 3)
+          .collect().map(r => (r.getString(0), r.getString(1))).toSet
+        assert(got == Set(("a", "b"), ("b", "c"), ("a", "c")))
+      }, 2))
+  }
+
+  releaseCases.foreach { case (name, run, maxLeft) =>
+    test(name) {
+      val r = GroupRun(spark, s"rounds-spec-${name.takeWhile(_ != ' ')}")(run())
+      assert(r.left <= maxLeft, s"${r.left} of ${r.touched} RDDs left persisted")
     }
-    // hold every persisted RDD while the run is live: the persisted map
-    // holds RDDs weakly, so garbage collection would otherwise drop
-    // unreleased ones at random and the count below would not depend on
-    // the releases alone
-    val held = new java.util.concurrent.ConcurrentHashMap[Int, AnyRef]()
-    @volatile var running = true
-    val poller = new Thread(() => while (running) {
-      sc.getPersistentRDDs.foreach { case (id, rdd) => held.put(id, rdd) }
-      Thread.sleep(5)
-    })
-    poller.start()
-    sc.addSparkListener(listener)
-    val (got, left) = try {
-      sc.setJobGroup(group, "scc")
-      val out = WebGraph.stronglyConnectedComponents(edges, "src", "dst",
-          pivotsPerRound = 1, maxDepth = 8, maxRounds = 8)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      // listener events arrive in order: once this job is seen, every
-      // stage of the run has been
-      sc.setJobDescription(group)
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      val persisted = sc.getPersistentRDDs.keySet // while still held
-      (out, touched.asScala.count(persisted))
-    } finally {
-      running = false
-      poller.join()
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    assert(got == (0 until 4).flatMap(c =>
-      (0 until 3).map(i => s"c$c-$i" -> s"c$c-0")).toMap)
-    // of the 53 persisted RDDs the run touches, 52 stayed before each
-    // round released its accelerated plane, pivots and restricted edges
-    assert(left <= 41, s"$left of ${touched.size} RDDs left persisted")
   }
 }
