@@ -192,8 +192,6 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 30): DataFrame = {
-    val spark = pairs.sparkSession
-
     def canon(e: DataFrame): DataFrame =
       e.select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
         .filter(col("u") =!= col("v")).distinct()
@@ -219,15 +217,13 @@ object Dedup {
         .union(mins.select(col("u"), col("m").as("v"))))
     }
 
-    var edges = canon(pairs.select(col(aCol).cast("long").as("u"),
-      col(bCol).cast("long").as("v"))).localCheckpoint(true)
+    var (edges, n) = Rounds.counted(canon(pairs.select(
+      col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))))
     // Guard on the CANONICALIZED edges, not the raw pairs: an input of
     // only self-loops (a==b) canonicalizes to nothing, and the convergence
     // probe's bit_xor over zero rows is NULL (getLong would NPE).
-    if (edges.isEmpty) {
-      import spark.implicits._
-      return Seq.empty[(Long, Long, Long)].toDF("id", "component", "cluster_size")
-    }
+    if (n == 0L) return edges.select(col("u").as("id"),
+      col("v").as("component"), lit(0L).as("cluster_size"))
     var prev = (-1L, -1L)
     var iter = 0
     var done = false
@@ -235,7 +231,8 @@ object Dedup {
       // the convergence signature (row count, bit_xor of edge hashes)
       // rides the round's checkpoint job
       val (next, m) = Rounds.checkpoint(smallStar(largeStar(edges)),
-        count(lit(1)).as("__n"), expr("bit_xor(xxhash64(u, v))").as("__x"))
+        Rounds.rows, expr("bit_xor(xxhash64(u, v))").as("__x"))
+      Rounds.release(edges)
       edges = next
       val sig = (m.getLong(0), m.getLong(1))
       done = sig == prev
@@ -730,12 +727,11 @@ object Dedup {
                             skewGuard: Option[Boolean] = None,
                             skewMaxDf: Long = 1024L,
                             maxIter: Int = 50): DataFrame = {
-    var edges = containmentDropEdges(df, idCol, textCol, shingleSize,
-        minContainment, skewGuard, skewMaxDf)
-      .localCheckpoint(true)
+    var (edges, n) = Rounds.counted(containmentDropEdges(df, idCol, textCol,
+      shingleSize, minContainment, skewGuard, skewMaxDf))
     var droppedAcc: Option[DataFrame] = None
     var iter = 0
-    while (!edges.isEmpty) {
+    while (n > 0L) {
       if (iter >= maxIter) throw new IllegalStateException(
         s"dropContainedFixpoint did not converge in $maxIter rounds")
       // undecided universe = docs still carrying edges; a doc whose
@@ -757,14 +753,17 @@ object Dedup {
       // set: dropped containers can justify nothing, dropped containeds
       // are settled, survivor containeds (none, by construction) too
       val decided = survivors.union(dropped).distinct()
-      edges = edges
+      val (next, m) = Rounds.counted(edges
         .join(decided.select(col("id").as("contained_id")),
           Seq("contained_id"), "left_anti")
         .join(decided.select(col("id").as("container_id")),
-          Seq("container_id"), "left_anti")
-        .localCheckpoint(true)
+          Seq("container_id"), "left_anti"))
+      Rounds.release(edges)
+      edges = next
+      n = m
       iter += 1
     }
+    Rounds.release(edges)
     droppedAcc match {
       case None => df
       case Some(d) => df.join(d.select(col("id").as(idCol)), Seq(idCol), "left_anti")

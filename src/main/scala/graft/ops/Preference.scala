@@ -166,6 +166,7 @@ object Preference {
     val denFloor = 10000L
     var p = items.select(col("__a"), lit(scale).as("__p"))
       .localCheckpoint()
+    var held = p // the checkpoint `p` reads
     for (_ <- 1 to iterations) {
       val pa = p.select(col("__a"), col("__p").as("__pa"))
       val pb = p.select(col("__a").as("__b"), col("__p").as("__pb"))
@@ -186,9 +187,12 @@ object Preference {
       val (chk, mxRow) = Rounds.checkpoint(
         upd.select(col("__a"), col("__pn")), max(col("__pn")).as("__mx"))
       val mx = if (mxRow.isNullAt(0)) 1L else math.max(mxRow.getLong(0), 1L)
+      Rounds.release(held)
+      held = chk
       p = chk.select(col("__a"), expr(
         s"(CAST(__pn AS DECIMAL(38,0)) * $scale) div ${mx}L").as("__p"))
     }
+    Rounds.release(edges) // `items` and the last round are checkpointed
     items.join(p, Seq("__a"))
       .select(col("__a").as("item"), col("__wins").as("n_wins"),
         col("__games").as("n_comparisons"),

@@ -4,14 +4,16 @@ import org.apache.logging.log4j.Level
 import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{count, lit}
 
-/** The two per-round primitives of the iterative operators.
+/** The per-round primitives of the iterative operators.
   *
   * [[checkpoint]] cuts a round's lineage with an eager `localCheckpoint`
   * and reads the round's probes (a convergence signature, a row count,
   * a normalizing max) as observed metrics of that same job — no probe
   * job of its own. Level-synchronous rounds are bound by driver
-  * round-trips, so the probe must ride the checkpoint.
+  * round-trips, so the probe must ride the checkpoint: every round loop
+  * reads its stop signal this way, most through [[counted]].
   *
   * [[release]] frees a round's frame. `Dataset.unpersist` only drops a
   * frame from the cache manager; a `localCheckpoint`ed frame's blocks
@@ -31,6 +33,12 @@ private[graft] object Rounds {
   private lazy val quietCheckpointUnpersist: Unit =
     Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
 
+  /** The row-count probe: a loop's emptiness or fixpoint signal. Over
+    * zero rows it reads 0; a `sum`, `max` or `bit_xor` reads NULL there,
+    * so a probe that may see an empty round is a `count` or `count_if`.
+    */
+  val rows: Column = count(lit(1)).as("__n")
+
   /** Eager `localCheckpoint` of `df` with `probes` observed on the same
     * job → (the checkpointed frame, the probe row in `probes` order).
     */
@@ -39,6 +47,12 @@ private[graft] object Rounds {
     val chk = pre.localCheckpoint()
     // metrics land on the observed plan's execution, not the checkpoint's
     (chk, pre.queryExecution.observedMetrics(Probe))
+  }
+
+  /** [[checkpoint]] with the [[rows]] probe → (the frame, its row count). */
+  def counted(df: DataFrame): (DataFrame, Long) = {
+    val (chk, m) = checkpoint(df, rows)
+    (chk, m.getLong(0))
   }
 
   /** Frees `df` whether it was `persist()`ed or `localCheckpoint`ed. */

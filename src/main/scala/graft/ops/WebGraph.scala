@@ -481,8 +481,8 @@ object WebGraph {
     * current frontier (shrinking, usually ≪ nodes) plus one anti-join
     * against the visited set, both hash-partitioned on node; visited is
     * localCheckpoint-ed so the plan stays one round deep. Terminates
-    * early when the frontier empties (one count per round — bounded
-    * driver traffic, the [[pageRankConverged]] convention).
+    * early when the frontier empties: the frontier's row count rides
+    * its checkpoint job, so no round runs a probe job of its own.
     *
     * → (node, hop) for nodes reachable within `maxHops`; unreached
     *   nodes are absent.
@@ -502,13 +502,13 @@ object WebGraph {
     var done = false
     while (!done && hop < maxHops) {
       hop += 1L
-      val next = e.join(frontier.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node")).distinct()
-        .join(visited.select(col("node")), Seq("node"), "left_anti")
-        .localCheckpoint()
+      val (next, m) = Rounds.counted(
+        e.join(frontier.withColumnRenamed("node", "src"), "src")
+          .select(col("dst").as("node")).distinct()
+          .join(visited.select(col("node")), Seq("node"), "left_anti"))
       Rounds.release(frontier)
       frontier = next
-      if (next.isEmpty) done = true
+      if (m == 0L) done = true
       else {
         val grown = visited
           .unionByName(next.select(col("node"), lit(hop).as("hop")))
@@ -532,10 +532,10 @@ object WebGraph {
     * Scale shape: edges persisted once; each round is one join of
     * edges against the reached frontier plus one full-outer merge on
     * the skinny distance frame, localCheckpoint-ed to keep the plan
-    * O(1) deep. Early exit when a round improves nothing (one bounded
-    * count per round); `maxRounds` backstops — rounds beyond
-    * convergence are no-ops, so an early-exited run equals the fully
-    * unrolled replay.
+    * O(1) deep. Early exit when a round improves nothing: the count of
+    * improved nodes rides the round's checkpoint job. `maxRounds`
+    * backstops — rounds beyond convergence are no-ops, so an
+    * early-exited run equals the fully unrolled replay.
     *
     * → (node, dist) for reachable nodes, exact integer distances.
     */
@@ -555,6 +555,7 @@ object WebGraph {
       .persist()
     val spark = edges.sparkSession
     import spark.implicits._
+    // (node, dist) plus, after round 1, the round's __improved flag
     var dist = Seq((source, 0L)).toDF("node", "dist").localCheckpoint()
     var round = 0
     var done = false
@@ -563,20 +564,20 @@ object WebGraph {
       val cand = e.join(dist.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"))
         .agg(min(col("dist") + col("w")).as("__nd"))
-      val merged = dist.join(cand, Seq("node"), "full_outer")
-        .select(col("node"),
-          least(coalesce(col("dist"), col("__nd")),
-            coalesce(col("__nd"), col("dist"))).as("dist"),
-          (col("dist").isNull || (col("__nd").isNotNull &&
-            col("__nd") < col("dist"))).as("__improved"))
-        .localCheckpoint()
+      val (merged, improved) = Rounds.checkpoint(
+        dist.join(cand, Seq("node"), "full_outer")
+          .select(col("node"),
+            least(coalesce(col("dist"), col("__nd")),
+              coalesce(col("__nd"), col("dist"))).as("dist"),
+            (col("dist").isNull || (col("__nd").isNotNull &&
+              col("__nd") < col("dist"))).as("__improved")),
+        count_if(col("__improved")).as("__m"))
       Rounds.release(dist)
-      done = merged.filter(col("__improved")).isEmpty
-      dist = merged.select(col("node"), col("dist")).localCheckpoint()
-      Rounds.release(merged)
+      dist = merged
+      done = improved.getLong(0) == 0L
     }
     e.unpersist()
-    dist
+    dist.select(col("node"), col("dist"))
   }
 
   /** Whole-graph structural diagnostics (Newman, PRL 2002/2003 — the
@@ -668,11 +669,11 @@ object WebGraph {
     * is one semi-join of neighbors against the shrinking survivor set,
     * one degree aggregation, and one filter, with the survivor frame
     * (nodes only — the skinny side) localCheckpoint-ed so the plan
-    * stays O(1) deep across rounds. Early exit costs one count per
-    * round (bounded driver traffic, the [[pageRankConverged]]
-    * convention); rounds at the fixpoint are no-ops, so an early-exit
-    * run equals any longer replay — which is what lets a fixed-depth
-    * unrolled SQL oracle certify the fixpoint.
+    * stays O(1) deep across rounds. The survivor count that detects
+    * the fixpoint rides each survivor checkpoint job; rounds at the
+    * fixpoint are no-ops, so an early-exit run equals any longer
+    * replay — which is what lets a fixed-depth unrolled SQL oracle
+    * certify the fixpoint.
     *
     * → (node, core_degree): members of the k-core with their degree
     *   inside the core (≥ k by construction).
@@ -688,18 +689,17 @@ object WebGraph {
       .union(e.select(col("dst").as("node"), col("src").as("nb")))
       .distinct()
       .persist()
-    var alive = nbr.select(col("node")).distinct().localCheckpoint()
-    var n = alive.count()
+    // (node, deg): each node's degree within the `alive` node set
+    def degreeIn(alive: DataFrame): DataFrame = nbr
+      .join(alive, "node")
+      .join(alive.withColumnRenamed("node", "nb"), "nb")
+      .groupBy("node").agg(count(lit(1)).as("deg"))
+    var (alive, n) = Rounds.counted(nbr.select(col("node")).distinct())
     var round = 0
     var done = n == 0L
     while (!done && round < maxRounds) {
-      val deg = nbr
-        .join(alive, "node")
-        .join(alive.withColumnRenamed("node", "nb"), "nb")
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-      val next = deg.filter(col("deg") >= k)
-        .select(col("node")).localCheckpoint()
-      val m = next.count()
+      val (next, m) = Rounds.counted(
+        degreeIn(alive).filter(col("deg") >= k).select(col("node")))
       done = m == n // no node fell below k this round → fixpoint
       Rounds.release(alive)
       alive = next
@@ -710,10 +710,7 @@ object WebGraph {
     // neighbor frame — unpersisting first would make the returned (lazy)
     // DataFrame recompute the 2|E| neighbor build from scratch on its
     // first action (the labelPropagation eager-checkpoint discipline)
-    val core = nbr
-      .join(alive, "node")
-      .join(alive.withColumnRenamed("node", "nb"), "nb")
-      .groupBy("node").agg(count(lit(1)).as("core_degree"))
+    val core = degreeIn(alive).withColumnRenamed("deg", "core_degree")
       .localCheckpoint(true)
     nbr.unpersist()
     Rounds.release(alive)
@@ -737,10 +734,12 @@ object WebGraph {
     * Scale shape: per round ONE triangle join — canonical (a<b) edges
     * joined twice against the undirected adjacency, keyed (a,·) then
     * (b,c): the standard support computation, map-side combined to the
-    * edge plane — then one filter; edge frames are localCheckpoint-ed
-    * per round ([[kCore]] discipline), the loud `maxRounds` guard
-    * raises instead of looping. Peel rounds on real graphs are few
-    * (each round must delete ≥ 1 edge to continue).
+    * edge plane. Each round is one checkpoint of the supports whose
+    * job also counts the edges that keep ≥ k−2 triangles; the next
+    * round reads that checkpoint through a lazy survivor filter, and
+    * the loud `maxRounds` guard raises instead of looping. Peel rounds
+    * on real graphs are few (each round must delete ≥ 1 edge to
+    * continue).
     *
     * → surviving canonical edges (node_a < node_b, support) with their
     *   within-truss triangle support.
@@ -763,29 +762,25 @@ object WebGraph {
           Seq("b", "c"), "left_semi")
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("__sup"))
     }
-    var cur = e0.localCheckpoint()
-    var n = cur.count()
+    val survives = col("__sup") >= lit((k - 2).toLong)
+    // round 0 takes every edge as a survivor
+    var (sup, n) = Rounds.counted(e0.withColumn("__sup", lit((k - 2).toLong)))
     var round = 0
     var done = n == 0L
-    var sup = cur.limit(0).withColumn("__sup", lit(0L)) // empty shape
     while (!done) {
       require(round < maxRounds,
         s"kTruss did not converge within maxRounds=$maxRounds")
-      val s = support(cur).localCheckpoint()
-      val next = s.filter(col("__sup") >= lit((k - 2).toLong))
-        .select(col("a"), col("b")).localCheckpoint()
-      val m = next.count()
-      done = m == n || m == 0L
-      // the result joins the last round's survivors and supports
+      val (s, m) = Rounds.checkpoint(
+        support(sup.filter(survives).select(col("a"), col("b"))),
+        count_if(survives).as("__m"))
       Rounds.release(sup)
-      Rounds.release(cur)
       sup = s
-      cur = next
-      n = m
+      done = m.getLong(0) == n || m.getLong(0) == 0L
+      n = m.getLong(0)
       round += 1
     }
     // at the fixpoint the last computed supports describe the survivors
-    cur.join(sup, Seq("a", "b"))
+    sup.filter(survives)
       .select(col("a").as("node_a"), col("b").as("node_b"),
         col("__sup").cast("long").as("support"))
   }
@@ -1240,9 +1235,9 @@ object WebGraph {
     * total, frontier-joined against edges one hop at a time with
     * per-round localCheckpoint (O(1) plan depth); the backward pass
     * walks the SAME materialized state level by level — ≤ maxDepth
-    * keyed joins, no driver traffic (the only action is the per-round
-    * empty-frontier probe every BFS lane here pays). Source selection
-    * is a distributed top-k (TakeOrdered), never a global sort.
+    * keyed joins, no driver traffic (the forward frontier's emptiness
+    * rides each hop's checkpoint job). Source selection is a
+    * distributed top-k (TakeOrdered), never a global sort.
     *
     * Scale contract: σ is a path COUNT — on graphs whose shortest-path
     * DAGs are wide, σ·SCALE must fit DECIMAL(38,0) (σ < 10^25; any
@@ -1283,13 +1278,8 @@ object WebGraph {
           coalesce(sum(expr(
             s"CAST((CAST(sigma AS DECIMAL(38,0)) * (${scale}L + __dw))" +
               " div __sw AS BIGINT)")), lit(0L)).as("delta"))
-        // EAGER on purpose: these per-level checkpoints are the only
-        // actions of the backward sweep, so they are what keeps the
-        // materialization INSIDE the window where `e` is persisted. A
-        // lazy spelling (tried this session, −2% local) defers the whole
-        // sweep past e.unpersist() into the caller's action, which would
-        // recompute the edge distinct per level — depth× extra shuffles
-        // at cluster scale for a local round-trip saving.
+        // EAGER on purpose: a lazy checkpoint would defer the sweep past
+        // e.unpersist() and recompute the edge distinct once per level.
         .localCheckpoint() // O(1)-deep plan across levels
       acc = acc.unionByName(delta.select(col("s"), col("node"),
         col("delta")))
@@ -1312,8 +1302,8 @@ object WebGraph {
     * `nSources` nodes in md5(node) order (distributed top-k); the BFS
     * carries the shortest-path count σ as exact integers, one
     * frontier-against-edges join per hop with per-round localCheckpoint
-    * (O(1) plan depth; the per-round emptiness probe is the only
-    * action).
+    * (O(1) plan depth); the frontier's row count rides that checkpoint
+    * job, so no hop runs a probe job of its own.
     *
     * Returns (edges — PERSISTED, caller unpersists; nodes;
     * visited = (s, node, dist, sigma); depth — the first empty level
@@ -1333,13 +1323,9 @@ object WebGraph {
       .orderBy(md5(col("node").cast("binary")), col("node"))
       .limit(nSources) // TakeOrdered — never a global sort
     // forward: (s, node, dist, sigma); sigma = #shortest s→node paths.
-    // This loop is deliberately the measured shape: a union-of-level-
-    // leaves visited set (tried in r19 to avoid the per-level rewrite)
-    // made every downstream scan pay the D-leaf partition fan-out —
-    // q256's backward sweep measured 2.2× slower — and an observed-
-    // metric frontier probe adjudicated within host noise of the
-    // isEmpty job it replaced. Measurements beat theory; the compact
-    // rewritten frame wins for the heavy consumers.
+    // `visited` is rewritten into one compact frame per hop: a union of
+    // per-level leaves makes every downstream scan pay the D-leaf
+    // partition fan-out, which the backward sweep reads most.
     var visited = sources
       .select(col("node").as("s"), col("node"), lit(0).as("dist"),
         lit(1L).as("sigma"))
@@ -1349,14 +1335,14 @@ object WebGraph {
     var done = false
     while (!done && d < maxDepth) {
       d += 1
-      val next = frontier.join(e, col("node") === col("esrc"))
-        .groupBy(col("s"), col("edst").as("node"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .join(visited.select(col("s"), col("node")), Seq("s", "node"),
-          "left_anti")
-        .select(col("s"), col("node"), lit(d).as("dist"), col("sigma"))
-        .localCheckpoint()
-      if (next.isEmpty) done = true
+      val (next, m) = Rounds.counted(
+        frontier.join(e, col("node") === col("esrc"))
+          .groupBy(col("s"), col("edst").as("node"))
+          .agg(sum(col("sigma")).as("sigma"))
+          .join(visited.select(col("s"), col("node")), Seq("s", "node"),
+            "left_anti")
+          .select(col("s"), col("node"), lit(d).as("dist"), col("sigma")))
+      if (m == 0L) done = true
       else {
         // LAZY checkpoint: the union's standalone materialization job
         // folds into the next hop's anti-join (its first full-scan
@@ -1638,11 +1624,11 @@ object WebGraph {
     // round's checkpoint job — rows are only added and rho_max only
     // grows, so the pair moves iff any register moved, and reading it
     // costs no job (level-synchronous rounds are driver-latency bound:
-    // job COUNT is the wall time)
+    // job COUNT is the wall time); an empty plane reads (0, 0)
     def checkpointed(plane: DataFrame): (DataFrame, (Long, Long)) = {
       val (chk, m) = Rounds.checkpoint(plane,
-        sum(col("rho_max")).cast("bigint").as("__rho"),
-        count(lit(1)).cast("bigint").as("__rows"))
+        coalesce(sum(col("rho_max")).cast("bigint"), lit(0L)).as("__rho"),
+        Rounds.rows)
       (chk, (m.getLong(0), m.getLong(1)))
     }
     var (c, prev) = checkpointed(
@@ -1834,11 +1820,10 @@ object WebGraph {
       .persist()
     // the residual emptiness signal rides every residual checkpoint job
     // as its row count — no probe job per trim wave or pivot round
-    def rows = count(lit(1)).cast("bigint").as("__n")
-    val (allNodes, n0) = Rounds.checkpoint(e0.select(col("esrc").as("node"))
-      .unionByName(e0.select(col("edst").as("node"))).distinct(), rows)
+    val (allNodes, n0) = Rounds.counted(e0.select(col("esrc").as("node"))
+      .unionByName(e0.select(col("edst").as("node"))).distinct())
     var residual = allNodes
-    var residualCount = n0.getLong(0)
+    var residualCount = n0
     var eR = e0
     var comps: Option[DataFrame] = None
     var round = 0
@@ -1865,9 +1850,8 @@ object WebGraph {
               "left_anti"))
           .distinct()
           .localCheckpoint(false)
-        val (resNext, n) = Rounds.checkpoint(
-          residual.join(zeroDeg, Seq("node"), "left_anti"), rows)
-        val after = n.getLong(0)
+        val (resNext, after) = Rounds.counted(
+          residual.join(zeroDeg, Seq("node"), "left_anti"))
         if (after == residualCount) trimming = false
         else {
           waves += zeroDeg
@@ -1937,10 +1921,10 @@ object WebGraph {
         .localCheckpoint(false)
       comps = Some(comps.fold(settled)(_ unionByName settled)
         .localCheckpoint(false))
-      val (resNext, n) = Rounds.checkpoint(residual.join(
-        settled.select(col("node")), Seq("node"), "left_anti"), rows)
+      val (resNext, n) = Rounds.counted(residual.join(
+        settled.select(col("node")), Seq("node"), "left_anti"))
       residual = resNext
-      residualCount = n.getLong(0)
+      residualCount = n
       done = residualCount == 0L
       // settled has materialized inside the residual job, so nothing
       // lazy reads this round's accelerated plane or pivots any more
@@ -2350,21 +2334,19 @@ object WebGraph {
   private def reach(e: DataFrame, seeds: DataFrame, maxDepth: Int,
                     what: String): DataFrame = {
     val keys = seeds.columns.toSeq
-    def rows = count(lit(1)).cast("bigint").as("__n")
-    val (seeded, n) = Rounds.checkpoint(seeds, rows)
-    var visited = seeded
-    var frontier = seeded
+    var (visited, n) = Rounds.counted(seeds)
+    var frontier = visited
     var d = 0
-    var done = n.getLong(0) == 0L
+    var done = n == 0L
     while (!done) {
       d += 1
-      val (next, m) = Rounds.checkpoint(
+      val (next, m) = Rounds.counted(
         frontier.join(e, col("node") === col("esrc"))
           .select(keys.map(k =>
             if (k == "node") col("edst").as("node") else col(k)): _*)
           .distinct()
-          .join(visited, keys, "left_anti"), rows)
-      if (m.getLong(0) == 0L) done = true
+          .join(visited, keys, "left_anti"))
+      if (m == 0L) done = true
       else {
         require(d <= maxDepth,
           s"reach: frontier still expanding at depth $maxDepth — " +

@@ -4,11 +4,12 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Rounds, WebGraph}
+import graft.ops.{Dedup, Preference, Rounds, WebGraph}
 
 /** [[graft.ops.Rounds]]: `release` must free a `localCheckpoint`ed frame,
   * which `Dataset.unpersist` alone leaves cached, and the iterative
-  * operators must release their per-round planes through it.
+  * operators must release their per-round planes through it and read
+  * their stop signals off their round checkpoints.
   */
 class RoundsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -108,6 +109,22 @@ class RoundsSpec extends AnyFunSuite {
             "s", "d", k = 3)
           .collect().map(r => (r.getString(0), r.getString(1))).toSet
         assert(got == Set(("a", "b"), ("b", "c"), ("a", "c")))
+      }, 2),
+      // a→b (10), a→b (3), b→c (10), a→c (100): three relaxation rounds
+      ("weightedShortestPaths releases each round but the last", () => {
+        WebGraph.weightedShortestPaths(relaxation, "s", "d", "w", "a")
+          .collect()
+      }, 1),
+      // a 64-node chain takes several large-star / small-star rounds
+      ("Dedup.connectedComponents releases each round but the last", () => {
+        Dedup.connectedComponents(
+          (0L until 63L).map(i => (i, i + 1)).toDF("a", "b"), "a", "b")
+          .collect()
+      }, 1),
+      ("Preference.bradleyTerry releases each round and its edge plane", () => {
+        Preference.bradleyTerry(Seq(("a", "b"), ("a", "b"), ("b", "c"),
+          ("b", "c"), ("a", "c"), ("c", "a")).toDF("w", "l"), "w", "l",
+          iterations = 5).collect()
       }, 2))
   }
 
@@ -116,5 +133,104 @@ class RoundsSpec extends AnyFunSuite {
       val r = GroupRun(spark, s"rounds-spec-${name.takeWhile(_ != ' ')}")(run())
       assert(r.left <= maxLeft, s"${r.left} of ${r.touched} RDDs left persisted")
     }
+  }
+
+  private def relaxation = {
+    import spark.implicits._
+    Seq(("a", "b", 10L), ("a", "b", 3L), ("b", "c", 10L), ("a", "c", 100L),
+      ("x", "y", 1L)).toDF("s", "d", "w")
+  }
+
+  /** (operator, a run of known round count, the jobs the run starts): a
+    * loop that reads its stop signal off its round checkpoint starts no
+    * probe job of its own. A count covers the run's result collect and
+    * the shuffle-stage jobs adaptive execution submits.
+    */
+  private def jobCases: Seq[(String, () => Unit, Int)] = {
+    import spark.implicits._
+    Seq(
+      // the tail d-e-f peels in two rounds, then the 2-core is stable
+      ("kCore", () => {
+        val got = WebGraph.kCore(Seq(("a", "b"), ("a", "c"), ("a", "d"),
+          ("b", "c"), ("b", "d"), ("c", "d"), ("d", "e"), ("e", "f"))
+          .toDF("s", "d"), "s", "d", k = 2).collect().map(_.getString(0))
+        assert(got.toSet == Set("a", "b", "c", "d"))
+      }, 23),
+      ("kTruss", () => {
+        val got = WebGraph.kTruss(Seq(("a", "b"), ("b", "c"), ("c", "a"),
+          ("c", "d")).toDF("s", "d"), "s", "d", k = 3).collect()
+        assert(got.length == 3)
+      }, 11),
+      // a 4-hop path: four growing hops, then an empty frontier
+      ("shortestHops", () => {
+        val got = WebGraph.shortestHops(Seq(("a", "b"), ("b", "c"),
+          ("c", "d"), ("d", "e")).toDF("s", "d"), "s", "d", "a").collect()
+        assert(got.length == 5)
+      }, 28),
+      ("weightedShortestPaths", () => {
+        val got = WebGraph.weightedShortestPaths(relaxation, "s", "d", "w",
+          "a").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(got == Map("a" -> 0L, "b" -> 3L, "c" -> 13L))
+      }, 16),
+      // the diamond a→{b,c}→d: levels 0..2 from a, then an empty hop
+      ("betweennessCentrality", () => {
+        val got = WebGraph.betweennessCentrality(Seq(("a", "b"), ("a", "c"),
+          ("b", "d"), ("c", "d")).toDF("s", "d"), "s", "d", nSources = 4)
+          .collect()
+        assert(got.length == 4)
+      }, 35),
+      ("Dedup.connectedComponents", () => {
+        val got = Dedup.connectedComponents(
+          Seq((1L, 2L), (2L, 3L)).toDF("a", "b"), "a", "b").collect()
+        assert(got.map(_.getLong(1)).toSet == Set(1L))
+      }, 20),
+      // A ⊂ B ⊂ C at 0.85, A ⊄ C: two peel rounds keep A and C
+      ("Dedup.dropContainedFixpoint", () => {
+        val a = (1 to 12).map(i => s"a$i").mkString(" ")
+        val b = a + " " + (1 to 90).map(i => s"b$i").mkString(" ")
+        val c = (1 to 90).map(i => s"b$i").mkString(" ") + " " +
+          (1 to 312).map(i => s"c$i").mkString(" ")
+        val got = Dedup.dropContainedFixpoint(
+            Seq((1L, a), (2L, b), (3L, c)).toDF("doc_id", "text"),
+            "doc_id", "text", minContainment = 0.85)
+          .collect().map(_.getLong(0))
+        assert(got.toSet == Set(1L, 3L))
+      }, 18))
+  }
+
+  jobCases.foreach { case (name, run, jobs) =>
+    test(s"$name reads its stop signal off its round checkpoints") {
+      val r = GroupRun(spark, s"rounds-spec-jobs-$name")(run())
+      assert(r.jobs == jobs, s"${r.jobs} jobs, expected $jobs")
+    }
+  }
+
+  test("the round loops take an empty edge frame") {
+    import spark.implicits._
+    val empty = Seq.empty[(String, String)].toDF("s", "d")
+    def noRows(df: org.apache.spark.sql.DataFrame, cols: String*): Unit = {
+      assert(df.columns.toSeq == cols)
+      assert(df.collect().isEmpty)
+    }
+    noRows(WebGraph.kCore(empty, "s", "d", k = 2), "node", "core_degree")
+    noRows(WebGraph.kTruss(empty, "s", "d", k = 3),
+      "node_a", "node_b", "support")
+    noRows(WebGraph.betweennessCentrality(empty, "s", "d", nSources = 4),
+      "node", "bc_scaled", "betweenness")
+    noRows(Dedup.connectedComponents(Seq.empty[(Long, Long)].toDF("a", "b"),
+      "a", "b"), "id", "component", "cluster_size")
+    noRows(Dedup.dropContainedFixpoint(
+      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text"),
+      "doc_id", "text")
+    noRows(WebGraph.hyperballSizes(empty, "s", "d"), "node", "t", "ball_est")
+    def sourceOnly(df: org.apache.spark.sql.DataFrame, cols: String*): Unit = {
+      assert(df.columns.toSeq == cols)
+      assert(df.collect().map(r => r.getString(0) -> r.getLong(1)).toSeq ==
+        Seq("a" -> 0L))
+    }
+    sourceOnly(WebGraph.shortestHops(empty, "s", "d", "a"), "node", "hop")
+    sourceOnly(WebGraph.weightedShortestPaths(
+      Seq.empty[(String, String, Long)].toDF("s", "d", "w"), "s", "d", "w",
+      "a"), "node", "dist")
   }
 }

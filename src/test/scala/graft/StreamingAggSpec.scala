@@ -18,10 +18,15 @@ class StreamingAggSpec extends AnyFunSuite {
   // events parquet raw `ts` unit varies across fixture generations (INT64
   // NANOS read as bigint vs native TIMESTAMP micros) — take the stream-source
   // schema from a batch read so the spec tracks Tables.events' detection.
+  // The NTZ flag is scoped to this read, as in Tables.events: the
+  // SparkSession is shared by every suite in the test JVM.
   private lazy val rawTsType: DataType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.read.parquet(s"$sf/events.parquet").schema("ts").dataType
+    val ntzKey = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    val prevNtz = spark.conf.get(ntzKey)
+    spark.conf.set(ntzKey, "false")
+    try spark.read.parquet(s"$sf/events.parquet").schema("ts").dataType
+    finally spark.conf.set(ntzKey, prevNtz)
   }
   private lazy val rawSchema = StructType(Seq(
     StructField("event_id", LongType), StructField("ts", rawTsType),
